@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * to what OUR door decides: how many documents/vectors each topic's
   * ingest stream admitted vs classified as duplicates. Fed by
   * [[TextOps.startNeardupIngest]] / [[VectorOps.startAnnIngest]] per
-  * epoch from a bounded (≤ 3-row) status rollup of the already-
+  * epoch from a one-job status [[rollup]] of the already-
   * checkpointed classification frame; served through
   * [[MetricsHttpServer]]'s `/metrics` exposition.
   *
@@ -38,17 +38,34 @@ object IngestMetrics {
     ()
   }
 
-  /** One epoch's outcome rollup: a ≤ 3-row groupBy over the epoch's
-    * classification frame (callers pass the LOCALLY CHECKPOINTED
-    * frame, so this reads cached blocks — the probe pipeline is not
-    * re-run). Every epoch counts toward `epochs`, including empty
-    * drains (an evicted offset is an epoch that classified nothing —
-    * visible as epochs advancing while doc counts stand still). */
-  private[graft] def recordEpoch(topic: String, classified: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{count, lit}
+  /** Row counts per value of `keyed`'s single string column (null
+    * keys skipped), in ONE Spark job: each partition counts its rows
+    * and the driver merges the ≤ a-few-entry maps. The doors' epoch
+    * rollup over their locally checkpointed verdict frames — a
+    * `groupBy` would plan an exchange job plus a result job, and each
+    * door needs the same counts for its metrics, its delta write and
+    * its callback guard. */
+  private[graft] def rollup(keyed: DataFrame): Map[String, Long] =
+    keyed.rdd.mapPartitions { rows =>
+      val m = scala.collection.mutable.HashMap.empty[String, Long]
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) m(r.getString(0)) = m.getOrElse(r.getString(0), 0L) + 1L
+      }
+      Iterator.single(m.toMap)
+    }.collect().foldLeft(Map.empty[String, Long]) { (acc, part) =>
+      part.foldLeft(acc) { case (a, (k, n)) => a.updated(k, a.getOrElse(k, 0L) + n) }
+    }
+
+  /** One epoch's outcome: `statusCounts` is the epoch's verdict rows
+    * per status, from the door's [[rollup]] of its checkpointed
+    * classification (no Spark work here). Every epoch counts toward
+    * `epochs`, including empty drains (an evicted offset is an epoch
+    * that classified nothing — visible as epochs advancing while doc
+    * counts stand still). */
+  private[graft] def recordEpoch(topic: String,
+                                 statusCounts: Map[String, Long]): Unit = {
     epochs.computeIfAbsent(topic, _ => new AtomicLong()).incrementAndGet()
-    classified.groupBy("status").agg(count(lit(1)).as("n")).collect()
-      .foreach(r => add(topic, r.getString(0), r.getLong(1)))
+    statusCounts.foreach { case (status, n) => add(topic, status, n) }
   }
 
   // ---- LSM maintenance observability (round-14): a production door

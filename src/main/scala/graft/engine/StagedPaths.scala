@@ -87,6 +87,10 @@ private[graft] object StagedPaths {
   * reusing the namespace, loud and retryable, never wrong results. */
 private[graft] object DeltaIndex {
   import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.types.StructType
+  import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+  import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+  import org.apache.spark.sql.catalyst.plans.LeftSemi
   import org.apache.hadoop.fs.{FileSystem, Path}
 
   /** Tombstone file name: a folded delta keeps its parquet files (so
@@ -110,13 +114,20 @@ private[graft] object DeltaIndex {
   private def lockFor(indexPath: String): Object =
     locks.computeIfAbsent(canonicalKey(indexPath), _ => new Object)
 
-  /** Partition-column layout of an index, inferred ONCE per (JVM,
-    * index) from Spark's own partition discovery over the base —
-    * the layout is fixed at staging time and preserved by every
-    * compaction, so the cache never goes stale (staging afresh calls
-    * [[resetForStaging]], which drops it). */
-  private val partColsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  /** An index's row schema (partition columns included) and its
+    * partition columns. */
+  private final case class Layout(schema: StructType, partCols: Seq[String])
+
+  /** Layout of an index, inferred ONCE per (JVM, index) from Spark's
+    * own schema and partition discovery over the base — the layout is
+    * fixed at staging time, every delta is written from the same
+    * banded/quantized row shape, and every compaction preserves it, so
+    * the cache never goes stale (staging afresh calls
+    * [[resetForStaging]], which drops it). Reads then pass the schema
+    * explicitly: an inferring `spark.read.parquet` runs one
+    * schema-discovery job per scanned dir, per epoch. */
+  private val layouts =
+    new java.util.concurrent.ConcurrentHashMap[String, Layout]()
 
   def dir(indexPath: String, epochId: Long): String =
     s"${indexPath}_delta/e$epochId"
@@ -203,9 +214,40 @@ private[graft] object DeltaIndex {
       val base = currentBase(s, indexPath)
       liveDeltaPaths(s, indexPath)
         .filter(_.getName != s"e$excludeEpoch")
-        .foldLeft(s.read.parquet(base))((acc, p) =>
-          acc.unionByName(s.read.parquet(p.toString)))
+        .foldLeft(scan(s, indexPath, base))((acc, p) =>
+          acc.unionByName(scan(s, indexPath, p.toString)))
     }
+
+  /** One dir of the index (base or delta), read with the index's
+    * resolved schema — no schema-discovery job. */
+  private def scan(s: SparkSession, indexPath: String, dir: String): DataFrame =
+    s.read.schema(layoutOf(s, indexPath).schema).parquet(dir)
+
+  /** The doors' per-epoch plan contract, checked STRUCTURALLY on the
+    * un-executed physical plan (static properties — no data touched):
+    * the index's current base is scanned, matched on the scan's root
+    * paths rather than the rendered plan (which abbreviates locations
+    * past `spark.sql.maxMetadataStringLength`), and the index is
+    * probed through a broadcast LEFT SEMI join (never shuffled). A
+    * regression here would silently turn every epoch
+    * corpus-proportional at 100 TB. */
+  private[graft] def requireProbeContract(s: SparkSession, indexPath: String,
+                                          what: String, plan: SparkPlan): Unit = {
+    val base = {
+      val p = new Path(currentBase(s, indexPath))
+      fsOf(s, p).makeQualified(p)
+    }
+    require(plan.find {
+        case f: FileSourceScanExec => f.relation.location.rootPaths.contains(base)
+        case _ => false
+      }.isDefined,
+      s"$what must read the staged index $base:\n" + plan.toString.take(2000))
+    require(plan.find {
+        case j: BroadcastHashJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }.isDefined,
+      s"$what must probe via broadcast semi-join:\n" + plan.toString.take(2000))
+  }
 
   /** The COMPLETE index — base plus every live delta. The read a
     * batch-side caller (outside any epoch) must use: admissions a
@@ -220,11 +262,12 @@ private[graft] object DeltaIndex {
   def readAll(s: SparkSession, indexPath: String): DataFrame =
     read(s, indexPath, excludeEpoch = -1L)
 
-  /** Overwrite this epoch's delta with `rows` (already checkpointed
-    * by the caller); an empty admission clears any stale delta a
-    * previous attempt of the same epoch left — never an empty parquet
-    * part accumulating on the listing, and never a GHOST admission
-    * when the replayed epoch's batch was evicted in the meantime.
+  /** Overwrite this epoch's delta with `rows`, or — `None`, when the
+    * caller's epoch rollup counted no admitted rows — clear any stale
+    * delta a previous attempt of the same epoch left: never an empty
+    * parquet part accumulating on the listing, and never a GHOST
+    * admission when the replayed epoch's batch was evicted in the
+    * meantime.
     *
     * The write MIRRORS the base's partition layout (a
     * bucket-partitioned index gets bucket-partitioned deltas), so a
@@ -235,30 +278,32 @@ private[graft] object DeltaIndex {
     * deletes the tombstone with the dir — the new delta is live
     * again, correctly. */
   def write(s: SparkSession, indexPath: String, epochId: Long,
-            rows: DataFrame): Unit = {
+            rows: Option[DataFrame]): Unit = {
     val delta = new Path(dir(indexPath, epochId))
-    if (!rows.isEmpty) {
-      val pc = basePartitionCols(s, indexPath)
-      val missing = pc.filterNot(rows.columns.contains)
-      require(missing.isEmpty,
-        s"delta for '$indexPath' must carry the base's partition " +
-          s"column(s) ${missing.mkString(", ")} — a flat delta under a " +
-          "partitioned base breaks both the union schema and the " +
-          "partition-pruned probe")
-      // clustered by the partition key first — one file per bucket dir
-      // per delta, not one per (task × bucket)
-      val clustered =
-        if (pc.isEmpty) rows
-        else rows.repartition(pc.map(org.apache.spark.sql.functions.col): _*)
-      // static overwrite PINNED: under a session-level dynamic
-      // partitionOverwriteMode a replayed epoch's overwrite would
-      // replace only the partitions present in the new image, leaving
-      // ghost admissions (and the tombstone) from the first attempt
-      val w = clustered.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-      (if (pc.nonEmpty) w.partitionBy(pc: _*) else w).parquet(delta.toString)
+    rows match {
+      case Some(rows) =>
+        val pc = basePartitionCols(s, indexPath)
+        val missing = pc.filterNot(rows.columns.contains)
+        require(missing.isEmpty,
+          s"delta for '$indexPath' must carry the base's partition " +
+            s"column(s) ${missing.mkString(", ")} — a flat delta under a " +
+            "partitioned base breaks both the union schema and the " +
+            "partition-pruned probe")
+        // clustered by the partition key first — one file per bucket dir
+        // per delta, not one per (task × bucket)
+        val clustered =
+          if (pc.isEmpty) rows
+          else rows.repartition(pc.map(org.apache.spark.sql.functions.col): _*)
+        // static overwrite PINNED: under a session-level dynamic
+        // partitionOverwriteMode a replayed epoch's overwrite would
+        // replace only the partitions present in the new image, leaving
+        // ghost admissions (and the tombstone) from the first attempt
+        val w = clustered.write.mode("overwrite")
+          .option("partitionOverwriteMode", "static")
+        (if (pc.nonEmpty) w.partitionBy(pc: _*) else w).parquet(delta.toString)
+      case None =>
+        if (fsOf(s, delta).exists(delta)) { fsOf(s, delta).delete(delta, true); () }
     }
-    else if (fsOf(s, delta).exists(delta)) { fsOf(s, delta).delete(delta, true); () }
     // gauge refresh under the per-index lock: an unlocked listing here
     // could race a concurrent batch-side recovery's own refresh and
     // persist a stale count until the next epoch
@@ -268,6 +313,19 @@ private[graft] object DeltaIndex {
     }
   }
 
+  /** Resolve the index's layout ahead of its first read — a door's
+    * start, so no epoch pays the one schema-discovery job. */
+  private[graft] def resolveLayout(s: SparkSession, indexPath: String): Unit = {
+    layoutOf(s, indexPath); ()
+  }
+
+  /** The index's [[Layout]], resolved from the base on first use. */
+  private def layoutOf(s: SparkSession, indexPath: String): Layout =
+    layouts.computeIfAbsent(canonicalKey(indexPath), _ => {
+      val df = s.read.parquet(currentBase(s, indexPath))
+      Layout(df.schema, inferPartCols(df))
+    })
+
   /** The base's partition columns via Spark's OWN partition discovery
     * (handles multi-column layouts; a stray name=value file a dir
     * listing would misread is judged exactly as the reader judges
@@ -275,8 +333,7 @@ private[graft] object DeltaIndex {
     * staging. */
   private[graft] def basePartitionCols(s: SparkSession,
                                        indexPath: String): Seq[String] =
-    partColsCache.computeIfAbsent(canonicalKey(indexPath),
-      _ => inferPartCols(s.read.parquet(currentBase(s, indexPath))))
+    layoutOf(s, indexPath).partCols
 
   private def inferPartCols(df: DataFrame): Seq[String] =
     df.queryExecution.analyzed.collectFirst {
@@ -343,10 +400,9 @@ private[graft] object DeltaIndex {
       // to flat parquet would silently lose its partition dirs and
       // every later partition-pruned probe would degrade to a
       // full-index scan.
-      val baseDf = s.read.parquet(currentBase(s, indexPath))
-      val partCols = inferPartCols(baseDf)
-      val merged = folded.foldLeft(baseDf)((acc, p) =>
-        acc.unionByName(s.read.parquet(p.toString), allowMissingColumns = false))
+      val partCols = basePartitionCols(s, indexPath)
+      val merged = folded.foldLeft(scan(s, indexPath, currentBase(s, indexPath)))(
+        (acc, p) => acc.unionByName(scan(s, indexPath, p.toString)))
       // cluster by the partition key so each generation keeps one file
       // per bucket dir — file count stays flat across folds instead of
       // accumulating every source's fragments
@@ -481,7 +537,7 @@ private[graft] object DeltaIndex {
     * scratch (stageAnnIndex / stageNeardupIndex `mode("overwrite")`):
     * a stale pointer would otherwise keep serving the pre-restage
     * `_v<N>` dir over the freshly staged data, and the cached
-    * partition layout may change with the new staging. Existing
+    * schema and partition layout may change with the new staging. Existing
     * `_delta` dirs are left alone — restaging under live deltas keeps
     * its previous (unusual but unchanged) semantics. */
   private[graft] def resetForStaging(s: SparkSession, indexPath: String): Unit =
@@ -491,7 +547,7 @@ private[graft] object DeltaIndex {
         versionPtr(indexPath), new Path(indexPath + "_version.staging"))
         .foreach(p => if (fs.exists(p)) fs.delete(p, true))
       versionDirs(fs, indexPath).foreach { case (p, _) => fs.delete(p, true) }
-      partColsCache.remove(canonicalKey(indexPath))
+      layouts.remove(canonicalKey(indexPath))
       ()
     }
 }

@@ -40,9 +40,13 @@ object Tables {
     * queries re-read every run (ensureBaskets / staged bigrams / …):
     * those paths are written once per JVM (computeIfAbsent memos)
     * before the first read, so their schema is as immutable as the
-    * fixtures'. Partitioned/versioned layouts (the streaming doors,
-    * DeltaIndex) keep plain `spark.read.parquet` — their reads carry
-    * plan contracts and discovery semantics this memo must not touch. */
+    * fixtures'. The doors' versioned indexes do NOT come through here:
+    * their base and delta dir names change every compaction and epoch,
+    * so `DeltaIndex` keeps one schema PER INDEX instead — resolved from
+    * the base on first use and dropped by `resetForStaging`. Reusing it
+    * is safe because the layout is fixed at staging: every delta is
+    * written from the same banded/quantized row shape (partition
+    * columns included), and compaction rewrites that shape unchanged. */
   def parquetMemo(spark: SparkSession, path: String): DataFrame = {
     val sch = schemaCache.computeIfAbsent(path,
       _ => spark.read.parquet(path).schema)

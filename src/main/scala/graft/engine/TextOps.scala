@@ -1015,17 +1015,33 @@ object TextOps {
     val toks = df
       .select(col("doc_id"), tokens(col("text")).as("arr"))
       .filter(size(col("arr")) >= 3)
-    val sig8 = toks.select(col("doc_id"),
-      call_function("graft_md5_minhash",
-        array_distinct(call_function("graft_word_ngrams", col("arr"), lit(3))))
-        .as("sig"))
-    sig8.select(col("doc_id"), posexplode(array(
-        (0 until 4).map(b => concat_ws(",",
-          element_at(col("sig"), 2 * b + 1).cast("string"),
-          element_at(col("sig"), 2 * b + 2).cast("string"))): _*)))
+    val sig8 = toks.select(col("doc_id"), md5Sig8(col("arr")).as("sig"))
+    sig8.select(col("doc_id"), posexplode(array(bandSigs(col("sig")): _*)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "sig")
   }
+
+  /** [[md5Bands]] before its explode, one row per input doc: `bands`
+    * holds the doc's 4 band signatures (band = array position), null
+    * for a doc with fewer than 3 tokens — no 3-gram, so no bands. */
+  private def md5BandArrays(df: DataFrame): DataFrame = {
+    val toks = df.select(col("doc_id"), tokens(col("text")).as("arr"))
+    val sig8 = toks.select(col("doc_id"),
+      when(size(col("arr")) >= 3, md5Sig8(col("arr"))).as("sig"))
+    sig8.select(col("doc_id"),
+      when(col("sig").isNotNull, array(bandSigs(col("sig")): _*)).as("bands"))
+  }
+
+  /** The 8-slot md5 minhash of a token array's distinct 3-grams. */
+  private def md5Sig8(arr: Column): Column =
+    call_function("graft_md5_minhash",
+      array_distinct(call_function("graft_word_ngrams", arr, lit(3))))
+
+  /** The 4 band signatures ("lo,hi" slot pairs) of an md5 minhash. */
+  private def bandSigs(sig: Column): Seq[Column] =
+    (0 until 4).map(b => concat_ws(",",
+      element_at(sig, 2 * b + 1).cast("string"),
+      element_at(sig, 2 * b + 2).cast("string")))
 
   /** The un-staged candidate-pair pipeline (see [[md5MinhashPairs]]).
     * The first shuffle in the whole plan is the band self-join. */
@@ -2860,10 +2876,10 @@ object TextOps {
     * its band set arrived earlier IN THIS batch), or `unique`. The
     * probe shape is [[qStreamNeardupLsh]]'s, factored for reuse from a
     * real streaming epoch: the batch is banded once (localCheckpoint),
-    * its distinct (band, sig) keys BROADCAST into a LEFT SEMI that
-    * prunes the index map-side — the index itself never shuffles and is
-    * never re-banded, so an epoch's cost scales with the batch, not
-    * the corpus. */
+    * its (band, sig) keys BROADCAST into a LEFT SEMI that prunes the
+    * index map-side — the index itself never shuffles and is never
+    * re-banded, so an epoch's cost scales with the batch, not the
+    * corpus. */
   def classifyNeardupBatch(s: SparkSession, indexPath: String,
                            batch: DataFrame,
                            bandBuckets: Int = 0): DataFrame = {
@@ -2873,23 +2889,40 @@ object TextOps {
     // a batch-side classify that ignored stream admissions would
     // re-admit their copies, the duplicate-admission the
     // SemDeDup-at-the-door contract forbids
-    classifyNeardupCore(DeltaIndex.readAll(s, indexPath), batch,
-      bandBuckets)._1
+    verdictsOf(neardupVerdicts(DeltaIndex.readAll(s, indexPath), batch,
+      bandBuckets))
   }
 
-  /** Classification plus the CHECKPOINTED banded probe frame, for
-    * callers (the streaming epoch) that also need the admitted docs'
-    * bands — deriving them from `probe` avoids re-banding what this
-    * pass already banded. */
-  private def classifyNeardupCore(index: DataFrame, batch: DataFrame,
-                                  bandBuckets: Int = 0)
-      : (DataFrame, DataFrame) = {
-    val probe0 = md5Bands(batch)
-    val probe = (if (bandBuckets > 0)
-        probe0.withColumn("bkt", bandBucketOf(bandBuckets))
-      else probe0)
-      .localCheckpoint(true) // one banding pass feeds both join levels
-    val probeKeys = probe.select("band", "sig").distinct()
+  /** The (doc_id, status) classification inside a verdict frame. */
+  private def verdictsOf(verdicts: DataFrame): DataFrame =
+    verdicts.filter(col("is_doc")).select("doc_id", "status")
+
+  /** The VERDICT frame of one batch: an `is_doc` row per input row
+    * with its status, plus a row per (doc, band, sig) of every banded
+    * input doc carrying the same status — so an epoch takes the
+    * admitted docs' bands straight from the verdict pass, never
+    * re-banding or re-joining the batch.
+    *
+    * The batch is pinned and banded in ONE pass (localCheckpoint); two
+    * exchanges decide every verdict:
+    *   1. per (band, sig), ONE aggregate over the probe rows ∪ the
+    *      index rows the broadcast LEFT SEMI kept yields the index-hit
+    *      flag, the in-batch first owner (min doc_id) and the batch
+    *      docs holding the key — partial aggregation folds the index
+    *      side to ≤ one row per probe key per partition before the
+    *      exchange, so it is bounded by the batch's band keys;
+    *   2. a doc_id window ORs each doc's band flags onto all its rows.
+    * The probe keys broadcast as-is: a LEFT SEMI ignores duplicate
+    * build keys, so a distinct() would only add an exchange job; the
+    * build stays ≤ 4 × batch rows. */
+  private def neardupVerdicts(index: DataFrame, batch: DataFrame,
+                              bandBuckets: Int): DataFrame = {
+    val pinned = md5BandArrays(batch).localCheckpoint(true)
+    val probe0 = pinned.select(col("doc_id"),
+      posexplode(col("bands")).as(Seq("band", "sig")))
+    val probe =
+      if (bandBuckets > 0) probe0.withColumn("bkt", bandBucketOf(bandBuckets))
+      else probe0
     // For a band-bucket-partitioned index (stageNeardupIndex
     // bandBuckets > 0 — the 100 TB layout), push the probe's bucket
     // set as a STATIC partition filter, mirroring annProbeScore: the
@@ -2910,34 +2943,33 @@ object TextOps {
           index.filter(col("bkt").isin(keys: _*))
         else index
       }
-    // the index pruned to the probe's bands: broadcast semi-join —
-    // index rows filter map-side against the batch's band keys
-    val hits = indexIn.join(broadcast(probeKeys), Seq("band", "sig"),
-        "left_semi")
-      .select("band", "sig").distinct()
-    // per-doc verdict flags in ONE pass over the banded probe (r16):
-    // the index-hit flag arrives on a broadcast left join against the
-    // distinct hit keys (≤ 1 match per row), the in-batch first-owner
-    // comes from a min window on the (band, sig) partition, and one
-    // per-doc aggregate folds both — previously dup_of_existing and
-    // dup_in_batch were separate semi-join/aggregate pipelines, each
-    // with its own doc_id distinct exchange, joined back one by one
-    val wBand = org.apache.spark.sql.expressions.Window
-      .partitionBy("band", "sig")
-    val flags = probe
-      .join(broadcast(hits.withColumn("hit", lit(1L))),
-        Seq("band", "sig"), "left")
-      .withColumn("first_id", min(col("doc_id")).over(wBand))
-      .groupBy("doc_id")
-      .agg(max(col("hit")).as("de"),
-        max(when(col("doc_id") > col("first_id"), lit(1L))).as("db"))
-    val classified = batch.select("doc_id")
-      .join(flags, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("de").isNotNull, lit("dup_of_existing"))
-          .when(col("db").isNotNull, lit("dup_in_batch"))
+    // the index pruned to the batch's band keys: broadcast semi-join —
+    // index rows filter map-side against the probe keys
+    val hits = indexIn.join(broadcast(probe.select("band", "sig")),
+      Seq("band", "sig"), "left_semi")
+    val keys = probe.select(col("band"), col("sig"), col("doc_id"),
+        lit(0).as("hit"))
+      .unionByName(hits.select(col("band"), col("sig"),
+        lit(null).cast(pinned.schema("doc_id").dataType).as("doc_id"), lit(1).as("hit")))
+      .groupBy("band", "sig")
+      .agg(max(col("hit")).as("hit"), min(col("doc_id")).as("first_id"),
+        collect_set(col("doc_id")).as("ids"))
+    val bandRows = keys
+      .select(col("band"), col("sig"), col("hit"), col("first_id"),
+        explode(col("ids")).as("doc_id"))
+      .select(col("doc_id"), lit(false).as("is_doc"), col("band"),
+        col("sig"), (col("hit") === 1).as("de"),
+        (col("doc_id") > col("first_id")).as("db"))
+    val docRows = pinned.select(col("doc_id"), lit(true).as("is_doc"),
+      lit(null).cast(probe0.schema("band").dataType).as("band"),
+      lit(null).cast("string").as("sig"), lit(false).as("de"),
+      lit(false).as("db"))
+    val perDoc = Window.partitionBy("doc_id")
+    bandRows.unionByName(docRows)
+      .select(col("doc_id"), col("is_doc"), col("band"), col("sig"),
+        when(max(col("de")).over(perDoc), lit("dup_of_existing"))
+          .when(max(col("db")).over(perDoc), lit("dup_in_batch"))
           .otherwise(lit("unique")).as("status"))
-    (classified, probe)
   }
 
   /** ONE ingest epoch, IDEMPOTENT under Spark's at-least-once
@@ -2945,45 +2977,46 @@ object TextOps {
     * base + every OTHER epoch's delta, then OVERWRITE this epoch's
     * delta with the admitted docs' bands — a replayed epoch recomputes
     * the same verdicts (its previously-admitted docs can never
-    * self-match) and leaves exactly one copy of its bands. The bands
-    * come from the probe frame the classification already banded
-    * (checkpointed — no re-banding). */
+    * self-match) and leaves exactly one copy of its bands. */
   private[graft] def neardupIngestEpoch(s: SparkSession, indexPath: String,
                                         epochId: Long, data: DataFrame,
-                                        bandBuckets: Int = 0): DataFrame = {
+                                        bandBuckets: Int = 0): DataFrame =
+    neardupEpoch(s, indexPath, epochId, data, bandBuckets)._1
+
+  /** Rollup key of the admitted docs' band rows (doc rows key by
+    * status). */
+  private val AdmittedBands = "admitted_bands"
+
+  /** [[neardupIngestEpoch]] plus the epoch's verdict count per status.
+    * The verdict frame is checkpointed, so the rollup, the delta write
+    * and the caller all read ONE computed copy; one rollup job answers
+    * the metrics, the callback guard and whether there are bands to
+    * write. */
+  private def neardupEpoch(s: SparkSession, indexPath: String, epochId: Long,
+                           data: DataFrame, bandBuckets: Int)
+      : (DataFrame, Map[String, Long]) = {
     graft.expressions.VectorExpressions.register(s)
     IndexLayout.validate(s, indexPath, "bandBuckets", bandBuckets.toString)
-    val (classified0, probe) =
-      classifyNeardupCore(DeltaIndex.read(s, indexPath, epochId), data,
-        bandBuckets)
-    // plan contract, asserted STRUCTURALLY on the un-executed frame
-    // every epoch (static plan properties — no data touched): the
-    // staged index is READ (never re-banded) and probed via a
-    // broadcast semi-join (never shuffled). A regression here would
-    // silently turn every epoch corpus-proportional at 100 TB.
-    val plan = classified0.queryExecution.executedPlan.toString
-    lastEpochPlan.set(plan)
-    require(plan.contains(new java.io.File(indexPath).getName),
-      s"epoch $epochId must read the staged index:\n" + plan.take(2000))
-    require(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      s"epoch $epochId must probe via broadcast semi-join:\n" + plan.take(2000))
-    // checkpointed: the delta write below, the stream's metrics rollup,
-    // and the caller's materialization all read ONE computed copy of
-    // the verdicts instead of re-running the probe joins
-    val classified = classified0.localCheckpoint(true)
+    val verdicts0 = neardupVerdicts(DeltaIndex.read(s, indexPath, epochId),
+      data, bandBuckets)
+    // plan contract on the un-executed frame, every epoch
+    val qe = verdicts0.queryExecution
+    lastEpochPlan.set(qe.executedPlan.toString)
+    DeltaIndex.requireProbeContract(s, indexPath, s"epoch $epochId", qe.sparkPlan)
+    val verdicts = verdicts0.localCheckpoint(true)
+    val counts = IngestMetrics.rollup(verdicts.select(
+      when(col("is_doc"), col("status"))
+        .when(col("status") === "unique", lit(AdmittedBands))))
     // admitted bands carry the bucket key when the layout is
     // partitioned — DeltaIndex.write mirrors the base's partitioning,
     // so the delta scans prune exactly like the base scan
-    val bandCols =
-      if (bandBuckets > 0) Seq("doc_id", "band", "sig", "bkt")
-      else Seq("doc_id", "band", "sig")
-    val bands = probe.join(
-        classified.filter(col("status") === "unique").select("doc_id"),
-        "doc_id")
-      .select(bandCols.map(col): _*)
-      .localCheckpoint(true)
-    DeltaIndex.write(s, indexPath, epochId, bands)
-    classified
+    val bandCols = Seq(col("doc_id"), col("band"), col("sig")) ++
+      (if (bandBuckets > 0) Seq(bandBucketOf(bandBuckets).as("bkt")) else Nil)
+    val bands = verdicts.filter(!col("is_doc") && col("status") === "unique")
+      .select(bandCols: _*)
+    DeltaIndex.write(s, indexPath, epochId,
+      Some(bands).filter(_ => counts.contains(AdmittedBands)))
+    (verdictsOf(verdicts), counts - AdmittedBands)
   }
 
   /** The most recent ingest epoch's UN-EXECUTED probe plan, for spec
@@ -3040,6 +3073,7 @@ object TextOps {
     val q = try {
       if (!DeltaIndex.resumesCheckpoint(s, checkpointDir))
         DeltaIndex.compact(s, indexPath)
+      DeltaIndex.resolveLayout(s, indexPath)
       s.readStream.format("graft-store")
         .option("store", storeName).option("topic", topic)
         .option("maxBatchesPerTrigger", maxBatchesPerTrigger.toString)
@@ -3053,13 +3087,14 @@ object TextOps {
           // would haunt the index for docs that were never reported
           val sess = batch.sparkSession
           DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery)
-          val data = batch.select("doc_id", "text").localCheckpoint(true)
-          val classified = neardupIngestEpoch(sess, indexPath, epochId, data,
-            bandBuckets)
+          // the epoch pins the batch in its banding pass: the source is
+          // read once, and every verdict comes from that one copy
+          val (classified, counts) = neardupEpoch(sess, indexPath, epochId,
+            batch.select("doc_id", "text"), bandBuckets)
           // per-topic admitted/dup counters (reference's per-stream
-          // metric family) — a ≤3-row rollup of the checkpointed frame
-          IngestMetrics.recordEpoch(topic, classified)
-          if (!data.isEmpty) onEpoch(epochId, classified)
+          // metric family), from the epoch's own rollup
+          IngestMetrics.recordEpoch(topic, counts)
+          if (counts.values.sum > 0) onEpoch(epochId, classified)
           ()
         }
         .start()

@@ -2150,23 +2150,37 @@ object VectorOps {
                                     probeBits: Int = 1,
                                     bucketPartitioned: Boolean = false,
                                     occupancyWarnMean: Double = 0.0)
-      : DataFrame = {
+      : DataFrame =
+    annEpoch(s, indexPath, epochId, data, nPlanes, dim, thresholdMicro,
+      probeBits, bucketPartitioned, occupancyWarnMean)._1
+
+  /** [[annIngestEpoch]] plus the epoch's verdict count per status, from
+    * ONE rollup job over the checkpointed classification — it answers
+    * the metrics, the callback guard and whether there are admitted
+    * vectors to write (see TextOps.neardupEpoch). */
+  private def annEpoch(s: SparkSession, indexPath: String, epochId: Long,
+                       data: DataFrame, nPlanes: Int, dim: Int,
+                       thresholdMicro: Long, probeBits: Int,
+                       bucketPartitioned: Boolean, occupancyWarnMean: Double)
+      : (DataFrame, Map[String, Long]) = {
     IndexLayout.validate(s, indexPath, "nPlanes", nPlanes.toString)
     IndexLayout.validate(s, indexPath, "dim", dim.toString)
     val (classified0, probes) = classifyAnnCore(
       DeltaIndex.read(s, indexPath, epochId), data, nPlanes, dim,
       thresholdMicro, probeBits, indexKeyPrune = bucketPartitioned)
     // plan contract per epoch, on the un-executed frame (see
-    // TextOps.neardupIngestEpoch): staged index read + broadcast semi
-    val plan = classified0.queryExecution.executedPlan.toString
-    lastEpochPlan.set(plan)
-    require(plan.contains(new java.io.File(indexPath).getName),
-      s"epoch $epochId must read the staged index:\n" + plan.take(2000))
-    require(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      s"epoch $epochId must probe via broadcast semi-join:\n" + plan.take(2000))
-    // one computed copy serves the delta write, the stream's metrics
-    // rollup, and the caller (see neardupIngestEpoch)
+    // DeltaIndex.requireProbeContract): staged index read + broadcast semi
+    val qe = classified0.queryExecution
+    lastEpochPlan.set(qe.executedPlan.toString)
+    DeltaIndex.requireProbeContract(s, indexPath, s"epoch $epochId", qe.sparkPlan)
+    // one computed copy serves the rollup, the delta write and the
+    // caller (see TextOps.neardupEpoch)
     val classified = classified0.localCheckpoint(true)
+    // status rows plus one key per row the delta write will admit (a
+    // null-id `new` row joins no probe row, so it admits nothing)
+    val counts = IngestMetrics.rollup(classified.select(explode(array(
+      col("status"), when(col("status") === "new" && col("probe_id").isNotNull,
+        lit(AdmittedRows))))))
     if (occupancyWarnMean > 0) {
       val row = classified.agg(avg(col("n_cand")), count(lit(1))).head()
       val meanCand = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
@@ -2188,10 +2202,13 @@ object VectorOps {
         "probe_id")
       .select(col("probe_id").as("vec_id"), col("v"), col("nv"),
         col("bucket0").as("bucket"))
-      .localCheckpoint(true)
-    DeltaIndex.write(s, indexPath, epochId, admitted)
-    classified
+    DeltaIndex.write(s, indexPath, epochId,
+      Some(admitted).filter(_ => counts.contains(AdmittedRows)))
+    (classified, counts - AdmittedRows)
   }
+
+  /** Rollup key of the classification rows the delta write admits. */
+  private val AdmittedRows = "admitted_rows"
 
   /** The vector mirror of [[graft.engine.TextOps.startNeardupIngest]]:
     * one StreamingQuery subscribes to a store topic of (vec_id,
@@ -2228,6 +2245,7 @@ object VectorOps {
       // previous run's deltas cannot be overwritten
       if (!DeltaIndex.resumesCheckpoint(s, checkpointDir))
         DeltaIndex.compact(s, indexPath)
+      DeltaIndex.resolveLayout(s, indexPath)
       s.readStream.format("graft-store")
         .option("store", storeName).option("topic", topic)
         .option("maxBatchesPerTrigger", maxBatchesPerTrigger.toString)
@@ -2240,12 +2258,14 @@ object VectorOps {
           val sess = batch.sparkSession
           DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery)
           val data = batch.select("vec_id", "embedding").localCheckpoint(true)
-          val classified = annIngestEpoch(sess, indexPath,
+          val (classified, counts) = annEpoch(sess, indexPath,
             epochId, data, nPlanes, dim, thresholdMicro, probeBits,
             bucketPartitioned, occupancyWarnMean)
-          // per-topic admitted/matched counters (see startNeardupIngest)
-          IngestMetrics.recordEpoch(topic, classified)
-          if (!data.isEmpty) onEpoch(epochId, classified)
+          // per-topic admitted/matched counters (see startNeardupIngest);
+          // the classification has one row per input vector, so its
+          // rollup also says whether the batch drained empty
+          IngestMetrics.recordEpoch(topic, counts)
+          if (counts.values.sum > 0) onEpoch(epochId, classified)
           ()
         }
         .start()
