@@ -74,16 +74,21 @@ object BenchProtocol {
 
   /** One-time table prep at the target sf (partitioned/ORC/bucketed
     * copies some timed keys scan) — written once per dataset, so the
-    * timed queries measure the read, not the sink. */
+    * timed queries measure the read, not the sink. A failed prep is
+    * reported on stderr, naming the table and the cause, and the rest
+    * still runs: the keys that scan the missing copy fail on their
+    * own. */
   def prepTables(spark: SparkSession, sfDir: String): Unit = {
-    try graft.engine.Sinks.ensurePartitionedEvents(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.engine.Sinks.ensureOrcLineitem(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.engine.ScaleOps.ensureBucketedJoinTables(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.engine.ScaleOps.ensureCompactionExec(spark, sfDir)
-    catch { case _: Throwable => () }
+    def prep(table: String)(body: => Any): Unit =
+      try { body; () }
+      catch {
+        case t: Throwable =>
+          Console.err.println(s"[bench] table prep '$table' failed for $sfDir: $t")
+      }
+    prep("partitioned events")(graft.engine.Sinks.ensurePartitionedEvents(spark, sfDir))
+    prep("orc lineitem")(graft.engine.Sinks.ensureOrcLineitem(spark, sfDir))
+    prep("bucketed join tables")(graft.engine.ScaleOps.ensureBucketedJoinTables(spark, sfDir))
+    prep("compaction layouts")(graft.engine.ScaleOps.ensureCompactionExec(spark, sfDir))
   }
 
   /** Time one query run under the shared protocol: the PREVIOUS run's

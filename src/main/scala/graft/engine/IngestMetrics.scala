@@ -10,9 +10,9 @@ import org.apache.spark.sql.DataFrame
   * (`roar_stream_records_dropped` etc., pkg/metrics.go:20-52) applied
   * to what OUR door decides: how many documents/vectors each topic's
   * ingest stream admitted vs classified as duplicates. Fed by
-  * [[TextOps.startNeardupIngest]] / [[VectorOps.startAnnIngest]] per
-  * epoch from a one-job status [[rollup]] of the already-
-  * checkpointed classification frame; served through
+  * [[TextOps.startNeardupIngest]] (from its driver-side verdicts) /
+  * [[VectorOps.startAnnIngest]] (from a one-job status [[rollup]] of
+  * its checkpointed classification frame) per epoch; served through
   * [[MetricsHttpServer]]'s `/metrics` exposition.
   *
   * Statuses are normalized to an operational vocabulary: the text
@@ -40,9 +40,9 @@ object IngestMetrics {
 
   /** Row counts per value of `keyed`'s single string column (null
     * keys skipped), in ONE Spark job: each partition counts its rows
-    * and the driver merges the ≤ a-few-entry maps. The doors' epoch
-    * rollup over their locally checkpointed verdict frames — a
-    * `groupBy` would plan an exchange job plus a result job, and each
+    * and the driver merges the ≤ a-few-entry maps. The ANN door's
+    * epoch rollup over its locally checkpointed verdict frame — a
+    * `groupBy` would plan an exchange job plus a result job, and the
     * door needs the same counts for its metrics, its delta write and
     * its callback guard. */
   private[graft] def rollup(keyed: DataFrame): Map[String, Long] =
@@ -57,11 +57,10 @@ object IngestMetrics {
     }
 
   /** One epoch's outcome: `statusCounts` is the epoch's verdict rows
-    * per status, from the door's [[rollup]] of its checkpointed
-    * classification (no Spark work here). Every epoch counts toward
-    * `epochs`, including empty drains (an evicted offset is an epoch
-    * that classified nothing — visible as epochs advancing while doc
-    * counts stand still). */
+    * per status, as the door counted them (no Spark work here). Every
+    * epoch counts toward `epochs`, including empty drains (an evicted
+    * offset is an epoch that classified nothing — visible as epochs
+    * advancing while doc counts stand still). */
   private[graft] def recordEpoch(topic: String,
                                  statusCounts: Map[String, Long]): Unit = {
     epochs.computeIfAbsent(topic, _ => new AtomicLong()).incrementAndGet()

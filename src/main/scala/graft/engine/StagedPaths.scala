@@ -263,11 +263,10 @@ private[graft] object DeltaIndex {
     read(s, indexPath, excludeEpoch = -1L)
 
   /** Overwrite this epoch's delta with `rows`, or — `None`, when the
-    * caller's epoch rollup counted no admitted rows — clear any stale
-    * delta a previous attempt of the same epoch left: never an empty
-    * parquet part accumulating on the listing, and never a GHOST
-    * admission when the replayed epoch's batch was evicted in the
-    * meantime.
+    * caller's epoch admitted no rows — clear any stale delta a
+    * previous attempt of the same epoch left: never an empty parquet
+    * part accumulating on the listing, and never a GHOST admission
+    * when the replayed epoch's batch was evicted in the meantime.
     *
     * The write MIRRORS the base's partition layout (a
     * bucket-partitioned index gets bucket-partitioned deltas), so a
@@ -276,9 +275,11 @@ private[graft] object DeltaIndex {
     * epoch regardless of the probe's key set. `mode("overwrite")` on a
     * TOMBSTONED dir (epoch-id reuse after a fresh-checkpoint restart)
     * deletes the tombstone with the dir — the new delta is live
-    * again, correctly. */
+    * again, correctly. `clustered`: the rows already sit in ONE task
+    * (a driver-local frame coalesced to one partition), so a
+    * partitioned write needs no clustering shuffle. */
   def write(s: SparkSession, indexPath: String, epochId: Long,
-            rows: Option[DataFrame]): Unit = {
+            rows: Option[DataFrame], clustered: Boolean = false): Unit = {
     val delta = new Path(dir(indexPath, epochId))
     rows match {
       case Some(rows) =>
@@ -291,14 +292,14 @@ private[graft] object DeltaIndex {
             "partition-pruned probe")
         // clustered by the partition key first — one file per bucket dir
         // per delta, not one per (task × bucket)
-        val clustered =
-          if (pc.isEmpty) rows
+        val byKey =
+          if (pc.isEmpty || clustered) rows
           else rows.repartition(pc.map(org.apache.spark.sql.functions.col): _*)
         // static overwrite PINNED: under a session-level dynamic
         // partitionOverwriteMode a replayed epoch's overwrite would
         // replace only the partitions present in the new image, leaving
         // ghost admissions (and the tombstone) from the first attempt
-        val w = clustered.write.mode("overwrite")
+        val w = byKey.write.mode("overwrite")
           .option("partitionOverwriteMode", "static")
         (if (pc.nonEmpty) w.partitionBy(pc: _*) else w).parquet(delta.toString)
       case None =>
@@ -550,6 +551,23 @@ private[graft] object DeltaIndex {
       layouts.remove(canonicalKey(indexPath))
       ()
     }
+}
+
+/** An ingest door's most recent epoch probe plan, for spec
+  * assertions: the epoch keeps its physical plan as planned (the
+  * `sparkPlan` its probe contract is checked on) and it is rendered
+  * only when read, so no epoch pays for the plan string. The executed
+  * plan is not kept: it would hold the epoch's broadcast relation
+  * until the next epoch. */
+private[graft] final class EpochPlan {
+  import org.apache.spark.sql.execution.SparkPlan
+
+  private val plan = new java.util.concurrent.atomic.AtomicReference[SparkPlan]()
+
+  def set(p: SparkPlan): Unit = plan.set(p)
+
+  /** The plan as `SparkPlan.toString` renders it; "" before any epoch. */
+  def get: String = Option(plan.get).fold("")(_.toString)
 }
 
 /** Sidecar file (`<indexPath>_layout`) recording the dials an index

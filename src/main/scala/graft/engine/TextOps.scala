@@ -1,8 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Training-data text pipeline operators (BASELINE north star; the
   * reference has no text processing at all — SURVEY.md §2b).
@@ -2867,19 +2868,21 @@ object TextOps {
 
   /** The band-bucket key: a bounded re-shard of the (band, sig) key
     * space shared by the staged layout and the probe's key push. */
-  private def bandBucketOf(bandBuckets: Int): Column =
-    pmod(hash(col("band"), col("sig")), lit(bandBuckets))
+  private def bandBucketOf(bandBuckets: Int, band: Column = col("band"),
+                           sig: Column = col("sig")): Column =
+    pmod(hash(band, sig), lit(bandBuckets))
 
   /** Classify ONE arriving batch of (doc_id, text) against the staged
     * banded index at `path`: per doc, `dup_of_existing` (some band
     * matches an indexed signature), `dup_in_batch` (first occurrence of
     * its band set arrived earlier IN THIS batch), or `unique`. The
-    * probe shape is [[qStreamNeardupLsh]]'s, factored for reuse from a
-    * real streaming epoch: the batch is banded once (localCheckpoint),
-    * its (band, sig) keys BROADCAST into a LEFT SEMI that prunes the
-    * index map-side — the index itself never shuffles and is never
-    * re-banded, so an epoch's cost scales with the batch, not the
-    * corpus. */
+    * probe shape is [[qStreamNeardupLsh]]'s, fully distributed — the
+    * path for corpus-sized batches, and the reference the streaming
+    * door's driver-side epoch ([[neardupEpoch]]) is checked against:
+    * the batch is banded once (localCheckpoint), its (band, sig) keys
+    * BROADCAST into a LEFT SEMI that prunes the index map-side — the
+    * index itself never shuffles and is never re-banded, so the cost
+    * scales with the batch, not the corpus. */
   def classifyNeardupBatch(s: SparkSession, indexPath: String,
                            batch: DataFrame,
                            bandBuckets: Int = 0): DataFrame = {
@@ -2889,19 +2892,10 @@ object TextOps {
     // a batch-side classify that ignored stream admissions would
     // re-admit their copies, the duplicate-admission the
     // SemDeDup-at-the-door contract forbids
-    verdictsOf(neardupVerdicts(DeltaIndex.readAll(s, indexPath), batch,
-      bandBuckets))
+    neardupVerdicts(DeltaIndex.readAll(s, indexPath), batch, bandBuckets)
   }
 
-  /** The (doc_id, status) classification inside a verdict frame. */
-  private def verdictsOf(verdicts: DataFrame): DataFrame =
-    verdicts.filter(col("is_doc")).select("doc_id", "status")
-
-  /** The VERDICT frame of one batch: an `is_doc` row per input row
-    * with its status, plus a row per (doc, band, sig) of every banded
-    * input doc carrying the same status — so an epoch takes the
-    * admitted docs' bands straight from the verdict pass, never
-    * re-banding or re-joining the batch.
+  /** The (doc_id, status) verdicts of one batch, one row per input row.
     *
     * The batch is pinned and banded in ONE pass (localCheckpoint); two
     * exchanges decide every verdict:
@@ -2911,7 +2905,8 @@ object TextOps {
     *      docs holding the key — partial aggregation folds the index
     *      side to ≤ one row per probe key per partition before the
     *      exchange, so it is bounded by the batch's band keys;
-    *   2. a doc_id window ORs each doc's band flags onto all its rows.
+    *   2. a doc_id window ORs each doc's band flags onto its input
+    *      rows.
     * The probe keys broadcast as-is: a LEFT SEMI ignores duplicate
     * build keys, so a distinct() would only add an exchange job; the
     * build stays ≤ 4 × batch rows. */
@@ -2939,9 +2934,7 @@ object TextOps {
       else {
         val keys = probe.filter(col("bkt").isNotNull).select("bkt")
           .distinct().limit(bandBuckets + 1).collect().map(_.getInt(0)).toSeq
-        if (keys.nonEmpty && keys.size < bandBuckets)
-          index.filter(col("bkt").isin(keys: _*))
-        else index
+        bucketPush(index, keys, bandBuckets)
       }
     // the index pruned to the batch's band keys: broadcast semi-join —
     // index rows filter map-side against the probe keys
@@ -2955,22 +2948,29 @@ object TextOps {
       .agg(max(col("hit")).as("hit"), min(col("doc_id")).as("first_id"),
         collect_set(col("doc_id")).as("ids"))
     val bandRows = keys
-      .select(col("band"), col("sig"), col("hit"), col("first_id"),
-        explode(col("ids")).as("doc_id"))
-      .select(col("doc_id"), lit(false).as("is_doc"), col("band"),
-        col("sig"), (col("hit") === 1).as("de"),
-        (col("doc_id") > col("first_id")).as("db"))
+      .select(col("hit"), col("first_id"), explode(col("ids")).as("doc_id"))
+      .select(col("doc_id"), lit(false).as("is_doc"),
+        (col("hit") === 1).as("de"), (col("doc_id") > col("first_id")).as("db"))
     val docRows = pinned.select(col("doc_id"), lit(true).as("is_doc"),
-      lit(null).cast(probe0.schema("band").dataType).as("band"),
-      lit(null).cast("string").as("sig"), lit(false).as("de"),
-      lit(false).as("db"))
+      lit(false).as("de"), lit(false).as("db"))
     val perDoc = Window.partitionBy("doc_id")
     bandRows.unionByName(docRows)
-      .select(col("doc_id"), col("is_doc"), col("band"), col("sig"),
+      .select(col("doc_id"), col("is_doc"),
         when(max(col("de")).over(perDoc), lit("dup_of_existing"))
           .when(max(col("db")).over(perDoc), lit("dup_in_batch"))
           .otherwise(lit("unique")).as("status"))
+      .filter(col("is_doc"))
+      .select("doc_id", "status")
   }
+
+  /** `index` pre-filtered to a band-bucket-partitioned layout's probe
+    * buckets (a static partition filter), unless the buckets cover the
+    * whole space. */
+  private def bucketPush(index: DataFrame, buckets: Seq[Int],
+                         bandBuckets: Int): DataFrame =
+    if (buckets.nonEmpty && buckets.size < bandBuckets)
+      index.filter(col("bkt").isin(buckets: _*))
+    else index
 
   /** ONE ingest epoch, IDEMPOTENT under Spark's at-least-once
     * foreachBatch replay (see [[DeltaIndex]]): classify `data` against
@@ -2983,47 +2983,126 @@ object TextOps {
                                         bandBuckets: Int = 0): DataFrame =
     neardupEpoch(s, indexPath, epochId, data, bandBuckets)._1
 
-  /** Rollup key of the admitted docs' band rows (doc rows key by
-    * status). */
-  private val AdmittedBands = "admitted_bands"
+  /** The (band, sig) key of an index row. */
+  private type BandKey = (Int, String)
+
+  private val bandKeySchema = StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("sig", StringType, nullable = false)))
 
   /** [[neardupIngestEpoch]] plus the epoch's verdict count per status.
-    * The verdict frame is checkpointed, so the rollup, the delta write
-    * and the caller all read ONE computed copy; one rollup job answers
-    * the metrics, the callback guard and whether there are bands to
-    * write. */
+    * The epoch is bounded by the door's admission control
+    * (`maxBatchesPerTrigger` buffered batches), so it is classified on
+    * the DRIVER and only the probe into the index is distributed —
+    * four Spark jobs:
+    *   1. [[md5BandArrays]] bands the epoch (the native expression of
+    *      the distributed path) and is collected;
+    *   2. [[indexHits]] probes the index with the epoch's (band, sig)
+    *      keys through a broadcast LEFT SEMI — 3. the broadcast build —
+    *      and collects the hit keys; an epoch with no keys reads no
+    *      index;
+    *   4. the admitted docs' bands are written from ONE task (one
+    *      delta file per bucket dir).
+    * Verdicts follow [[neardupVerdicts]]' rule exactly (see
+    * [[localVerdicts]]), one row per input row, null-id and band-less
+    * docs `unique`. The returned frame is driver-local: collecting it
+    * runs no job. */
   private def neardupEpoch(s: SparkSession, indexPath: String, epochId: Long,
                            data: DataFrame, bandBuckets: Int)
       : (DataFrame, Map[String, Long]) = {
+    import scala.jdk.CollectionConverters._
     graft.expressions.VectorExpressions.register(s)
     IndexLayout.validate(s, indexPath, "bandBuckets", bandBuckets.toString)
-    val verdicts0 = neardupVerdicts(DeltaIndex.read(s, indexPath, epochId),
-      data, bandBuckets)
-    // plan contract on the un-executed frame, every epoch
-    val qe = verdicts0.queryExecution
-    lastEpochPlan.set(qe.executedPlan.toString)
-    DeltaIndex.requireProbeContract(s, indexPath, s"epoch $epochId", qe.sparkPlan)
-    val verdicts = verdicts0.localCheckpoint(true)
-    val counts = IngestMetrics.rollup(verdicts.select(
-      when(col("is_doc"), col("status"))
-        .when(col("status") === "unique", lit(AdmittedBands))))
+    val idField = data.schema("doc_id")
+    val banded = md5BandArrays(data)
+    val rows = (if (bandBuckets > 0) banded.withColumn("bkts",
+        transform(col("bands"), (sig, band) => bandBucketOf(bandBuckets, band, sig)))
+      else banded).collect()
+    // doc_ids compare and group in Catalyst form, by Spark's own ordering
+    val toKey = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(idField.dataType)
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils
+      .getInterpretedOrdering(idField.dataType)
+    def bandsOf(r: Row): Seq[BandKey] =
+      if (r.isNullAt(1)) Nil else r.getSeq[String](1).zipWithIndex.map(_.swap)
+    // per non-null doc_id: its first collected value and the keys of
+    // every row carrying it
+    val byId = rows.filter(!_.isNullAt(0)).groupBy(r => toKey(r.get(0)))
+      .map { case (k, rs) => k -> (rs.head.get(0), rs.toSeq.flatMap(bandsOf).distinct) }
+    val bucketOf: Map[BandKey, Int] =
+      if (bandBuckets <= 0) Map.empty
+      else rows.iterator.filter(!_.isNullAt(1)).flatMap(r =>
+        bandsOf(r).zip(r.getSeq[Int](2))).toMap
+    val keys = byId.values.flatMap(_._2).toSeq.distinct
+    val hits =
+      if (keys.isEmpty) Set.empty[BandKey]
+      else indexHits(s, indexPath, epochId, keys,
+        keys.flatMap(bucketOf.get).distinct, bandBuckets)
+    val status = localVerdicts(byId.map { case (k, (_, b)) => k -> b }, hits, ord)
+    val verdicts = rows.toSeq.map(r => Row(r.get(0),
+      if (r.isNullAt(0)) "unique" else status(toKey(r.get(0)))))
+    val admitted = byId.toSeq.collect { case (k, (id, bands)) if status(k) == "unique" =>
+      bands.map { case b @ (band, sig) =>
+        Row.fromSeq(Seq(id, band, sig) ++ bucketOf.get(b).toSeq) }
+    }.flatten
     // admitted bands carry the bucket key when the layout is
     // partitioned — DeltaIndex.write mirrors the base's partitioning,
     // so the delta scans prune exactly like the base scan
-    val bandCols = Seq(col("doc_id"), col("band"), col("sig")) ++
-      (if (bandBuckets > 0) Seq(bandBucketOf(bandBuckets).as("bkt")) else Nil)
-    val bands = verdicts.filter(!col("is_doc") && col("status") === "unique")
-      .select(bandCols: _*)
+    val bandSchema = StructType(Seq(idField) ++ bandKeySchema.fields ++
+      (if (bandBuckets > 0) Seq(StructField("bkt", IntegerType)) else Nil))
     DeltaIndex.write(s, indexPath, epochId,
-      Some(bands).filter(_ => counts.contains(AdmittedBands)))
-    (verdictsOf(verdicts), counts - AdmittedBands)
+      Some(admitted).filter(_.nonEmpty)
+        .map(a => s.createDataFrame(a.asJava, bandSchema).coalesce(1)),
+      clustered = true)
+    val verdictSchema = StructType(Seq(idField,
+      StructField("status", StringType, nullable = false)))
+    (s.createDataFrame(verdicts.asJava, verdictSchema),
+      verdicts.groupBy(_.getString(1)).map { case (st, v) => st -> v.size.toLong })
   }
 
-  /** The most recent ingest epoch's UN-EXECUTED probe plan, for spec
-    * assertions (see [[VectorOps.lastEpochPlan]] — the returned frame
-    * is checkpointed, so its own plan is a Scan ExistingRDD). */
-  private[graft] val lastEpochPlan =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
+  /** The index's hit keys among an epoch's (band, sig) `keys` (non-
+    * empty): the index (base + every other epoch's delta; on a
+    * partitioned layout pre-filtered to `buckets`) joined LEFT SEMI
+    * against the broadcast keys, deduplicated per partition and
+    * collected — at most the epoch's keys per index partition. The
+    * probe plan contract is required on this plan every epoch. */
+  private def indexHits(s: SparkSession, indexPath: String, epochId: Long,
+                        keys: Seq[BandKey], buckets: Seq[Int],
+                        bandBuckets: Int): Set[BandKey] = {
+    import scala.jdk.CollectionConverters._
+    val index = DeltaIndex.read(s, indexPath, epochId)
+    val indexIn = bucketPush(index, buckets, bandBuckets)
+    val probe = s.createDataFrame(keys.map { case (b, g) => Row(b, g) }.asJava,
+      bandKeySchema)
+    val qe = indexIn.join(broadcast(probe), Seq("band", "sig"), "left_semi")
+      .select("band", "sig").queryExecution
+    DeltaIndex.requireProbeContract(s, indexPath, s"epoch $epochId", qe.sparkPlan)
+    lastEpochPlan.set(qe.sparkPlan)
+    qe.toRdd.mapPartitions { it =>
+      val seen = scala.collection.mutable.HashSet.empty[BandKey]
+      it.foreach(r => seen += (r.getInt(0) -> r.getUTF8String(1).toString))
+      seen.iterator
+    }.collect().toSet
+  }
+
+  /** [[neardupVerdicts]]' rule over one epoch's doc_ids (Catalyst form)
+    * and their (band, sig) keys: `dup_of_existing` when a key is an
+    * index hit, else `dup_in_batch` when the doc_id is above the
+    * smallest doc_id sharing one of its keys, else `unique`. */
+  private def localVerdicts(keysOf: Map[Any, Seq[BandKey]], hits: Set[BandKey],
+                            ord: Ordering[Any]): Map[Any, String] = {
+    val firstOwner = scala.collection.mutable.HashMap.empty[BandKey, Any]
+    for ((id, keys) <- keysOf; k <- keys)
+      if (firstOwner.get(k).forall(ord.gt(_, id))) firstOwner(k) = id
+    keysOf.map { case (id, keys) => id ->
+      (if (keys.exists(hits)) "dup_of_existing"
+       else if (keys.exists(k => ord.gt(id, firstOwner(k)))) "dup_in_batch"
+       else "unique")
+    }
+  }
+
+  /** The most recent ingest epoch's probe plan, for spec assertions. */
+  private[graft] val lastEpochPlan = new EpochPlan
 
   /** The REAL runtime composition of the streaming-ingest pieces (the
     * reference's shape: consumer flush → manager append → downstream
@@ -3048,11 +3127,16 @@ object TextOps {
     * stream has run. Committed epochs never replay (foreachBatch(N)
     * runs only after N-1's offsets committed), so folding them is
     * replay-safe; the current epoch's own (possibly stale) delta is
-    * never folded. `compactEvery <= 0` disables mid-stream compaction.
+    * never folded. The fold runs at the END of epoch N, after
+    * `onEpoch`, over the same `< N` set: the callback is not held up
+    * by it, and it lands before epoch N+1 reads the index.
+    * `compactEvery <= 0` disables mid-stream compaction.
     *
     * `onEpoch` receives (epochId, classified) per non-empty epoch;
-    * the classified frame is distributed — the callback decides what
-    * (bounded thing) to materialize. */
+    * the classified frame — one (doc_id, status) row per input row —
+    * is driver-local and bounded by the epoch (at most
+    * `maxBatchesPerTrigger` store batches), so collecting it runs no
+    * Spark job. */
   def startNeardupIngest(s: SparkSession, storeName: String, topic: String,
                          indexPath: String, maxBatchesPerTrigger: Long,
                          checkpointDir: String,
@@ -3086,15 +3170,15 @@ object TextOps {
           // delta its first attempt wrote — otherwise those admissions
           // would haunt the index for docs that were never reported
           val sess = batch.sparkSession
-          DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery)
-          // the epoch pins the batch in its banding pass: the source is
-          // read once, and every verdict comes from that one copy
+          // the epoch collects the batch in its banding pass: the source
+          // is read once, and every verdict comes from that one copy
           val (classified, counts) = neardupEpoch(sess, indexPath, epochId,
             batch.select("doc_id", "text"), bandBuckets)
           // per-topic admitted/dup counters (reference's per-stream
-          // metric family), from the epoch's own rollup
+          // metric family), from the epoch's own verdicts
           IngestMetrics.recordEpoch(topic, counts)
-          if (counts.values.sum > 0) onEpoch(epochId, classified)
+          if (counts.nonEmpty) onEpoch(epochId, classified)
+          DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery)
           ()
         }
         .start()

@@ -2105,13 +2105,11 @@ object VectorOps {
       indexKeyPrune), probes)
   }
 
-  /** The most recent ingest epoch's UN-EXECUTED probe plan, kept for
-    * spec assertions (the classified frame the epoch returns is
+  /** The most recent ingest epoch's probe plan, kept for spec
+    * assertions (the classified frame the epoch returns is
     * localCheckpointed — its own plan collapses to a Scan ExistingRDD,
-    * the round-13 gotcha). Written from the plan string the epoch's
-    * structural asserts already compute; no extra planning cost. */
-  private[graft] val lastEpochPlan =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
+    * the round-13 gotcha). */
+  private[graft] val lastEpochPlan = new EpochPlan
 
   /** Whether this THREAD's most recent prune-mode [[annProbeScore]]
     * actually applied the static key push (false when legitimately
@@ -2157,7 +2155,7 @@ object VectorOps {
   /** [[annIngestEpoch]] plus the epoch's verdict count per status, from
     * ONE rollup job over the checkpointed classification — it answers
     * the metrics, the callback guard and whether there are admitted
-    * vectors to write (see TextOps.neardupEpoch). */
+    * vectors to write. */
   private def annEpoch(s: SparkSession, indexPath: String, epochId: Long,
                        data: DataFrame, nPlanes: Int, dim: Int,
                        thresholdMicro: Long, probeBits: Int,
@@ -2171,10 +2169,10 @@ object VectorOps {
     // plan contract per epoch, on the un-executed frame (see
     // DeltaIndex.requireProbeContract): staged index read + broadcast semi
     val qe = classified0.queryExecution
-    lastEpochPlan.set(qe.executedPlan.toString)
+    lastEpochPlan.set(qe.sparkPlan)
     DeltaIndex.requireProbeContract(s, indexPath, s"epoch $epochId", qe.sparkPlan)
     // one computed copy serves the rollup, the delta write and the
-    // caller (see TextOps.neardupEpoch)
+    // caller
     val classified = classified0.localCheckpoint(true)
     // status rows plus one key per row the delta write will admit (a
     // null-id `new` row joins no probe row, so it admits nothing)

@@ -1,7 +1,7 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -10,14 +10,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-import graft.engine.{IngestMetrics, StreamStore, TextOps, VectorOps}
+import graft.engine.{DeltaIndex, IngestMetrics, StreamStore, TextOps, VectorOps}
 import graft.sources.GraftStoreRegistry
 
 /** The ingest doors' epoch bodies: the near-dup door end to end
-  * through a real stream — its per-epoch Spark job budget, its verdicts
-  * and ingest counters on edge-case inputs against a one-batch replay,
-  * a door whose index path renders past Spark's plan-metadata
-  * abbreviation limit — and the ANN epoch's delta write guard. */
+  * through a real stream — its per-epoch Spark job budget, when its
+  * compaction lands, its verdicts and ingest counters on edge-case
+  * inputs against a one-batch replay and against the distributed
+  * classify, a door whose index path renders past Spark's
+  * plan-metadata abbreviation limit — and the ANN epoch's delta write
+  * guard. */
 class IngestDoorSpec extends SparkSuite {
 
   private val docSchema = StructType(Seq(
@@ -37,23 +39,21 @@ class IngestDoorSpec extends SparkSuite {
   private def verdicts(c: DataFrame): Seq[(Long, String)] =
     c.collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
 
-  /** Runs `body` with a listener counting the jobs each streaming
-    * batch id launched, per query id. Listener delivery is
-    * asynchronous: a marker job submitted after `body` is delivered
-    * after every job `body` started, so waiting for it flushes them. */
-  private def countingJobs[T](body: => T): (T, Map[(String, Long), Int]) = {
-    val counts = new ConcurrentHashMap[(String, Long), AtomicInteger]()
+  /** Runs `body` and returns the properties of every Spark job it
+    * started. Listener delivery is asynchronous: a marker job submitted
+    * after `body` is delivered after every job `body` started, so
+    * waiting for it flushes them. */
+  private def jobsDuring[T](body: => T): (T, Seq[java.util.Properties]) = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
     val marker = s"job-count-flush-${System.nanoTime()}"
     val flushed = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        if (p.flatMap(x => Option(x.getProperty("spark.job.description")))
-            .contains(marker)) flushed.countDown()
-        for (props <- p; q <- Option(props.getProperty("sql.streaming.queryId"));
-             b <- Option(props.getProperty("streaming.sql.batchId")))
-          counts.computeIfAbsent((q, b.toLong), _ => new AtomicInteger())
-            .incrementAndGet()
+        val p = Option(e.properties).getOrElse(new java.util.Properties())
+        if (Option(p.getProperty("spark.job.description")).contains(marker))
+          flushed.countDown()
+        else started.add(p)
+        ()
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -63,16 +63,22 @@ class IngestDoorSpec extends SparkSuite {
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(flushed.await(60, TimeUnit.SECONDS), "listener never flushed")
-      (out, counts.asScala.map { case (k, v) => k -> v.get }.toMap)
+      (out, started.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("door job budget: a 4-epoch stream with one compaction runs at most 8 Spark jobs per plain epoch and 9 in the compaction epoch") {
+  /** Jobs per (streaming query id, batch id) among `jobs`. */
+  private def perBatch(jobs: Seq[java.util.Properties]): Map[(String, Long), Int] =
+    jobs.flatMap(p => for (q <- Option(p.getProperty("sql.streaming.queryId"));
+                           b <- Option(p.getProperty("streaming.sql.batchId")))
+      yield (q, b.toLong)).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("door job budget: a 4-epoch stream with one compaction runs at most 4 Spark jobs per plain epoch and 5 in the compaction epoch") {
     val dir = java.nio.file.Files.createTempDirectory("graft_door_jobs")
     val idx = dir.resolve("jb_idx").toString
     stage(idx, Seq("e0", "e1"))
     // each epoch admits one doc (a delta per epoch) and rejects one,
-    // so compactEvery = 2 folds e0 and e1 at the top of epoch 2
+    // so compactEvery = 2 folds e0 and e1 at the end of epoch 2
     val batches = (0 until 4).map { i =>
       val dup = if (i == 0) text("e0") else text(s"f${i - 1}")
       Seq(Row(100L + i * 10, dup), Row(101L + i * 10, text(s"f$i")))
@@ -82,7 +88,7 @@ class IngestDoorSpec extends SparkSuite {
     GraftStoreRegistry.register("s_jobs", st)
     val perEpoch = TrieMap.empty[Long, Seq[(Long, String)]]
     try {
-      val (queryId, jobs) = countingJobs {
+      val (queryId, jobs) = jobsDuring {
         val q = TextOps.startNeardupIngest(spark, "s_jobs", "docs_jobs", idx,
           maxBatchesPerTrigger = 1, checkpointDir = dir.resolve("ckpt").toString,
           onEpoch = (e, c) => { perEpoch.put(e, verdicts(c)); () },
@@ -97,18 +103,118 @@ class IngestDoorSpec extends SparkSuite {
       }
       assert(IngestMetrics.compactionCounts.toMap.get(idx).contains(1L),
         s"exactly one mid-stream compaction: ${IngestMetrics.compactionCounts}")
-      val byEpoch = jobs.collect { case ((q, b), n) if q == queryId => b -> n }
+      val byEpoch = perBatch(jobs).collect { case ((q, b), n) if q == queryId => b -> n }
       assert(byEpoch.keySet == Set(0L, 1L, 2L, 3L), s"jobs by epoch: $byEpoch")
       info(s"jobs by epoch: ${byEpoch.toSeq.sorted.mkString(", ")}")
-      // the pinning banding pass, the 4-job classification (probe-key
-      // broadcast, (band, sig) aggregate, doc_id window, checkpoint),
-      // the rollup, the delta write and the callback's collect; the
-      // compaction adds its merge write
-      Seq(0L, 1L, 3L).foreach(e => assert(byEpoch(e) <= 8,
-        s"plain epoch $e ran ${byEpoch(e)} jobs (budget 8): $byEpoch"))
-      assert(byEpoch(2L) <= 9,
-        s"compaction epoch ran ${byEpoch(2L)} jobs (budget 9): $byEpoch")
+      // the banding collect, the probe's broadcast build and semi-join
+      // collect, and the delta write; the callback's collect of the
+      // driver-local verdicts runs none; the compaction adds its merge
+      // write
+      Seq(0L, 1L, 3L).foreach(e => assert(byEpoch(e) <= 4,
+        s"plain epoch $e ran ${byEpoch(e)} jobs (budget 4): $byEpoch"))
+      assert(byEpoch(2L) <= 5,
+        s"compaction epoch ran ${byEpoch(2L)} jobs (budget 5): $byEpoch")
     } finally GraftStoreRegistry.unregister("s_jobs")
+  }
+
+  test("the compacting epoch's callback still sees compactEvery outstanding deltas, and the fold lands before the next epoch reads the index") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_door_fold")
+    val idx = dir.resolve("fo_idx").toString
+    stage(idx, Seq("e0", "e1"))
+    // epochs 0 and 1 admit (deltas e0, e1); epoch 2 admits nothing, so
+    // its callback sees exactly e0 and e1 before the fold; epoch 3
+    // copies epoch 0's admission
+    val batches = Seq(Seq(Row(100L, text("f0"))), Seq(Row(110L, text("f1"))),
+      Seq(Row(120L, text("e0"))), Seq(Row(130L, text("f0")), Row(131L, text("f3"))))
+    val st = new StreamStore(1 << 20, Long.MaxValue / 2)
+    batches.foreach(b => st.append("docs_fold", docSchema, b))
+    GraftStoreRegistry.register("s_fold", st)
+    // per epoch: verdicts, outstanding deltas, served base, probe plan
+    val seen = TrieMap.empty[Long, (Map[Long, String], Int, String, String)]
+    try {
+      val q = TextOps.startNeardupIngest(spark, "s_fold", "docs_fold", idx,
+        maxBatchesPerTrigger = 1, checkpointDir = dir.resolve("ckpt").toString,
+        onEpoch = (e, c) => {
+          seen.put(e, (verdicts(c).toMap, DeltaIndex.outstanding(spark, idx),
+            DeltaIndex.currentBase(spark, idx), TextOps.lastEpochPlan.get))
+          ()
+        }, compactEvery = 2)
+      try q.processAllAvailable() finally q.stop()
+      assert(q.exception.isEmpty, s"door failed: ${q.exception}")
+      assert(seen.keySet == Set(0L, 1L, 2L, 3L))
+      val (v2, outstanding2, base2, _) = seen(2L)
+      assert(v2 == Map(120L -> "dup_of_existing"))
+      assert(outstanding2 == 2 && base2 == idx,
+        s"epoch 2's callback runs before the fold: $outstanding2 deltas, base $base2")
+      val (v3, outstanding3, base3, plan3) = seen(3L)
+      assert(v3 == Map(130L -> "dup_of_existing", 131L -> "unique"),
+        s"the folded admission still classifies: $v3")
+      assert(base3 == s"${idx}_v1" && outstanding3 == 1,
+        s"epoch 3 runs on the folded base: $outstanding3 deltas, base $base3")
+      assert(plan3.contains("fo_idx_v1"),
+        s"epoch 3's probe must read the folded base:\n${plan3.take(3000)}")
+      assert(IngestMetrics.compactionCounts.toMap.get(idx).contains(1L),
+        s"exactly one mid-stream compaction: ${IngestMetrics.compactionCounts}")
+    } finally GraftStoreRegistry.unregister("s_fold")
+  }
+
+  test("an epoch of only sub-3-token docs reads no index, admits them and clears a stale delta") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_door_short")
+    val idx = dir.resolve("sh_idx").toString
+    stage(idx, Seq("e0"))
+    val delta = new java.io.File(s"${idx}_delta/e5")
+    // a first attempt of epoch 5 admitted a banded doc...
+    TextOps.neardupIngestEpoch(spark, idx, 5L, df(Seq(Row(200L, text("g0"))))).collect()
+    assert(delta.isDirectory)
+    // ...its replay holds only docs with fewer than 3 tokens
+    val tag = s"short-epoch-${System.nanoTime()}"
+    val (out, jobs) = jobsDuring {
+      spark.sparkContext.setLocalProperty("graft.spec.tag", tag)
+      try TextOps.neardupIngestEpoch(spark, idx, 5L, df(Seq(Row(201L, "two tokens"),
+          Row(202L, "x"), Row(null, "a b")))).collect()
+          .map(r => Option(r.get(0)) -> r.getString(1)).toSeq
+      finally spark.sparkContext.setLocalProperty("graft.spec.tag", null)
+    }
+    assert(out.sortBy(_._1.map(_.toString)) == Seq(None -> "unique",
+      Some(201L) -> "unique", Some(202L) -> "unique"), s"verdicts: $out")
+    val epochJobs = jobs.count(p => tag == p.getProperty("graft.spec.tag"))
+    assert(epochJobs == 1, s"only the banding pass may run, no index probe: $epochJobs jobs")
+    assert(!delta.exists, "the replay admits no bands, so the stale delta clears")
+  }
+
+  test("driver-side epoch verdicts equal the distributed classifyNeardupBatch on seeded batches with shared bands, repeated and null ids and short docs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_door_diff")
+    val idx = dir.resolve("df_idx").toString
+    stage(idx, Seq("a", "b", "c"))
+    // texts of 8 tokens from 2 indexed and 2 per-epoch fresh families,
+    // each token swapped for a rare one with some odds: copies share
+    // some bands but not all
+    val rnd = new scala.util.Random(11)
+    def doc(e: Int): String =
+      if (rnd.nextInt(8) == 0) Seq.fill(rnd.nextInt(3))("w").mkString(" ")
+      else {
+        val fam = Seq("a", "b", s"d$e", s"e$e")(rnd.nextInt(4))
+        (0 until 8).map(i =>
+          if (rnd.nextInt(6) == 0) s"r${rnd.nextInt(3)}tok$i" else s"${fam}tok$i")
+          .mkString(" ")
+      }
+    def sorted(v: Seq[(Option[Any], String)]) = v.map { case (i, st) =>
+      (i.map(_.toString).getOrElse(""), st) }.sorted
+    (0 until 3).foreach { e =>
+      val rows = (0 until 40).map { _ =>
+        Row(if (rnd.nextInt(10) == 0) null else (1000L * e + rnd.nextInt(30)), doc(e))
+      }
+      val batch = df(rows)
+      // the distributed classify first: it reads the same index the
+      // epoch reads (base + every earlier epoch's delta)
+      val reference = TextOps.classifyNeardupBatch(spark, idx, batch).collect()
+        .map(r => Option(r.get(0)) -> r.getString(1)).toSeq
+      val epoch = TextOps.neardupIngestEpoch(spark, idx, e.toLong, batch).collect()
+        .map(r => Option(r.get(0)) -> r.getString(1)).toSeq
+      assert(sorted(epoch) == sorted(reference), s"epoch $e")
+      assert(reference.map(_._2).distinct.size == 3,
+        s"epoch $e must exercise every status: ${reference.groupBy(_._2).view.mapValues(_.size).toMap}")
+    }
   }
 
   test("door verdicts and ingest counters match a one-batch replay on short docs, a repeated doc_id, a band-less admission and an eviction-drained replay") {
