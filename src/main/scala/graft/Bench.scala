@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -28,8 +27,11 @@ object Bench {
       a.repartition(2, col("g")).sortWithinPartitions("id").count()
       val warmDir = new java.io.File(sfDir).getParent + "/sf0.001"
       if (new java.io.File(warmDir).isDirectory)
-        SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-          try fn(spark, warmDir).count() catch { case _: Throwable => () }
+        SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+          try fn(spark, warmDir).count() catch {
+            case t: Throwable =>
+              Console.err.println(s"[bench] warm-up of '$name' on $warmDir failed: $t")
+          }
         }
       // table prep at the TARGET sf: the partitioned copy is written
       // once per dataset (like laying out a table at scale), so the
@@ -53,9 +55,9 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-    def once(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double =
-      BenchProtocol.timeOnce(spark, fn, sfDir)
+    val fnByName = ordered.toMap
+    def once(name: String): Double =
+      BenchProtocol.timeOnce(spark, name, fnByName(name), sfDir)
     // Host-speed calibration probe: a PINNED workload that never
     // changes across rounds (hash 3·10⁷ longs into 3·10⁶ groups,
     // shuffle-aggregate, re-aggregate — data-independent,
@@ -134,8 +136,8 @@ object Bench {
             s"[bench] WARN: pulse-guard prior unreadable (${e.getClass.getSimpleName}: ${e.getMessage}); guard disabled this run")
           Map.empty
       }
-    val pass1 = ordered.map { case (name, fn) => name -> once(fn) }.toMap
-    val pass2 = ordered.map { case (name, fn) => name -> once(fn) }.toMap
+    val pass1 = ordered.map { case (name, _) => name -> once(name) }.toMap
+    val pass2 = ordered.map { case (name, _) => name -> once(name) }.toMap
     def minPos(vs: Seq[Double]): Double = {
       val p = vs.filter(_ >= 0)
       if (p.isEmpty) -1.0 else p.min
@@ -147,7 +149,6 @@ object Bench {
     // queries × 2 samples so a globally-slow host can't turn the guard
     // into a third full pass; keys without a prior (new this round)
     // keep their min-of-2.
-    val fnByName = ordered.toMap
     val extraSamples = scala.collection.mutable.Map[String, Seq[Double]]()
     val offenders = minOf2.collect {
       case (name, v) if v > 0 && prior.get(name).exists(p => p > 0 && v > 2 * p) =>
@@ -156,7 +157,7 @@ object Bench {
     val results = minOf2.map { case (name, v) =>
       if (!offenders(name)) name -> v
       else {
-        val extra = (1 to 2).map(_ => once(fnByName(name))).filter(_ > 0)
+        val extra = (1 to 2).map(_ => once(name)).filter(_ > 0)
         extraSamples(name) = extra
         name -> (extra :+ v).min
       }
@@ -176,7 +177,7 @@ object Bench {
     val isoKeys =
       if (only.nonEmpty) Seq.empty[String]
       else results.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(25).map(_._1)
-    val pass3 = isoKeys.map(k => k -> once(fnByName(k))).toMap
+    val pass3 = isoKeys.map(k => k -> once(k)).toMap
     val isolated = isoKeys.map { k =>
       k -> minPos(Seq(pass1(k), pass2(k), pass3(k)) ++
         extraSamples.getOrElse(k, Seq.empty))
@@ -205,7 +206,9 @@ object Bench {
       val w = new java.io.PrintWriter("bench_full.json")
       try w.println(s"""{"total":${ms(total)},"n":${results.size},"calibration_sec":${ms(calibration)},"sf":"$sfDir","isolated":$isoJson,"queries":$full}""")
       finally w.close()
-    } catch { case _: Throwable => () }
+    } catch {
+      case t: Throwable => Console.err.println(s"[bench] writing bench_full.json failed: $t")
+    }
     val slow = results.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(25)
     // Ingest-throughput probe against the reference's ONLY published
     // performance claim ("thousands of messages per second",
@@ -224,7 +227,11 @@ object Bench {
       rows.grouped(1024).foreach(b => store.append("events", schema, b.toSeq))
       val dt = (System.nanoTime() - t0) / 1e9
       (rows.length / dt).toLong
-    } catch { case _: Throwable => -1L }
+    } catch {
+      case t: Throwable =>
+        Console.err.println(s"[bench] ingest probe on $sfDir failed: $t")
+        -1L
+    }
     val totalNorm = if (calibration > 0) total * CalibrationRef / calibration else total
     // the printed line also carries the isolated minima for as many of
     // the slowest keys as FIT (the driver's stdout window keeps only

@@ -38,17 +38,27 @@ object BenchProtocol {
     * are untouched: the door keys assert on `executedPlan.toString`
     * and PlanDump explicitly passes FormattedMode, neither of which
     * reads this conf. Not scale-dependent — no production value
-    * differs. */
-  def session(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.ui.explainMode", "simple")
-    .getOrCreate()
+    * differs.
+    *
+    * This is the ONE session recipe: Bench, Verify, the test suites
+    * and every tool build through it, so the verified engine is the
+    * benched engine. It ends by installing the graft function library
+    * and optimizer rules (idempotent, so a `getOrCreate` that returns
+    * an existing session is safe); operators never register them. */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.ui.explainMode", "simple")
+      .getOrCreate()
+    graft.expressions.VectorExpressions.register(spark)
+    spark
+  }
 
   /** The PINNED calibration workload (never change without re-pinning
     * Bench.CalibrationRef): hash 3·10⁷ longs into 3·10⁶ groups,
@@ -94,13 +104,17 @@ object BenchProtocol {
   /** Time one query run under the shared protocol: the PREVIOUS run's
     * localCheckpoint blocks are dropped before the clock starts (each
     * query pays for its own cache, none for its predecessors'), errors
-    * report as -1. */
-  def timeOnce(spark: SparkSession,
+    * report as -1, with one stderr line naming `key` and the cause. */
+  def timeOnce(spark: SparkSession, key: String,
                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                sfDir: String): Double = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     val t0 = System.nanoTime()
-    try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+    try { fn(spark, sfDir).count() } catch {
+      case t: Throwable =>
+        Console.err.println(s"[bench] timed run of '$key' on $sfDir failed: $t")
+        return -1.0
+    }
     (System.nanoTime() - t0) / 1e9
   }
 }

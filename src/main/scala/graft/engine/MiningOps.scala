@@ -793,7 +793,6 @@ object MiningOps {
     * and floor(x·1e4+0.5) absorbs that ulp identically in both
     * engines while a raw-double compare would flap. */
   def qJaroWinkler(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val names = part(s, d).select(col("p_name").as("name")).distinct()
     val pairs = names.select(col("name").as("name_a"),
         substring(col("name"), 1, 1).as("blk"))
@@ -948,7 +947,6 @@ object MiningOps {
     * (the q_jaro_winkler convention) so both engines cut the same
     * boundary. */
   def qEntityResolution(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val ids = part(s, d).groupBy("p_name")
       .agg(min("p_partkey").as("nid"), count(lit(1)).as("n_parts"))
       .localCheckpoint(true)
@@ -989,7 +987,6 @@ object MiningOps {
     * [1, 999999] ppm so a degenerate feature can never zero a
     * likelihood. */
   def qFellegiSunter(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val ids = part(s, d).groupBy("p_name")
       .agg(min("p_brand").as("brand"), min("p_size").as("psize"))
       .withColumn("blk", split(col("p_name"), " ").getItem(0))

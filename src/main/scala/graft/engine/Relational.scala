@@ -1280,7 +1280,6 @@ object Relational {
     // over unbounded levenshtein); (3) score each unordered pair once
     // (a < b) and fan out both orientations afterwards — halves the
     // distance computations, and the fan-out is a cheap generator
-    graft.expressions.VectorExpressions.register(s)
     val pairs = c.repartition(col("blk")).alias("a")
       .join(broadcast(c).alias("b"),
         col("a.blk") === col("b.blk") &&

@@ -874,7 +874,6 @@ object ScaleOps {
     * clamping, partial-aggregation, or merge bug in the native
     * aggregate shifts a count, moves a cum, and breaks the hash. */
   def qQuantileSketchSql(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     Tables.lineitem(s, d).createOrReplaceTempView("graft_li_sketch")
     // r15 note: a checkpointed-temp-view restructure (dom/merged
     // materialized once; 8 lineitem scans -> 3) was MEASURED SLOWER
@@ -1348,7 +1347,6 @@ object ScaleOps {
     * re-sum; no double re-aggregation anywhere). At 100 TB the MV is
     * |groups|-sized where the fact scan is the whole corpus. */
   def qMvRewrite(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val mvPath = lineitemMv(s, d)
     s.conf.set("graft.mv.path", mvPath)
     s.conf.set("graft.mv.base", s"$d/lineitem")

@@ -36,11 +36,26 @@ object Tables {
     spark.read.schema(sch).parquet(p)
   }
 
-  /** The same footer-schema memo for the FLAT staged parquet copies
+  /** The same footer-schema memo for the staged parquet copies
     * queries re-read every run (ensureBaskets / staged bigrams / …):
-    * those paths are written once per JVM (computeIfAbsent memos)
-    * before the first read, so their schema is as immutable as the
-    * fixtures'. The doors' versioned indexes do NOT come through here:
+    * those paths are written once per JVM (computeIfAbsent memos, each
+    * on a fresh `StagedPaths.tmp` dir) before the first read, so their
+    * schema is as immutable as the fixtures'.
+    *
+    * A PARTITIONED staged layout may come through here too (the
+    * day-/file_id-partitioned compaction layouts `qCompactionExec`
+    * reads) when it meets the same terms: written once per JVM before
+    * its first read and never rewritten, so its schema — partition
+    * columns included, with the types partition inference gave them
+    * on the first read — is fixed. Supplying that schema skips only
+    * the footer read: partition discovery still lists the directories
+    * and parses each partition value with the memoized type, so the
+    * rows are the ones `spark.read.parquet` returns. A layout whose
+    * schema can change after its first read (rewritten in place, a new
+    * column, a partition value of another inferred type) must use
+    * `spark.read.parquet`.
+    *
+    * The doors' versioned indexes do NOT come through here:
     * their base and delta dir names change every compaction and epoch,
     * so `DeltaIndex` keeps one schema PER INDEX instead — resolved from
     * the base on first use and dropped by `resetForStaging`. Reusing it

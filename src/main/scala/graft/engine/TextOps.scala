@@ -46,11 +46,8 @@ object TextOps {
     * One fused native pass per document (graft_shingle_hashes) — see
     * shingleHashesHof for the HOF formulation it replaced (kept for
     * the parity spec). */
-  def shingleHashes(toks: Column, k: Int): Column = {
-    graft.expressions.VectorExpressions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def shingleHashes(toks: Column, k: Int): Column =
     call_function("graft_shingle_hashes", toks, lit(k))
-  }
 
   /** Pre-fusion HOF formulation of shingleHashes. String-free: tokens
     * are hashed once, then each shingle hash is a polynomial combine
@@ -102,11 +99,9 @@ object TextOps {
     * document-local, so the earlier explode-tokens + 64-way sum
     * aggregation paid a |corpus|·|tokens|-row shuffle for nothing.
     * Input must have (idCol, textCol). */
-  def simhashFingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(df.sparkSession)
+  def simhashFingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
       call_function("graft_simhash64", tokens(col(textCol))).as("fp"))
-  }
 
   // ---------------------------------------------------------------- //
 
@@ -198,7 +193,6 @@ object TextOps {
     // signature+banding is ONE fused native pass per document
     // (graft_minhash_bands) — the HOF formulation walked the shingle
     // array nHashes times through interpreted aggregate() lambdas.
-    graft.expressions.VectorExpressions.register(corpus.sparkSession)
     val sigs = withSh
       .select(col("doc_id"),
         posexplode(call_function("graft_minhash_bands",
@@ -220,7 +214,6 @@ object TextOps {
           struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
       .select("p.doc_a", "p.doc_b").distinct()
     val shingles = withSh.select(col("doc_id"), col("sh"))
-    graft.expressions.VectorExpressions.register(corpus.sparkSession)
     val out = pairs
       .join(shingles.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(shingles.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
@@ -311,7 +304,6 @@ object TextOps {
     // hash array 56 times per document through lambda machinery
     // (Md5SimHash56Spec asserts equality against that HOF form; the
     // DuckDB oracle replays the same md5 math unchanged)
-    graft.expressions.VectorExpressions.register(s)
     val fps = corpusWithDups(s, d)
       .select(col("doc_id"), call_function("graft_md5_simhash56",
         split(trim(col("text")), "\\s+")).as("fp"))
@@ -770,7 +762,6 @@ object TextOps {
     * not corpus-sized. Ties at the cut line break on the bigram text
     * for cross-engine determinism. */
   def qNgramFreq(s: SparkSession, d: String, topK: Int = 50): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     documents(s, d)
       .select(explode(call_function("graft_word_ngrams",
         tokens(col("text")), lit(2))).as("bigram"))
@@ -953,7 +944,6 @@ object TextOps {
     * 100 TB this is one scan + a broadcast hash probe per shingle.
     * Shingle hashes are md5-derived so the oracle replays them. */
   def qDecontaminate(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val toks = documents(s, d)
       .select(col("doc_id"), (col("doc_id") % 97 === 0).as("is_bench"),
         tokens(col("text")).as("arr"))
@@ -1047,7 +1037,6 @@ object TextOps {
   /** The un-staged candidate-pair pipeline (see [[md5MinhashPairs]]).
     * The first shuffle in the whole plan is the band self-join. */
   private def md5MinhashPairsFresh(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val sigs = md5Bands(documents(s, d))
     sigs.alias("a")
       .join(sigs.alias("b"),
@@ -1167,7 +1156,6 @@ object TextOps {
     * the suffix-array-free approximation that scales to 100 TB.
     * flag_dup marks documents above 20% duplicated windows. */
   def qDupSubstring(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     def r4(x: Column): Column = floor(x * 10000.0 + 0.5) / 10000.0
     val base = documents(s, d)
       .select(col("doc_id"),
@@ -1211,7 +1199,6 @@ object TextOps {
     * partitions by (pair, diagonal) — plentiful small partitions, no
     * global sort. */
   def qDupSpans(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     import org.apache.spark.sql.expressions.Window
     // tokenize + window generation runs ONCE: base feeds the window
     // explode AND the final span-text join, and without the checkpoint
@@ -1437,7 +1424,6 @@ object TextOps {
     * shuffled-token near-dups the bag-of-shingles min misses), and
     * SQL-expressible unlike a sequential rolling hash. */
   def qDocFingerprint(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val P = 1000000007L
     documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("arr"))
@@ -1510,7 +1496,6 @@ object TextOps {
     * gram, 3.4× slower at sf0.1), then partial-agg before the single
     * shuffle on gram. */
   def qCharNgram(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     documents(s, d)
       .select(
         regexp_replace(
@@ -1827,7 +1812,6 @@ object TextOps {
     * + per-feature md5 + groupBy draft measured 7.0 s at sf0.1; this
     * runs sub-second). */
   def qQualityClassifier(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     documents(s, d)
       .select(col("doc_id"),
         call_function("graft_md5_linear_score", tokens(col("text"))).as("sc"))
@@ -1852,7 +1836,6 @@ object TextOps {
     * the exact Jaccard runs only on CANDIDATE pairs (already
     * LSH-blocked), never all pairs. */
   def qMinhashJaccardEst(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val base = documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("arr"))
       .filter(size(col("arr")) >= 3)
@@ -1895,7 +1878,6 @@ object TextOps {
     * and the all-pairs join broadcasts the 200-row side (bounded by
     * contract, never corpus-scaled). */
   def qLshRecallAudit(s: SparkSession, d: String, sample: Int = 200): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     def r4(x: Column): Column = floor(x * 10000.0 + 0.5) / 10000.0
     val base = documents(s, d).filter(col("doc_id") < sample)
       .select(col("doc_id"), tokens(col("text")).as("arr"))
@@ -2018,7 +2000,6 @@ object TextOps {
     * SMALLER side (the contained doc), both orders kept when sizes
     * tie. */
   def qContainmentDedup(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     def r4(x: Column): Column = floor(x * 10000.0 + 0.5) / 10000.0
     // the tokenize+shingle explode feeds FOUR consumers (sizes, the
     // df filter, and both sides of the candidate self-join); eager
@@ -2096,7 +2077,6 @@ object TextOps {
     * dormant branch. Bounded collects only: df/bucket counts come
     * FIRST, collect_list happens after the ≤ df-cap / ≤ 64 joins. */
   def qContainmentHybrid(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     def r4(x: Column): Column = floor(x * 10000.0 + 0.5) / 10000.0
     val corpus = corpusWithDupsToks(s, d)
     val sh = corpus
@@ -2746,7 +2726,6 @@ object TextOps {
     * conv(substr(md5)) arithmetic of q_dedup_minhash_md5) and both
     * join levels from scratch. */
   def qStreamNeardupLsh(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     def r4(x: Column): Column = floor(x * 10000.0 + 0.5) / 10000.0
     val corpus = corpusWithDups(s, d)
     // this query's batch is the WHOLE duplicated corpus, whose band
@@ -2792,7 +2771,6 @@ object TextOps {
   def qStreamNeardupPart(s: SparkSession, d: String,
                          bandBuckets: Int = 1024,
                          probeDocs: Int = 25): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val corpus = corpusWithDups(s, d)
     val indexPath = neardupIndexCopies.computeIfAbsent(
       s"$d#part$bandBuckets", _ => {
@@ -2839,7 +2817,6 @@ object TextOps {
     * the partition dirs cost more than they prune. */
   def stageNeardupIndex(corpus: DataFrame, path: String,
                         bandBuckets: Int = 0): Unit = {
-    graft.expressions.VectorExpressions.register(corpus.sparkSession)
     require(bandBuckets <= 65536,
       s"bandBuckets must be <= 65536, got $bandBuckets")
     DeltaIndex.resetForStaging(corpus.sparkSession, path)
@@ -2886,7 +2863,6 @@ object TextOps {
   def classifyNeardupBatch(s: SparkSession, indexPath: String,
                            batch: DataFrame,
                            bandBuckets: Int = 0): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     IndexLayout.validate(s, indexPath, "bandBuckets", bandBuckets.toString)
     // the COMPLETE index: base plus every delta a stream has admitted —
     // a batch-side classify that ignored stream admissions would
@@ -3011,7 +2987,6 @@ object TextOps {
                            data: DataFrame, bandBuckets: Int)
       : (DataFrame, Map[String, Long]) = {
     import scala.jdk.CollectionConverters._
-    graft.expressions.VectorExpressions.register(s)
     IndexLayout.validate(s, indexPath, "bandBuckets", bandBuckets.toString)
     val idField = data.schema("doc_id")
     val banded = md5BandArrays(data)
@@ -3229,7 +3204,6 @@ object TextOps {
     * algorithm entirely, so a bug in the trie, the failure links, or
     * the output merging shifts an integer. */
   def qBlocklistScan(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         call_function("graft_multi_pattern_counts", col("text"),

@@ -40,12 +40,10 @@ object VectorOps {
   /** Native codegen'd cosine (graft.expressions.CosineSimilarity) for
     * the per-candidate hot loops: zero per-row allocation vs the HOF
     * composition (which materializes a zip_with array per row).
-    * Requires array<float> inputs; registers the function
-    * idempotently on the session. */
-  def nativeCosine(s: SparkSession, a: Column, b: Column): Column = {
-    graft.expressions.VectorExpressions.register(s)
+    * Requires array<float> inputs and a session carrying the graft
+    * function library (`BenchProtocol.session` or `GraftExtensions`). */
+  def nativeCosine(s: SparkSession, a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
-  }
 
   /** Deterministic random hyperplanes for sign-LSH: nPlanes × dim. */
   def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
@@ -137,7 +135,6 @@ object VectorOps {
     * before returning. Deterministic seeded init (first k vec_ids). */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): Seq[Seq[Float]] = {
     val spark = emb.sparkSession
-    graft.expressions.VectorExpressions.register(spark)
     val pinned = emb.select("vec_id", "embedding").cache()
     try {
       var centroids: Seq[Seq[Float]] = pinned
@@ -837,7 +834,6 @@ object VectorOps {
     * < 1.5e18 done in double on both engines (exact ints < 2^53,
     * correctly-rounded product — identical). */
   def qEmbedCovariance(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     embeddings(s, d)
       .agg(call_function("graft_vector_cov", col("embedding"), lit(1e6)).as("m"))
       .select(size(col("m")).as("dd"),
@@ -867,7 +863,6 @@ object VectorOps {
     * corpus-size-invariant. */
   def qPcaIter(s: SparkSession, d: String): DataFrame = {
     def r4(x: Column): Column = floor(x * 10000.0 + 0.5) / 10000.0
-    graft.expressions.VectorExpressions.register(s)
     val m = embeddings(s, d)
       .agg(call_function("graft_vector_cov", col("embedding")).as("m"))
       .select(size(col("m")).as("dd"), posexplode(col("m")).as(Seq("p", "c")))
@@ -896,7 +891,6 @@ object VectorOps {
     * would iterate it to convergence exactly as qDedupCluster
     * iterates label propagation. */
   def qKmeansIter(s: SparkSession, d: String, k: Int = 8): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     val emb = embeddings(s, d)
     val cents = emb.filter(col("vec_id") < k)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
@@ -1034,7 +1028,6 @@ object VectorOps {
     * and the hit-join replay in DuckDB with the plane constants
     * embedded ([[recallAtKOracleSql]]). */
   def qRecallAtK(s: SparkSession, d: String, k: Int = 10): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     def r4(x: Column): Column = floor(x * 10000.0 + 0.5) / 10000.0
     val corpus = embeddings(s, d).select(col("vec_id"), col("embedding"))
     val queries = corpus.filter(col("vec_id") < 10)
@@ -1103,13 +1096,11 @@ object VectorOps {
     * same codegen'd [[graft.expressions.CosineSimilarity]] invoked
     * as a REGISTERED SQL FUNCTION from query text (a user who only
     * speaks SQL gets the native expression, not a UDF) — the
-    * `SparkSessionExtensions.injectFunction` /
-    * `FunctionRegistry.createOrReplaceTempFunction` surface that
-    * GraftExtensions installs, exercised end to end through the
+    * function table that `BenchProtocol.session` and GraftExtensions
+    * install, exercised end to end through the
     * DuckDB differential. The probe vector is a scalar subquery, so
     * the plan is one narrow scan + a broadcast scalar — no join. */
   def qSqlNative(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
     embeddings(s, d).createOrReplaceTempView("graft_emb_sql")
     s.sql(
       """SELECT vec_id, label,

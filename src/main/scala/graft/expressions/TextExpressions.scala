@@ -378,18 +378,22 @@ object Md5SimHash56Ops {
     val md = digests.get()
     var i = 0
     while (i < n) {
-      md.reset()
-      md.update(tokens.getUTF8String(i).getBytes)
-      val d = md.digest()
-      // first 14 hex nibbles of the digest as a 56-bit long
-      var v = 0L; var k = 0
-      while (k < 14) {
-        val b = d(k >> 1) & 0xFF
-        v = (v << 4) | (if ((k & 1) == 0) b >>> 4 else b & 0xF).toLong
-        k += 1
+      // a null token votes no bit but still counts in n: the HOF form's
+      // filter drops its null hash while size counts it
+      if (!tokens.isNullAt(i)) {
+        md.reset()
+        md.update(tokens.getUTF8String(i).getBytes)
+        val d = md.digest()
+        // first 14 hex nibbles of the digest as a 56-bit long
+        var v = 0L; var k = 0
+        while (k < 14) {
+          val b = d(k >> 1) & 0xFF
+          v = (v << 4) | (if ((k & 1) == 0) b >>> 4 else b & 0xF).toLong
+          k += 1
+        }
+        var b = 0
+        while (b < 56) { counts(b) += ((v >>> b) & 1L).toInt; b += 1 }
       }
-      var b = 0
-      while (b < 56) { counts(b) += ((v >>> b) & 1L).toInt; b += 1 }
       i += 1
     }
     var fp = 0L; var b = 0

@@ -1,8 +1,11 @@
 package graft.expressions
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -148,163 +151,92 @@ case class JaccardSorted(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration helpers: temp-function registry (per session) and a
-  * SparkSessionExtensions installer (the `spark.sql.extensions`
-  * config path) so plain SQL can call the functions. */
+/** The graft function library: ONE table of (SQL name, expression
+  * class, builder) plus the optimizer rules, read by both installers —
+  * `register` for an already-built session (`BenchProtocol.session`
+  * calls it once) and [[GraftExtensions]] for the
+  * `spark.sql.extensions` path. */
 object VectorExpressions {
 
-  private[expressions] def litInt(e: Expression, fn: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+  final case class GraftFunction(name: String, cls: Class[_ <: Expression],
+                                 build: Seq[Expression] => Expression)
+
+  private def litInt(e: Expression, fn: String): Int = e match {
+    case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(
       s"$fn expects integer literal parameters, got $other")
   }
 
-  private[expressions] def litDouble(e: Expression, fn: String): Double = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Double, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toDouble
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toDouble
+  private def litDouble(e: Expression, fn: String): Double = e match {
+    case Literal(v: Double, _) => v
+    case Literal(v: Int, _) => v.toDouble
+    case Literal(v: Long, _) => v.toDouble
     case other => throw new IllegalArgumentException(
       s"$fn expects a numeric literal parameter, got $other")
   }
 
-  private[expressions] def litString(e: Expression, fn: String): String = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(
-        v: org.apache.spark.unsafe.types.UTF8String, _) => v.toString
+  private def litString(e: Expression, fn: String): String = e match {
+    case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) => v.toString
     case other => throw new IllegalArgumentException(
       s"$fn expects a string literal parameter, got $other")
   }
 
-  private[expressions] def covBuilder(exprs: Seq[Expression]): Expression =
-    VectorCovariance(exprs(0),
-      if (exprs.length > 1) litDouble(exprs(1), "graft_vector_cov") else 0.0)
+  val functions: Seq[GraftFunction] = Seq(
+    GraftFunction("graft_cosine", classOf[CosineSimilarity],
+      e => CosineSimilarity(e(0), e(1))),
+    GraftFunction("graft_jaccard_sorted", classOf[JaccardSorted],
+      e => JaccardSorted(e(0), e(1))),
+    GraftFunction("graft_minhash_bands", classOf[MinHashBands],
+      e => MinHashBands(e(0), litInt(e(1), "graft_minhash_bands"),
+        litInt(e(2), "graft_minhash_bands"))),
+    GraftFunction("graft_simhash64", classOf[SimHash64], e => SimHash64(e(0))),
+    GraftFunction("graft_shingle_hashes", classOf[ShingleHashes],
+      e => ShingleHashes(e(0), litInt(e(1), "graft_shingle_hashes"))),
+    GraftFunction("graft_vector_avg", classOf[VectorAvg], e => VectorAvg(e(0))),
+    GraftFunction("graft_vector_cov", classOf[VectorCovariance],
+      e => VectorCovariance(e(0),
+        if (e.length > 1) litDouble(e(1), "graft_vector_cov") else 0.0)),
+    GraftFunction("graft_char_ngrams", classOf[CharNgrams],
+      e => CharNgrams(e(0), litInt(e(1), "graft_char_ngrams"))),
+    GraftFunction("graft_word_ngrams", classOf[WordNgrams],
+      e => WordNgrams(e(0), litInt(e(1), "graft_word_ngrams"))),
+    GraftFunction("graft_md5_minhash", classOf[Md5MinHash], e => Md5MinHash(e(0))),
+    GraftFunction("graft_md5_simhash56", classOf[Md5SimHash56], e => Md5SimHash56(e(0))),
+    GraftFunction("graft_within_edit1", classOf[WithinEdit1],
+      e => WithinEdit1(e(0), e(1))),
+    GraftFunction("graft_md5_linear_score", classOf[Md5LinearScore],
+      e => Md5LinearScore(e(0))),
+    GraftFunction("graft_jaro_winkler", classOf[JaroWinkler],
+      e => JaroWinkler(e(0), e(1))),
+    GraftFunction("graft_multi_pattern_counts", classOf[MultiPatternCounts],
+      e => MultiPatternCounts(e(0),
+        litString(e(1), "graft_multi_pattern_counts").split(' ').toIndexedSeq)),
+    GraftFunction("graft_quantile_sketch", classOf[QuantileSketch],
+      e => QuantileSketch(e(0), e(1), e(2))))
 
+  val rules: Seq[Rule[LogicalPlan]] = Seq(SelfSimilarityFold, graft.plans.MvAggregateRewrite)
+
+  /** Installs the library on a built session, idempotently: each rule
+    * is appended to `experimental.extraOptimizations` only if absent,
+    * and re-registering a function replaces it with itself. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(SelfSimilarityFold))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SelfSimilarityFold
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.MvAggregateRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.MvAggregateRewrite
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard_sorted", exprs => JaccardSorted(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_bands", exprs => MinHashBands(exprs(0),
-        litInt(exprs(1), "graft_minhash_bands"),
-        litInt(exprs(2), "graft_minhash_bands")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_hashes", exprs => ShingleHashes(exprs(0),
-        litInt(exprs(1), "graft_shingle_hashes")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vector_avg", exprs => VectorAvg(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vector_cov", covBuilder _, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_ngrams", exprs => CharNgrams(exprs(0),
-        litInt(exprs(1), "graft_char_ngrams")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_ngrams", exprs => WordNgrams(exprs(0),
-        litInt(exprs(1), "graft_word_ngrams")), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5_minhash", exprs => Md5MinHash(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5_simhash56", exprs => Md5SimHash56(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_within_edit1", exprs => WithinEdit1(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5_linear_score", exprs => Md5LinearScore(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_multi_pattern_counts", exprs => MultiPatternCounts(exprs(0),
-        litString(exprs(1), "graft_multi_pattern_counts")
-          .split(' ').toIndexedSeq), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quantile_sketch",
-      exprs => QuantileSketch(exprs(0), exprs(1), exprs(2)), "built-in")
+    rules.foreach { r =>
+      if (!spark.experimental.extraOptimizations.contains(r))
+        spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ r
+    }
+    functions.foreach { f =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(f.name, f.build, "built-in")
+    }
   }
 }
 
 /** `spark.sql.extensions=graft.expressions.GraftExtensions` installs
-  * the function library at session build time (option (c) plumbing of
-  * the custom-operator ladder, used here just for function
-  * injection). */
+  * the same library at session build time. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[CosineSimilarity].getName, "graft_cosine"),
-        (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_jaccard_sorted"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[JaccardSorted].getName, "graft_jaccard_sorted"),
-        (exprs: Seq[Expression]) => JaccardSorted(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash_bands"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[MinHashBands].getName, "graft_minhash_bands"),
-        (exprs: Seq[Expression]) => MinHashBands(exprs(0),
-          VectorExpressions.litInt(exprs(1), "graft_minhash_bands"),
-          VectorExpressions.litInt(exprs(2), "graft_minhash_bands"))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_simhash64"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[SimHash64].getName, "graft_simhash64"),
-        (exprs: Seq[Expression]) => SimHash64(exprs(0))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_shingle_hashes"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-        (exprs: Seq[Expression]) => ShingleHashes(exprs(0),
-          VectorExpressions.litInt(exprs(1), "graft_shingle_hashes"))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_vector_avg"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[VectorAvg].getName, "graft_vector_avg"),
-        (exprs: Seq[Expression]) => VectorAvg(exprs(0))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_vector_cov"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[VectorCovariance].getName, "graft_vector_cov"),
-        (exprs: Seq[Expression]) => VectorExpressions.covBuilder(exprs)))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_char_ngrams"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[CharNgrams].getName, "graft_char_ngrams"),
-        (exprs: Seq[Expression]) => CharNgrams(exprs(0),
-          VectorExpressions.litInt(exprs(1), "graft_char_ngrams"))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_word_ngrams"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[WordNgrams].getName, "graft_word_ngrams"),
-        (exprs: Seq[Expression]) => WordNgrams(exprs(0),
-          VectorExpressions.litInt(exprs(1), "graft_word_ngrams"))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_md5_minhash"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[Md5MinHash].getName, "graft_md5_minhash"),
-        (exprs: Seq[Expression]) => Md5MinHash(exprs(0))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_md5_simhash56"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[Md5SimHash56].getName, "graft_md5_simhash56"),
-        (exprs: Seq[Expression]) => Md5SimHash56(exprs(0))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_md5_linear_score"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[Md5LinearScore].getName, "graft_md5_linear_score"),
-        (exprs: Seq[Expression]) => Md5LinearScore(exprs(0))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_quantile_sketch"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[QuantileSketch].getName, "graft_quantile_sketch"),
-        (exprs: Seq[Expression]) => QuantileSketch(exprs(0), exprs(1), exprs(2))))
-    e.injectOptimizerRule(_ => SelfSimilarityFold)
-    e.injectOptimizerRule(_ => graft.plans.MvAggregateRewrite)
+    VectorExpressions.functions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
+    VectorExpressions.rules.foreach(r => e.injectOptimizerRule(_ => r))
   }
 }

@@ -52,7 +52,7 @@ object IsolatedBench {
     graft.BenchProtocol.prepTables(spark, sfDir)
 
     def once(k: String): Double =
-      graft.BenchProtocol.timeOnce(spark, qs(k), sfDir)
+      graft.BenchProtocol.timeOnce(spark, k, qs(k), sfDir)
     // three FULL PASSES over the key list (not back-to-back per key):
     // minutes of other keys' work between a key's samples, so one host
     // pulse cannot poison all three — the property that makes the min

@@ -10,7 +10,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * its summed task time / cores is scheduling/latency-bound (too many
   * sequential jobs — eager checkpoints, unrolled iterations), not
   * compute-bound; that distinction picks the optimization (fewer jobs
-  * vs cheaper operators). Diagnostic only — never feeds an artifact.
+  * vs cheaper operators). An optional third argument applies
+  * session-conf overrides (`spark.conf.set`, e.g. AQE off or a
+  * plan-string cap) to measure what a config change does to a query
+  * without touching BenchProtocol. Diagnostic only — never feeds an
+  * artifact.
+  *
+  * Usage: runMain graft.tools.JobProfile <keys,csv> [sfDir] [k=v[,k=v...]]
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -19,6 +25,11 @@ object JobProfile {
     val spark = graft.BenchProtocol.session(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.length > 2) args(2).split(",").foreach { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"conf override must be k=v, got '$kv'")
+      spark.conf.set(kv.take(i), kv.drop(i + 1))
+    }
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
@@ -37,10 +48,10 @@ object JobProfile {
     names.foreach { n =>
       // warm pass at the smallest sf (codegen/JIT), uncounted
       try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+      catch { case t: Throwable => Console.err.println(s"[jobprofile] warm-up of '$n' failed: $t") }
       Thread.sleep(300) // let listener drain
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
-      val dt = graft.BenchProtocol.timeOnce(spark, graft.SparkEntry.queries(n), d)
+      val dt = graft.BenchProtocol.timeOnce(spark, n, graft.SparkEntry.queries(n), d)
       Thread.sleep(500) // listener events are async
       println(f"JOBPROFILE $n wall=$dt%.3f s jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} taskTime=${taskMs.get / 1000.0}%.2f s")
     }

@@ -62,7 +62,7 @@ object PlaneDial {
 
     def once(dir: String, planes: Int, bits: Int): Double =
       // shared timing protocol; the consuming count() rides inside
-      graft.BenchProtocol.timeOnce(spark, (s, dd) =>
+      graft.BenchProtocol.timeOnce(spark, s"ann planes=$planes bits=$bits", (s, dd) =>
         graft.engine.VectorOps.classifyAnnBatch(s, idxPaths((dd, planes)),
           emb(dd).filter(col("vec_id") % 2 === 1), nPlanes = planes,
           dim = 64, probeBits = bits)

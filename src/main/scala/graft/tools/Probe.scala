@@ -1,14 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev-only smoke probe: mirrors the driver's t1 check (entry rows>0). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false").getOrCreate()
+    val spark = graft.BenchProtocol.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     println("ENTRY_ROWS=" + graft.SparkEntry.entry(spark).count())
     spark.stop()

@@ -102,7 +102,7 @@ object ScaleCliff {
       try qs(k)(spark, warm).count() catch { case _: Throwable => () }
     }
     def once(k: String, dir: String): Double =
-      graft.BenchProtocol.timeOnce(spark, qs(k), dir)
+      graft.BenchProtocol.timeOnce(spark, k, qs(k), dir)
     def ms(v: Double): String =
       java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // min over TWO FULL PASSES on BOTH sides (the Bench protocol —

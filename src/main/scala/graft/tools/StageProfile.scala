@@ -27,7 +27,7 @@ object StageProfile {
       catch { case _: Throwable => () }
       Thread.sleep(300)
       stages.synchronized(stages.clear())
-      val dt = graft.BenchProtocol.timeOnce(spark, graft.SparkEntry.queries(n), d)
+      val dt = graft.BenchProtocol.timeOnce(spark, n, graft.SparkEntry.queries(n), d)
       Thread.sleep(500)
       println(f"STAGEPROFILE $n wall=$dt%.3f s nstages=${stages.size}")
       stages.synchronized {

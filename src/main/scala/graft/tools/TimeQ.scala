@@ -13,7 +13,7 @@ object TimeQ {
     names.foreach { n =>  // warm + N timed, report each + min
       graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
       val ts = (1 to reps).map { i =>
-        val dt = graft.BenchProtocol.timeOnce(spark,
+        val dt = graft.BenchProtocol.timeOnce(spark, n,
           graft.SparkEntry.queries(n), d)
         println(f"TIMEQ $n run$i $dt%.3f s")
         dt

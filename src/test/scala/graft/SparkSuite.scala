@@ -3,22 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session config for all suites: one lazy SparkSession per
-  * suite, tuned for local test scale (4 threads, 4 shuffle
-  * partitions), UTC, nanos flag for the events fixture. */
+/** Shared session for all suites: the bench recipe
+  * (`BenchProtocol.session`) at local test scale — 4 threads, 4
+  * shuffle partitions — so specs run the engine Bench and Verify run,
+  * graft function library included. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // fixtures write timestamps as µs-without-timezone; read them as
-    // session-TZ (UTC) timestamps, not TIMESTAMP_NTZ, so time funcs
-    // (unix_micros, window, watermarks) apply uniformly
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = BenchProtocol.session("4")
 
   val sf = "/root/testdata/sf0.001"
 }

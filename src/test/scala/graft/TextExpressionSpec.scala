@@ -177,34 +177,59 @@ class TextExpressionSpec extends SparkSuite {
     assert(empty.isEmpty)
   }
 
+  /** Runs `body` with the given session confs, restoring the prior values. */
+  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("graft_md5_simhash56 equals the 56-pass HOF bit-majority fold") {
     VectorExpressions.register(spark)
-    // extra rows force tie (2*count == n) and single-token edges; the
-    // split of "" yields [""], exercising md5 of the empty token
-    val corpus = docs.union(Seq(
-      (6L, "x y"),          // 2 tokens: every disagreeing bit ties → set
-      (7L, "same same same")
-    ).toDF("doc_id", "text"))
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("tk"))
-    val viaNative = corpus
-      .select(col("doc_id"),
-        call_function("graft_md5_simhash56", col("tk")).as("fp"))
-      .as[(Long, Long)].collect().toMap
-    val viaHof = corpus
-      .select(col("doc_id"), expr(
-        "transform(tk, w -> CAST(conv(substring(md5(w), 1, 14), 16, 10) AS BIGINT))")
-        .as("hs"))
-      .select(col("doc_id"), expr(
-        "aggregate(sequence(0, 55), CAST(0 AS BIGINT), (acc, b) -> acc + " +
-          "IF(2 * size(filter(hs, h -> (shiftright(h, b) & 1) = 1)) >= size(hs), " +
-          "shiftleft(CAST(1 AS BIGINT), b), CAST(0 AS BIGINT)))").as("fp"))
-      .as[(Long, Long)].collect().toMap
-    assert(viaNative == viaHof, s"native $viaNative vs hof $viaHof")
-    // empty array: 0 >= 0 sets every bit, matching the HOF fold
-    val empty = spark.sql(
-      "SELECT graft_md5_simhash56(CAST(array() AS array<string>)) AS fp")
-      .as[Long].head()
-    assert(empty == (1L << 56) - 1)
+    // generated code (ConvertToLocalRelation excluded, so the fixture's
+    // projection is compiled instead of folded on the driver) and
+    // interpreted eval
+    Seq(
+      Seq("spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"),
+      Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")
+    ).foreach(confs => withConfs(confs: _*) {
+      // extra rows force tie (2*count == n) and single-token edges; the
+      // split of "" yields [""], exercising md5 of the empty token
+      val corpus = docs.union(Seq(
+        (6L, "x y"),          // 2 tokens: every disagreeing bit ties → set
+        (7L, "same same same")
+      ).toDF("doc_id", "text"))
+        .select(col("doc_id"), split(trim(col("text")), "\\s+").as("tk"))
+        // a null element adds no bit votes but counts in n (the HOF's
+        // filter drops a null hash, its size counts it)
+        .union(Seq[(Long, Seq[String])](
+          (8L, Seq("a", null, "b")),
+          (9L, Seq("x", null)),
+          (10L, Seq(null, null))
+        ).toDF("doc_id", "tk"))
+      val viaNative = corpus
+        .select(col("doc_id"),
+          call_function("graft_md5_simhash56", col("tk")).as("fp"))
+        .as[(Long, Long)].collect().toMap
+      val viaHof = corpus
+        .select(col("doc_id"), expr(
+          "transform(tk, w -> CAST(conv(substring(md5(w), 1, 14), 16, 10) AS BIGINT))")
+          .as("hs"))
+        .select(col("doc_id"), expr(
+          "aggregate(sequence(0, 55), CAST(0 AS BIGINT), (acc, b) -> acc + " +
+            "IF(2 * size(filter(hs, h -> (shiftright(h, b) & 1) = 1)) >= size(hs), " +
+            "shiftleft(CAST(1 AS BIGINT), b), CAST(0 AS BIGINT)))").as("fp"))
+        .as[(Long, Long)].collect().toMap
+      assert(viaNative == viaHof, s"native $viaNative vs hof $viaHof")
+      // empty array: 0 >= 0 sets every bit, matching the HOF fold
+      val empty = spark.sql(
+        "SELECT graft_md5_simhash56(CAST(array() AS array<string>)) AS fp")
+        .as[Long].head()
+      assert(empty == (1L << 56) - 1)
+    })
   }
 
   test("graft_jaro_winkler matches the standard (= DuckDB-pinned) values") {
