@@ -6,7 +6,6 @@ object Bench {
     // session/calibration/prep/timing all come from BenchProtocol —
     // the ONE definition every timing artifact shares
     val spark = BenchProtocol.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     // untimed warm-up: the first action in a fresh session pays several
     // seconds of one-time initialization (whole-stage-codegen compiler,
     // shuffle machinery, parquet reader pools, broadcast threads) that
@@ -25,14 +24,7 @@ object Bench {
       a.groupBy("g").count().count()
       a.join(broadcast(spark.range(10).toDF("g")), "g").count()
       a.repartition(2, col("g")).sortWithinPartitions("id").count()
-      val warmDir = new java.io.File(sfDir).getParent + "/sf0.001"
-      if (new java.io.File(warmDir).isDirectory)
-        SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-          try fn(spark, warmDir).count() catch {
-            case t: Throwable =>
-              Console.err.println(s"[bench] warm-up of '$name' on $warmDir failed: $t")
-          }
-        }
+      BenchProtocol.warmUp(spark, SparkEntry.queries.keys.toSeq.sorted, sfDir)
       // table prep at the TARGET sf: the partitioned copy is written
       // once per dataset (like laying out a table at scale), so the
       // timed q_partition_prune below measures the pruned scan, not

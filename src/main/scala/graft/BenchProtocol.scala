@@ -42,9 +42,10 @@ object BenchProtocol {
     *
     * This is the ONE session recipe: Bench, Verify, the test suites
     * and every tool build through it, so the verified engine is the
-    * benched engine. It ends by installing the graft function library
-    * and optimizer rules (idempotent, so a `getOrCreate` that returns
-    * an existing session is safe); operators never register them. */
+    * benched engine. It logs at WARN (a caller wanting ERROR sets it
+    * after) and ends by installing the graft function library and
+    * optimizer rules (idempotent, so a `getOrCreate` that returns an
+    * existing session is safe); operators never register them. */
   def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -56,6 +57,7 @@ object BenchProtocol {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.ui.explainMode", "simple")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     graft.expressions.VectorExpressions.register(spark)
     spark
   }
@@ -80,6 +82,23 @@ object BenchProtocol {
   def calibrate(spark: SparkSession): Double = {
     calibrateOnce(spark)
     (1 to 3).map(_ => calibrateOnce(spark)).min
+  }
+
+  /** Untimed warm-up: runs each of `keys` once on the `sf0.001`
+    * fixture beside `sfDir` (skipped when that dir is absent), so the
+    * timed runs at `sfDir` find the codegen cache and the JIT warm —
+    * plans are identical across scale factors. A failed key is
+    * reported on stderr, naming the key, the dir and the cause, and the
+    * rest still warm. */
+  def warmUp(spark: SparkSession, keys: Seq[String], sfDir: String): Unit = {
+    val warmDir = new java.io.File(sfDir).getParent + "/sf0.001"
+    if (new java.io.File(warmDir).isDirectory)
+      keys.foreach { k =>
+        try SparkEntry.queries(k)(spark, warmDir).count() catch {
+          case t: Throwable =>
+            Console.err.println(s"[bench] warm-up of '$k' on $warmDir failed: $t")
+        }
+      }
   }
 
   /** One-time table prep at the target sf (partitioned/ORC/bucketed

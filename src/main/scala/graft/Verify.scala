@@ -8,7 +8,6 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the bench recipe, so the verified engine is the benched engine
     val spark = BenchProtocol.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (driver never sets it): run only matching keys.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)

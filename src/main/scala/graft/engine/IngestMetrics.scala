@@ -3,17 +3,14 @@ package graft.engine
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.DataFrame
-
 /** Per-topic ingest-outcome counters for the streaming SemDeDup door —
   * the reference's per-stream drop/ingest counter family
   * (`roar_stream_records_dropped` etc., pkg/metrics.go:20-52) applied
   * to what OUR door decides: how many documents/vectors each topic's
-  * ingest stream admitted vs classified as duplicates. Fed by
-  * [[TextOps.startNeardupIngest]] (from its driver-side verdicts) /
-  * [[VectorOps.startAnnIngest]] (from a one-job status [[rollup]] of
-  * its checkpointed classification frame) per epoch; served through
-  * [[MetricsHttpServer]]'s `/metrics` exposition.
+  * ingest stream admitted vs classified as duplicates. Fed per epoch
+  * by [[IngestDoor]] from the door's driver-side verdict counts (both
+  * the near-dup and the ANN epoch classify on the driver); served
+  * through [[MetricsHttpServer]]'s `/metrics` exposition.
   *
   * Statuses are normalized to an operational vocabulary: the text
   * door's `unique` and the vector door's `new` both count as
@@ -37,24 +34,6 @@ object IngestMetrics {
       .addAndGet(n)
     ()
   }
-
-  /** Row counts per value of `keyed`'s single string column (null
-    * keys skipped), in ONE Spark job: each partition counts its rows
-    * and the driver merges the ≤ a-few-entry maps. The ANN door's
-    * epoch rollup over its locally checkpointed verdict frame — a
-    * `groupBy` would plan an exchange job plus a result job, and the
-    * door needs the same counts for its metrics, its delta write and
-    * its callback guard. */
-  private[graft] def rollup(keyed: DataFrame): Map[String, Long] =
-    keyed.rdd.mapPartitions { rows =>
-      val m = scala.collection.mutable.HashMap.empty[String, Long]
-      rows.foreach { r =>
-        if (!r.isNullAt(0)) m(r.getString(0)) = m.getOrElse(r.getString(0), 0L) + 1L
-      }
-      Iterator.single(m.toMap)
-    }.collect().foldLeft(Map.empty[String, Long]) { (acc, part) =>
-      part.foldLeft(acc) { case (a, (k, n)) => a.updated(k, a.getOrElse(k, 0L) + n) }
-    }
 
   /** One epoch's outcome: `statusCounts` is the epoch's verdict rows
     * per status, as the door counted them (no Spark work here). Every

@@ -1287,7 +1287,7 @@ object MultimodalOps {
     val qLit = array(q.map(lit): _*)
     feats.filter(col("asset_id") =!= 0)
       .select(col("asset_id"),
-        round(VectorOps.nativeCosine(s, col("features"), qLit), 6).as("cos_sim"))
+        round(VectorOps.nativeCosine(col("features"), qLit), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("asset_id").asc)
       .limit(k)
   }

@@ -48,9 +48,7 @@ private[graft] object StagedPaths {
 }
 
 /** Per-epoch delta directories for a staged ingest index — the
-  * replay-idempotence machinery shared by the text and vector
-  * streaming-ingest compositions ([[TextOps.startNeardupIngest]] /
-  * [[VectorOps.startAnnIngest]]).
+  * replay-idempotence machinery of the ingest doors ([[IngestDoor]]).
   *
   * Spark's `foreachBatch` is at-least-once: an epoch can replay after
   * a crash between its side effects and the offset commit. Growing
@@ -347,8 +345,7 @@ private[graft] object DeltaIndex {
     }.getOrElse(Seq.empty)
 
   /** Fold the live deltas of epochs `< belowEpoch` into the base — the
-    * periodic LSM-style maintenance [[graft.engine.TextOps.startNeardupIngest]] /
-    * [[graft.engine.VectorOps.startAnnIngest]] schedule between
+    * periodic LSM-style maintenance [[IngestDoor]] schedules between
     * micro-batches (per-epoch read cost and plan depth grow with the
     * OUTSTANDING delta count, so compaction bounds both), and — with
     * the default belowEpoch = fold EVERYTHING — the mandatory step
@@ -359,10 +356,10 @@ private[graft] object DeltaIndex {
     * MID-STREAM SAFETY: folding an epoch's delta into the base is only
     * replay-safe once that epoch can never re-run. foreachBatch(N)
     * runs strictly after epoch N-1's offsets committed, so a stream
-    * compacting with `belowEpoch = currentEpoch` at the top of its
-    * epoch folds exactly the never-again-replayed set — a stale
-    * `e<current>` from a crashed prior attempt is left alone for the
-    * replay to overwrite.
+    * compacting with `belowEpoch = currentEpoch` inside its epoch
+    * folds exactly the never-again-replayed set — the current epoch's
+    * own delta (fresh, or stale from a crashed prior attempt) is left
+    * alone for a replay to overwrite.
     *
     * CRASH-ATOMIC via a commit marker (the 'exactly one copy' contract
     * survives a crash at any step), all under the per-index lock:
@@ -515,9 +512,9 @@ private[graft] object DeltaIndex {
     publishCompact(s, indexPath, newN, lines.tail)
   }
 
-  /** Compact from inside a running stream's epoch N when the
-    * committed (< N) live delta count reached `every` — the
-    * cleanupLoop discipline, bounded so a long-lived stream's
+  /** Compact from inside a running stream's epoch N — [[IngestDoor]]
+    * calls it after the epoch's callback — when the committed (< N)
+    * live delta count reached `every`: the cleanupLoop discipline, bounded so a long-lived stream's
     * per-probe plan depth never exceeds `every` delta reads plus the
     * base. */
   def maybeCompact(s: SparkSession, indexPath: String, epochId: Long,
@@ -653,8 +650,8 @@ private[graft] object IndexLayout {
   * per-checkpoint — two concurrent streams sharing one `indexPath`
   * under different checkpoints would both write `_delta/e<n>` and
   * destroy each other's admissions (and race each other's
-  * compactions). `startNeardupIngest`/`startAnnIngest` therefore
-  * ACQUIRE the index before starting and the second concurrent writer
+  * compactions). [[IngestDoor.start]] therefore ACQUIRES the index
+  * before starting, and the second concurrent writer
   * is rejected loudly, naming both checkpoints. A STOPPED stream's
   * claim is reclaimable (acquire steals from an inactive query), so
   * the documented sequential-reuse flow — stop, then start under a
@@ -720,22 +717,116 @@ private[graft] object IngestWriters {
   }
 }
 
-/** The TTL × resume recovery recipe as ONE call (the operational
-  * answer to the loud `load()` failure the expiry contract raises —
-  * see [[graft.sources.GraftStoreProvider]]): after a topic
-  * idle-expires, its data AND schema are gone and a restart against
-  * the old checkpoint can never realign (recreation restarts the
-  * offset axis at 0). The documented recipe — re-ingest the topic,
-  * fresh checkpoint, compact-first, restart — is what
-  * `TextOps.resumeNeardupIngestAfterExpiry` /
-  * `VectorOps.resumeAnnIngestAfterExpiry` execute; this validator
-  * turns each precondition violation into an actionable error instead
-  * of the generic downstream failure it would otherwise become. */
-private[graft] object IngestRecovery {
-  import org.apache.spark.sql.SparkSession
+/** The ONE ingest-door lifecycle, shared by the near-dup door
+  * ([[TextOps.startNeardupIngest]]) and the ANN door
+  * ([[VectorOps.startAnnIngest]]) — the reference's single ingest loop
+  * (consumer flush → manager append → downstream consumer,
+  * kafka/consumer.go:307-410 → stream/manager.go:277-343). One
+  * StreamingQuery subscribes to a store topic through the DSv2
+  * MicroBatchStream, `maxBatchesPerTrigger` admission control bounds
+  * each epoch, and every epoch runs the door's [[Epoch]] function: probe
+  * the staged index, admit, and grow the index by the admitted rows
+  * (per-epoch delta dirs, replay-idempotent — see [[DeltaIndex]]), so
+  * later epochs see them as existing. The doors differ only in that
+  * function. [[start]], in order:
+  *   1. claims the index for ONE live writer ([[IngestWriters]]): a
+  *      second concurrent stream would overwrite this one's
+  *      `_delta/e<n>` admissions, so it is rejected before any state is
+  *      touched;
+  *   2. on a FRESH checkpoint (Spark restarts epoch ids at 0) folds a
+  *      previous run's deltas into the base, which would otherwise be
+  *      overwritten epoch by epoch; a RESUMING checkpoint keeps its
+  *      deltas — the replay-idempotence contract needs them;
+  *   3. resolves the index layout, so no epoch pays a schema-discovery
+  *      job;
+  *   4. reads the topic with admission control;
+  *   5. per epoch: the epoch function, the per-topic counters, `onEpoch`
+  *      when the epoch classified any row, then the fold;
+  *   6. binds the started query to its claim — a failed start releases
+  *      it.
+  *
+  * The epoch runs even when its batch drained EMPTY (offsets evicted
+  * between attempts): an empty epoch CLEARS any stale delta its first
+  * attempt wrote, which would otherwise haunt the index for rows never
+  * reported. Eviction under the store's byte budget surfaces as missing
+  * offsets: evicted batches are never classified (drop-oldest loses
+  * data by reference contract).
+  *
+  * LONG-LIVED operation: every probe unions the base with each
+  * outstanding delta, so the stream folds them ([[DeltaIndex.compact]])
+  * once the COMMITTED (epoch < current) delta count reaches
+  * `compactEvery` — the reference's periodic cleanupLoop
+  * (stream/manager.go:116-124), bounding per-epoch plan depth at
+  * `compactEvery` delta reads however long the stream runs. Committed
+  * epochs never replay (foreachBatch(N) runs only after N-1's offsets
+  * committed), so folding them is replay-safe; the current epoch's own
+  * (possibly stale) delta is never folded. The fold runs at the END of
+  * epoch N, after `onEpoch`, over the same `< N` set: the callback is
+  * not held up by it, and it lands before epoch N+1 reads the index.
+  * `compactEvery <= 0` disables mid-stream compaction. */
+private[graft] object IngestDoor {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.streaming.StreamingQuery
 
-  def validateResume(s: SparkSession, storeName: String, topic: String,
-                     freshCheckpointDir: String): Unit = {
+  /** One door epoch: (session, epoch id, the store batch) → the
+    * epoch's per-row verdicts, driver-local and bounded by the epoch,
+    * and its verdict count per status. The function projects the
+    * batch columns it reads. */
+  type Epoch = (SparkSession, Long, DataFrame) => (DataFrame, Map[String, Long])
+
+  def start(s: SparkSession, storeName: String, topic: String,
+            indexPath: String, maxBatchesPerTrigger: Long,
+            checkpointDir: String, onEpoch: (Long, DataFrame) => Unit,
+            compactEvery: Int)(epoch: Epoch): StreamingQuery = {
+    IngestWriters.acquire(indexPath, checkpointDir)
+    val q = try {
+      if (!DeltaIndex.resumesCheckpoint(s, checkpointDir))
+        DeltaIndex.compact(s, indexPath)
+      DeltaIndex.resolveLayout(s, indexPath)
+      s.readStream.format("graft-store")
+        .option("store", storeName).option("topic", topic)
+        .option("maxBatchesPerTrigger", maxBatchesPerTrigger.toString)
+        .load()
+        .writeStream
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, epochId: Long) =>
+          val sess = batch.sparkSession
+          val (verdicts, counts) = epoch(sess, epochId, batch)
+          // per-topic admitted/dup counters (the reference's per-stream
+          // metric family), from the epoch's own verdicts
+          IngestMetrics.recordEpoch(topic, counts)
+          if (counts.nonEmpty) onEpoch(epochId, verdicts)
+          DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery)
+          ()
+        }
+        .start()
+    } catch { case t: Throwable => IngestWriters.release(indexPath); throw t }
+    IngestWriters.bind(indexPath, q)
+    q
+  }
+
+  /** The TTL × resume recovery recipe as ONE call (the operational
+    * answer to the loud `load()` failure the expiry contract raises —
+    * see [[graft.sources.GraftStoreProvider]]): after a topic
+    * idle-expires, its data AND schema are gone and a restart against
+    * the old checkpoint can never realign (recreation restarts the
+    * offset axis at 0). Once the caller has re-appended the topic
+    * (create-on-access), [[start]] under a FRESH checkpoint: its
+    * compact-first folds the previous run's deltas, so every prior
+    * admission survives into the new run's index base. Each violated
+    * precondition fails with an actionable error instead of the
+    * generic downstream failure it would otherwise become. */
+  def resume(s: SparkSession, storeName: String, topic: String,
+             indexPath: String, maxBatchesPerTrigger: Long,
+             freshCheckpointDir: String, onEpoch: (Long, DataFrame) => Unit,
+             compactEvery: Int)(epoch: Epoch): StreamingQuery = {
+    validateResume(s, storeName, topic, freshCheckpointDir)
+    start(s, storeName, topic, indexPath, maxBatchesPerTrigger,
+      freshCheckpointDir, onEpoch, compactEvery)(epoch)
+  }
+
+  private def validateResume(s: SparkSession, storeName: String, topic: String,
+                             freshCheckpointDir: String): Unit = {
     val store = graft.sources.GraftStoreRegistry.get(storeName)
     if (store.schemaOf(topic).isEmpty)
       throw new IllegalStateException(

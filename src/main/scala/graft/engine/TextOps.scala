@@ -3079,33 +3079,11 @@ object TextOps {
   /** The most recent ingest epoch's probe plan, for spec assertions. */
   private[graft] val lastEpochPlan = new EpochPlan
 
-  /** The REAL runtime composition of the streaming-ingest pieces (the
-    * reference's shape: consumer flush → manager append → downstream
-    * consumer, kafka/consumer.go:307-410 → stream/manager.go:277-343):
-    * one StreamingQuery SUBSCRIBES to a store topic through the DSv2
-    * MicroBatchStream, `maxBatchesPerTrigger` admission control bounds
-    * each epoch, and every epoch runs [[neardupIngestEpoch]] — probe
-    * the staged banded index, admit, grow the index by the admitted
-    * docs' bands (per-epoch delta dirs, replay-idempotent), so later
-    * epochs see them as existing — the SemDeDup-at-the-door contract.
-    * Eviction under the store's byte budget surfaces as missing
-    * offsets: evicted batches are simply never classified (drop-oldest
-    * loses data by reference contract).
-    *
-    * LONG-LIVED operation: every probe unions the base with each
-    * outstanding delta, so the stream itself schedules
-    * [[DeltaIndex.compact]] between micro-batches — once the COMMITTED
-    * (epoch < current) delta count reaches `compactEvery`, they fold
-    * into the base (the reference's periodic cleanupLoop discipline,
-    * stream/manager.go:116-124), bounding per-epoch plan depth at
-    * `compactEvery` delta reads regardless of how many epochs the
-    * stream has run. Committed epochs never replay (foreachBatch(N)
-    * runs only after N-1's offsets committed), so folding them is
-    * replay-safe; the current epoch's own (possibly stale) delta is
-    * never folded. The fold runs at the END of epoch N, after
-    * `onEpoch`, over the same `< N` set: the callback is not held up
-    * by it, and it lands before epoch N+1 reads the index.
-    * `compactEvery <= 0` disables mid-stream compaction.
+  /** The near-dup ingest door ([[IngestDoor]]): a stream over a store
+    * topic of (doc_id, text) whose every epoch runs
+    * [[neardupIngestEpoch]] — probe the staged banded index, admit, and
+    * grow the index by the admitted docs' bands, so later epochs see
+    * them as existing: the SemDeDup-at-the-door contract.
     *
     * `onEpoch` receives (epochId, classified) per non-empty epoch;
     * the classified frame — one (doc_id, status) row per input row —
@@ -3118,58 +3096,14 @@ object TextOps {
                          onEpoch: (Long, DataFrame) => Unit,
                          compactEvery: Int = 8,
                          bandBuckets: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // Fresh checkpoint = Spark restarts epoch ids at 0; an uncompacted
-    // delta namespace from a PREVIOUS run would be overwritten epoch by
-    // epoch (silent index data loss). Folding the deltas into the base
-    // first preserves every prior admission and hands the new run an
-    // empty namespace. A RESUMING checkpoint keeps its deltas — the
-    // replay-idempotence contract needs them.
-    // one live writer per index (IngestWriters): a second concurrent
-    // stream would overwrite this stream's _delta/e<n> admissions —
-    // rejected loudly before any state is touched
-    IngestWriters.acquire(indexPath, checkpointDir)
-    val q = try {
-      if (!DeltaIndex.resumesCheckpoint(s, checkpointDir))
-        DeltaIndex.compact(s, indexPath)
-      DeltaIndex.resolveLayout(s, indexPath)
-      s.readStream.format("graft-store")
-        .option("store", storeName).option("topic", topic)
-        .option("maxBatchesPerTrigger", maxBatchesPerTrigger.toString)
-        .load()
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, epochId: Long) =>
-          // the epoch runs even when the batch drained EMPTY (offsets
-          // evicted between attempts): an empty epoch CLEARS any stale
-          // delta its first attempt wrote — otherwise those admissions
-          // would haunt the index for docs that were never reported
-          val sess = batch.sparkSession
-          // the epoch collects the batch in its banding pass: the source
-          // is read once, and every verdict comes from that one copy
-          val (classified, counts) = neardupEpoch(sess, indexPath, epochId,
-            batch.select("doc_id", "text"), bandBuckets)
-          // per-topic admitted/dup counters (reference's per-stream
-          // metric family), from the epoch's own verdicts
-          IngestMetrics.recordEpoch(topic, counts)
-          if (counts.nonEmpty) onEpoch(epochId, classified)
-          DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery)
-          ()
-        }
-        .start()
-    } catch { case t: Throwable => IngestWriters.release(indexPath); throw t }
-    IngestWriters.bind(indexPath, q)
-    q
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    IngestDoor.start(s, storeName, topic, indexPath, maxBatchesPerTrigger,
+      checkpointDir, onEpoch, compactEvery)(neardupDoorEpoch(indexPath, bandBuckets))
 
-  /** The TTL-expiry recovery recipe as one call (see
-    * [[graft.engine.IngestRecovery]] and the ANN mirror
-    * [[VectorOps.resumeAnnIngestAfterExpiry]]): after the topic
-    * idle-expired and the caller re-appended its data
-    * (create-on-access), restart the near-dup door under a FRESH
-    * checkpoint — the start's compact-first folds the previous run's
-    * deltas, so every prior admission survives into the new run's
-    * index base. Preconditions are validated with actionable errors. */
+  /** The TTL-expiry recovery recipe ([[IngestDoor.resume]]) for the
+    * near-dup door: after the topic idle-expired and the caller
+    * re-appended its data, restart the door under a FRESH checkpoint
+    * with every prior admission kept. */
   def resumeNeardupIngestAfterExpiry(s: SparkSession, storeName: String,
                                      topic: String, indexPath: String,
                                      maxBatchesPerTrigger: Long,
@@ -3177,11 +3111,16 @@ object TextOps {
                                      onEpoch: (Long, DataFrame) => Unit,
                                      compactEvery: Int = 8,
                                      bandBuckets: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    IngestRecovery.validateResume(s, storeName, topic, freshCheckpointDir)
-    startNeardupIngest(s, storeName, topic, indexPath, maxBatchesPerTrigger,
-      freshCheckpointDir, onEpoch, compactEvery, bandBuckets)
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    IngestDoor.resume(s, storeName, topic, indexPath, maxBatchesPerTrigger,
+      freshCheckpointDir, onEpoch, compactEvery)(neardupDoorEpoch(indexPath, bandBuckets))
+
+  /** The door's epoch: [[neardupEpoch]] over the batch's (doc_id, text)
+    * — it collects the batch in its banding pass, so the source is read
+    * once and every verdict comes from that one copy. */
+  private def neardupDoorEpoch(indexPath: String, bandBuckets: Int): IngestDoor.Epoch =
+    (sess, epochId, batch) =>
+      neardupEpoch(sess, indexPath, epochId, batch.select("doc_id", "text"), bandBuckets)
 
   /** Blocklist dictionary for [[qBlocklistScan]]. Every term is
     * BORDERLESS (no proper prefix equals a suffix), so occurrences of

@@ -42,7 +42,7 @@ object VectorOps {
     * composition (which materializes a zip_with array per row).
     * Requires array<float> inputs and a session carrying the graft
     * function library (`BenchProtocol.session` or `GraftExtensions`). */
-  def nativeCosine(s: SparkSession, a: Column, b: Column): Column =
+  def nativeCosine(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
 
   /** Deterministic random hyperplanes for sign-LSH: nPlanes × dim. */
@@ -72,7 +72,7 @@ object VectorOps {
     val qLit = array(q.map(lit): _*) // array<float> literal
     emb.filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("label"),
-        round(nativeCosine(s, col("embedding"), qLit), 6).as("cos_sim"))
+        round(nativeCosine(col("embedding"), qLit), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id").asc)
       .limit(k)
   }
@@ -115,7 +115,7 @@ object VectorOps {
     queries.join(indexed, Seq("bucket"))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
-        round(nativeCosine(s, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(nativeCosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("q_id")
           .orderBy(col("cos_sim").desc, col("vec_id").asc)).cast("long"))
@@ -134,7 +134,6 @@ object VectorOps {
     * duration of the loop (each iteration re-reads it) and released
     * before returning. Deterministic seeded init (first k vec_ids). */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): Seq[Seq[Float]] = {
-    val spark = emb.sparkSession
     val pinned = emb.select("vec_id", "embedding").cache()
     try {
       var centroids: Seq[Seq[Float]] = pinned
@@ -143,7 +142,7 @@ object VectorOps {
         .map(_.getSeq[Float](0).toSeq).toSeq
       for (_ <- 0 until iters) {
         val means = pinned
-          .withColumn("cluster", nearestCentroid(spark, centroids))
+          .withColumn("cluster", nearestCentroid(centroids))
           .groupBy("cluster")
           .agg(call_function("graft_vector_avg", col("embedding")).as("m"))
           .collect()
@@ -203,10 +202,10 @@ object VectorOps {
   }
 
   /** Argmax-cosine cluster assignment against centroid literals. */
-  def nearestCentroid(s: SparkSession, centroids: Seq[Seq[Float]]): Column = {
+  def nearestCentroid(centroids: Seq[Seq[Float]]): Column = {
     val scored = centroids.zipWithIndex.map { case (c, i) =>
       struct(
-        nativeCosine(s, col("embedding"), array(c.map(lit): _*)).as("score"),
+        nativeCosine(col("embedding"), array(c.map(lit): _*)).as("score"),
         lit(i).as("idx"))
     }
     array_max(array(scored: _*)).getField("idx")
@@ -408,7 +407,7 @@ object VectorOps {
       // native codegen'd cosine: the per-candidate inner loop — one
       // primitive float pass, no per-pair array allocation
       .withColumn("cos_sim", round(
-        nativeCosine(s, col("emb_a"), col("emb_b")), 6))
+        nativeCosine(col("emb_a"), col("emb_b")), 6))
       .filter(col("cos_sim") >= threshold)
       .select("id_a", "id_b", "cos_sim")
       .orderBy("id_a", "id_b")
@@ -432,7 +431,7 @@ object VectorOps {
       .partitionBy("vec_id")
       .orderBy(col("sim").desc, col("centroid_id").asc)
     emb.crossJoin(broadcast(cents))
-      .withColumn("sim", nativeCosine(s, col("embedding"), col("cvec")))
+      .withColumn("sim", nativeCosine(col("embedding"), col("cvec")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("centroid_id"), round(col("sim"), 4).as("sim"))
@@ -728,7 +727,7 @@ object VectorOps {
       .select(col("vec_id").as("vq"), col("embedding").as("qv"))
     val vecr = emb.join(broadcast(qe), col("vec_id") =!= col("vq"))
       .select(col("vq"), col("vec_id").as("vcand"),
-        round(nativeCosine(s, col("qv"), col("embedding")), 6).as("cos"))
+        round(nativeCosine(col("qv"), col("embedding")), 6).as("cos"))
       .withColumn("r", row_number().over(
         W.partitionBy("vq").orderBy(col("cos").desc, col("vcand"))))
       .filter(col("r") <= k)
@@ -788,7 +787,7 @@ object VectorOps {
       .partitionBy("vec_id")
       .orderBy(col("sim").desc, col("centroid_id").asc)
     val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("sim", nativeCosine(s, col("embedding"), col("cvec")))
+      .withColumn("sim", nativeCosine(col("embedding"), col("cvec")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("centroid_id").as("cluster"), col("embedding"))
@@ -799,7 +798,7 @@ object VectorOps {
     val evict = hi.join(lo, "cluster")
       .filter(col("lo_id") < col("vec_id"))
       .select(col("vec_id"),
-        round(nativeCosine(s, col("lo_emb"), col("hi_emb")), 6).as("cos"))
+        round(nativeCosine(col("lo_emb"), col("hi_emb")), 6).as("cos"))
       .groupBy("vec_id")
       .agg(max("cos").as("max_lower_cos"))
     assigned.select("vec_id", "cluster")
@@ -898,7 +897,7 @@ object VectorOps {
       .partitionBy("vec_id")
       .orderBy(col("sim").desc, col("centroid_id").asc)
     val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("sim", nativeCosine(s, col("embedding"), col("cvec")))
+      .withColumn("sim", nativeCosine(col("embedding"), col("cvec")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
     val updated = assigned
@@ -974,7 +973,7 @@ object VectorOps {
       .orderBy(col("sim").desc, col("cid"))
     val nn = q.join(c, col("cid") =!= col("qid"))
       .select(col("qid"), col("qlabel"), col("cid"), col("clabel"),
-        round(nativeCosine(s, col("qv"), col("cv")), 6).as("sim"))
+        round(nativeCosine(col("qv"), col("cv")), 6).as("sim"))
       .withColumn("rn", row_number().over(wNn))
       .filter(col("rn") <= k)
     val wVote = org.apache.spark.sql.expressions.Window
@@ -1035,7 +1034,7 @@ object VectorOps {
     val exact = corpus.crossJoin(broadcast(queries))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
-        round(nativeCosine(s, col("q_emb"), col("embedding")), 6).as("cos_sim"))
+        round(nativeCosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("q_id")
           .orderBy(col("cos_sim").desc, col("vec_id").asc)))
@@ -1134,10 +1133,9 @@ object VectorOps {
     val scored = corpus.crossJoin(broadcast(probes))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("dim"), col("vec_id"),
-        round(nativeCosine(s, col("q_emb"), col("embedding")), 6)
+        round(nativeCosine(col("q_emb"), col("embedding")), 6)
           .as("full_sim"),
-        round(nativeCosine(s,
-          slice(col("q_emb"), lit(1), col("dim")),
+        round(nativeCosine(slice(col("q_emb"), lit(1), col("dim")),
           slice(col("embedding"), lit(1), col("dim"))), 6)
           .as("trunc_sim"))
     val wFull = Window.partitionBy("q_id", "dim")
@@ -1236,7 +1234,7 @@ object VectorOps {
     val cands = corpus.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(nativeCosine(s, col("q_emb"), col("embedding")), 6).as("cos"))
+        round(nativeCosine(col("q_emb"), col("embedding")), 6).as("cos"))
       .withColumn("rn", row_number().over(Window.partitionBy("q_id")
         .orderBy(col("cos").desc, col("vec_id").asc)))
       .filter(col("rn") <= 8)
@@ -1248,7 +1246,7 @@ object VectorOps {
       .join(withEmb.as("b"), Seq("q_id"))
       .filter(col("a.vec_id") =!= col("b.vec_id"))
       .select(col("q_id"), col("a.vec_id").as("ca"), col("b.vec_id").as("cb"),
-        floor(round(nativeCosine(s, col("a.embedding"), col("b.embedding")), 6)
+        floor(round(nativeCosine(col("a.embedding"), col("b.embedding")), 6)
           * 1e6 + 0.5).cast("long").as("sim_u"))
     // bounded model tables: 5 probes × 8 candidates (+ 8×7 pairs each)
     val candRows = cands.collect()
@@ -1435,8 +1433,7 @@ object VectorOps {
     * HNSW's published curves transfer. On clustered production
     * embeddings the same (M, B, H) dial trades those two numbers far
     * more favorably. */
-  def qAnnBeam(s: SparkSession, d: String, M: Int = 8, B: Int = 8,
-               H: Int = 6, k: Int = 5): DataFrame = {
+  def qAnnBeam(s: SparkSession, d: String): DataFrame = {
     val S = 1000000.0
     val emb = embeddings(s, d)
     val dim = emb.select("embedding").head().getSeq[Float](0).length
@@ -1449,7 +1446,20 @@ object VectorOps {
         zip_with(col("v"), col("v"), (a, b) => a * b), lit(0L), (acc, x) => acc + x))
       .localCheckpoint(true) // corpus-sized fragment referenced by every
                              // hop — keep it a leaf (see beamReportFrom)
-    beamReportFrom(base, planes.length, M, B, H, k, maxBucket = 64)
+    beamReportFrom(base, planes.length, maxBucket = 64)
+  }
+
+  /** The beam walk's dials, shared by both beam keys and their
+    * oracles: out-degree M, beam width B, hops H and answer size k,
+    * over an 8-query batch. They are constants, not parameters: each
+    * hop of [[beamReportFrom]] collects ≤ 8·B·(M+1) scalar candidate
+    * rows on the driver, a bound that holds only because they are
+    * fixed. */
+  private object Beam {
+    val M = 8
+    val B = 8
+    val H = 6
+    val k = 5
   }
 
   /** The beam-search pipeline shared by [[qAnnBeam]] (unstructured
@@ -1458,10 +1468,10 @@ object VectorOps {
     * graph build from valved multiprobe LSH buckets, H unrolled hops,
     * visited-set top-k with brute-force recall. `base` must carry
     * (vec_id, v: array<bigint> micro-units, nv, bucket). */
-  private def beamReportFrom(base: DataFrame, nPlanes: Int, M: Int,
-                             B: Int, H: Int, k: Int,
+  private def beamReportFrom(base: DataFrame, nPlanes: Int,
                              maxBucket: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    import Beam._
     def r4(x: Column): Column = floor(x * 10000.0 + 0.5) / 10000.0
     val S = 1000000.0
     def cs(a: Column, na: Column, b: Column, nb: Column): Column =
@@ -1690,8 +1700,7 @@ object VectorOps {
     * (n_visited / N), making the (recall, scan_frac) trade readable
     * per query; the spec pins the favorable-regime claim
     * (mean recall@5 ≥ 0.8 at a bounded scan fraction). */
-  def qAnnBeamClustered(s: SparkSession, d: String, M: Int = 8,
-                        B: Int = 8, H: Int = 6, k: Int = 5): DataFrame = {
+  def qAnnBeamClustered(s: SparkSession, d: String): DataFrame = {
     def r4(x: Column): Column = floor(x * 10000.0 + 0.5) / 10000.0
     val planes = hyperplanes(8, 64)
     val nCfg = embeddings(s, d).agg(count(lit(1)).as("n_corpus"))
@@ -1721,7 +1730,7 @@ object VectorOps {
       .select("vec_id", "v", "nv", "bucket")
       .localCheckpoint(true) // corpus-sized fragment referenced by every
                              // hop — keep it a leaf (see beamReportFrom)
-    beamReportFrom(base, planes.length, M, B, H, k, maxBucket = 128)
+    beamReportFrom(base, planes.length, maxBucket = 128)
       .crossJoin(broadcast(nCfg.select("n_corpus")))
       .withColumn("scan_frac",
         r4(col("n_visited") / col("n_corpus").cast("double")))
@@ -2098,8 +2107,7 @@ object VectorOps {
 
   /** The most recent ingest epoch's probe plan, kept for spec
     * assertions (the classified frame the epoch returns is
-    * localCheckpointed — its own plan collapses to a Scan ExistingRDD,
-    * the round-13 gotcha). */
+    * driver-local — its own plan is a local scan). */
   private[graft] val lastEpochPlan = new EpochPlan
 
   /** Whether this THREAD's most recent prune-mode [[annProbeScore]]
@@ -2130,8 +2138,8 @@ object VectorOps {
     * epoch's mean candidates/probe crosses it, the measured
     * super-linear probe regime (BENCH_planes.json pins (8 planes,
     * 1 bit) at ×10 exponent 1.421) announces itself loudly instead of
-    * silently degrading — one tiny aggregate over the already-
-    * checkpointed frame per epoch. */
+    * silently degrading — the mean is taken from the collected
+    * classification's `n_cand`, at no extra job. */
   private[graft] def annIngestEpoch(s: SparkSession, indexPath: String,
                                     epochId: Long, data: DataFrame,
                                     nPlanes: Int = 8, dim: Int = 64,
@@ -2143,37 +2151,39 @@ object VectorOps {
     annEpoch(s, indexPath, epochId, data, nPlanes, dim, thresholdMicro,
       probeBits, bucketPartitioned, occupancyWarnMean)._1
 
-  /** [[annIngestEpoch]] plus the epoch's verdict count per status, from
-    * ONE rollup job over the checkpointed classification — it answers
-    * the metrics, the callback guard and whether there are admitted
-    * vectors to write. */
+  /** [[annIngestEpoch]] plus the epoch's verdict count per status. The
+    * epoch is bounded by the door's admission control, so its
+    * classification is COLLECTED once: those rows give the status
+    * counts, the occupancy mean (from `n_cand`), the admitted ids and
+    * the returned frame — driver-local, with the classification's
+    * schema, so collecting it runs no job. The distributed work is the
+    * quantize checkpoint of the batch, the probe chain behind the
+    * collect, and the delta write of `probes` ⋈ the admitted rows (a
+    * null-id `new` row admits nothing). */
   private def annEpoch(s: SparkSession, indexPath: String, epochId: Long,
                        data: DataFrame, nPlanes: Int, dim: Int,
                        thresholdMicro: Long, probeBits: Int,
                        bucketPartitioned: Boolean, occupancyWarnMean: Double)
       : (DataFrame, Map[String, Long]) = {
+    import scala.jdk.CollectionConverters._
     IndexLayout.validate(s, indexPath, "nPlanes", nPlanes.toString)
     IndexLayout.validate(s, indexPath, "dim", dim.toString)
-    val (classified0, probes) = classifyAnnCore(
+    val (classified, probes) = classifyAnnCore(
       DeltaIndex.read(s, indexPath, epochId), data, nPlanes, dim,
       thresholdMicro, probeBits, indexKeyPrune = bucketPartitioned)
     // plan contract per epoch, on the un-executed frame (see
     // DeltaIndex.requireProbeContract): staged index read + broadcast semi
-    val qe = classified0.queryExecution
+    val qe = classified.queryExecution
     lastEpochPlan.set(qe.sparkPlan)
     DeltaIndex.requireProbeContract(s, indexPath, s"epoch $epochId", qe.sparkPlan)
-    // one computed copy serves the rollup, the delta write and the
-    // caller
-    val classified = classified0.localCheckpoint(true)
-    // status rows plus one key per row the delta write will admit (a
-    // null-id `new` row joins no probe row, so it admits nothing)
-    val counts = IngestMetrics.rollup(classified.select(explode(array(
-      col("status"), when(col("status") === "new" && col("probe_id").isNotNull,
-        lit(AdmittedRows))))))
-    if (occupancyWarnMean > 0) {
-      val row = classified.agg(avg(col("n_cand")), count(lit(1))).head()
-      val meanCand = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-      if (row.getLong(1) > 0 && meanCand > occupancyWarnMean) {
+    val rows = classified.collect().toSeq
+    val status = classified.schema.fieldIndex("status")
+    val counts = rows.groupBy(_.getString(status))
+      .map { case (st, rs) => st -> rs.size.toLong }
+    if (occupancyWarnMean > 0 && rows.nonEmpty) {
+      val nCand = classified.schema.fieldIndex("n_cand")
+      val meanCand = rows.map(_.getLong(nCand)).sum.toDouble / rows.size
+      if (meanCand > occupancyWarnMean) {
         IngestMetrics.recordOccupancyWarn(indexPath)
         Console.err.println(f"[graft] ANN ingest OCCUPANCY WARNING " +
           f"(index $indexPath, epoch $epochId): mean candidates/probe " +
@@ -2186,27 +2196,35 @@ object VectorOps {
           "the recall back.")
       }
     }
-    val admitted = probes.join(
-        classified.filter(col("status") === "new").select("probe_id"),
-        "probe_id")
-      .select(col("probe_id").as("vec_id"), col("v"), col("nv"),
-        col("bucket0").as("bucket"))
+    val admitted = rows.filter(r => r.getString(status) == "new" && !r.isNullAt(0))
+      .map(r => org.apache.spark.sql.Row(r.get(0)))
     DeltaIndex.write(s, indexPath, epochId,
-      Some(admitted).filter(_ => counts.contains(AdmittedRows)))
-    (classified, counts - AdmittedRows)
+      Some(admitted).filter(_.nonEmpty).map { ids =>
+        probes.join(s.createDataFrame(ids.asJava,
+            org.apache.spark.sql.types.StructType(Seq(classified.schema("probe_id")))),
+            "probe_id")
+          .select(col("probe_id").as("vec_id"), col("v"), col("nv"),
+            col("bucket0").as("bucket"))
+      })
+    (s.createDataFrame(rows.asJava, classified.schema), counts)
   }
 
-  /** Rollup key of the classification rows the delta write admits. */
-  private val AdmittedRows = "admitted_rows"
-
-  /** The vector mirror of [[graft.engine.TextOps.startNeardupIngest]]:
-    * one StreamingQuery subscribes to a store topic of (vec_id,
-    * embedding), `maxBatchesPerTrigger` admission control bounds each
-    * epoch, every epoch runs [[annIngestEpoch]] — probe the staged
-    * sign-LSH index, admit, grow the index by the admitted vectors
-    * (per-epoch delta dirs, replay-idempotent) so later epochs match
-    * their copies. Eviction under the store's byte budget surfaces as
-    * missing offsets — never misattributed vectors. */
+  /** The ANN ingest door ([[IngestDoor]]), the vector mirror of
+    * [[graft.engine.TextOps.startNeardupIngest]]: a stream over a store
+    * topic of (vec_id, embedding) whose every epoch runs
+    * [[annIngestEpoch]] — probe the staged sign-LSH index, admit, and
+    * grow the index by the admitted vectors, so later epochs match
+    * their copies. `onEpoch` receives (epochId, classified) per
+    * non-empty epoch; the classified frame (one row per input vector)
+    * is driver-local, so collecting it runs no Spark job.
+    *
+    * `bucketPartitioned` = the 100 TB layout END-TO-END from the
+    * streaming door: stage the index with `stageAnnIndex(
+    * bucketPartitioned = true)`, and every epoch's probe pushes its
+    * bounded multiprobe key set as a static partition filter on base
+    * AND deltas ([[DeltaIndex.write]] mirrors the layout, compaction
+    * preserves it), so per-epoch index-read cost tracks the batch's
+    * bucket neighborhood, not the corpus. */
   def startAnnIngest(s: SparkSession, storeName: String, topic: String,
                      indexPath: String, maxBatchesPerTrigger: Long,
                      checkpointDir: String,
@@ -2217,61 +2235,15 @@ object VectorOps {
                      probeBits: Int = 1,
                      bucketPartitioned: Boolean = false,
                      occupancyWarnMean: Double = 0.0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one live writer per index + periodic mid-stream compaction once
-    // the committed delta count reaches compactEvery — see
-    // TextOps.startNeardupIngest for the full rationale on both.
-    // bucketPartitioned = the 100 TB layout END-TO-END from the
-    // streaming door: stage the index with stageAnnIndex(
-    // bucketPartitioned = true), then every epoch's probe pushes its
-    // bounded multiprobe key set as a static partition filter on base
-    // AND deltas (DeltaIndex.write mirrors the layout, compaction
-    // preserves it) — per-epoch index-read cost tracks the BATCH's
-    // bucket neighborhood, not the corpus.
-    IngestWriters.acquire(indexPath, checkpointDir)
-    val q = try {
-      // fresh checkpoint restarts epoch ids at 0 — compact first so the
-      // previous run's deltas cannot be overwritten
-      if (!DeltaIndex.resumesCheckpoint(s, checkpointDir))
-        DeltaIndex.compact(s, indexPath)
-      DeltaIndex.resolveLayout(s, indexPath)
-      s.readStream.format("graft-store")
-        .option("store", storeName).option("topic", topic)
-        .option("maxBatchesPerTrigger", maxBatchesPerTrigger.toString)
-        .load()
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, epochId: Long) =>
-          // run even on an empty replay: clears a stale delta whose
-          // batch was evicted between attempts (see startNeardupIngest)
-          val sess = batch.sparkSession
-          DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery)
-          val data = batch.select("vec_id", "embedding").localCheckpoint(true)
-          val (classified, counts) = annEpoch(sess, indexPath,
-            epochId, data, nPlanes, dim, thresholdMicro, probeBits,
-            bucketPartitioned, occupancyWarnMean)
-          // per-topic admitted/matched counters (see startNeardupIngest);
-          // the classification has one row per input vector, so its
-          // rollup also says whether the batch drained empty
-          IngestMetrics.recordEpoch(topic, counts)
-          if (counts.values.sum > 0) onEpoch(epochId, classified)
-          ()
-        }
-        .start()
-    } catch { case t: Throwable => IngestWriters.release(indexPath); throw t }
-    IngestWriters.bind(indexPath, q)
-    q
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    IngestDoor.start(s, storeName, topic, indexPath, maxBatchesPerTrigger,
+      checkpointDir, onEpoch, compactEvery)(annDoorEpoch(indexPath, nPlanes,
+      dim, thresholdMicro, probeBits, bucketPartitioned, occupancyWarnMean))
 
-  /** The TTL-expiry recovery recipe as one call (see
-    * [[graft.engine.IngestRecovery]]): after the topic idle-expired
-    * and the caller re-appended its data (create-on-access), start the
-    * ANN door again under a FRESH checkpoint — the start's
-    * compact-first folds the previous run's deltas, so every prior
-    * admission survives into the new run's index base. Preconditions
-    * (topic present again, checkpoint genuinely fresh) are validated
-    * with actionable errors instead of the generic downstream
-    * failures they would otherwise become. */
+  /** The TTL-expiry recovery recipe ([[IngestDoor.resume]]) for the ANN
+    * door: after the topic idle-expired and the caller re-appended its
+    * data, restart the door under a FRESH checkpoint with every prior
+    * admission kept. */
   def resumeAnnIngestAfterExpiry(s: SparkSession, storeName: String,
                                  topic: String, indexPath: String,
                                  maxBatchesPerTrigger: Long,
@@ -2283,12 +2255,20 @@ object VectorOps {
                                  probeBits: Int = 1,
                                  bucketPartitioned: Boolean = false,
                                  occupancyWarnMean: Double = 0.0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    IngestRecovery.validateResume(s, storeName, topic, freshCheckpointDir)
-    startAnnIngest(s, storeName, topic, indexPath, maxBatchesPerTrigger,
-      freshCheckpointDir, onEpoch, nPlanes, dim, thresholdMicro,
-      compactEvery, probeBits, bucketPartitioned, occupancyWarnMean)
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    IngestDoor.resume(s, storeName, topic, indexPath, maxBatchesPerTrigger,
+      freshCheckpointDir, onEpoch, compactEvery)(annDoorEpoch(indexPath, nPlanes,
+      dim, thresholdMicro, probeBits, bucketPartitioned, occupancyWarnMean))
+
+  /** The door's epoch: [[annEpoch]] over the batch's (vec_id,
+    * embedding), read once into the quantize checkpoint. */
+  private def annDoorEpoch(indexPath: String, nPlanes: Int, dim: Int,
+                           thresholdMicro: Long, probeBits: Int,
+                           bucketPartitioned: Boolean,
+                           occupancyWarnMean: Double): IngestDoor.Epoch =
+    (sess, epochId, batch) => annEpoch(sess, indexPath, epochId,
+      batch.select("vec_id", "embedding"), nPlanes, dim, thresholdMicro,
+      probeBits, bucketPartitioned, occupancyWarnMean)
 
   /** DuckDB oracle for [[qStreamAnnIngest]]: plane constants embedded,
     * probe construction (planted jitter + own-vector halves),
@@ -2355,8 +2335,7 @@ object VectorOps {
     * valved multiprobe graph build, all H beam hops unrolled as CTE
     * stages, and the visited-set top-k + exact brute-force recall —
     * every comparison on identical exact integers. */
-  def annBeamOracleSql(M: Int = 8, B: Int = 8, H: Int = 6,
-                       k: Int = 5): String = {
+  def annBeamOracleSql(): String = {
     val planes = hyperplanes(8, 64)
     val bucket = duckBucketSql(planes)
     val tCtes =
@@ -2371,7 +2350,7 @@ object VectorOps {
          |      SELECT tn.vec_id, tn.v, list_dot_product(tn.v, tn.v) AS nv,
          |             tb.bucket
          |      FROM tn JOIN tb ON tb.vec_id = tn.vec_id)""".stripMargin
-    beamOracleBody(tCtes, planes.length, M, B, H, k, maxBucket = 64)
+    beamOracleBody(tCtes, planes.length, maxBucket = 64)
   }
 
   /** DuckDB oracle for [[qAnnBeamClustered]]: replays the planted
@@ -2379,8 +2358,7 @@ object VectorOps {
     * md5 derivations precisely so this is possible), then the SAME
     * beam-pipeline CTEs as [[annBeamOracleSql]] at the clustered
     * variant's 128 valve, plus the (n_corpus, scan_frac) columns. */
-  def annBeamClusteredOracleSql(M: Int = 8, B: Int = 8, H: Int = 6,
-                                k: Int = 5): String = {
+  def annBeamClusteredOracleSql(): String = {
     val planes = hyperplanes(8, 64)
     val bucket = duckBucketSql(planes)
     val tCtes =
@@ -2407,7 +2385,7 @@ object VectorOps {
          |             CAST(list_dot_product(tv.v, tv.v) AS DOUBLE) AS nv,
          |             tb.bucket
          |      FROM tv JOIN tb ON tb.vec_id = tv.vec_id)""".stripMargin
-    beamOracleBody(tCtes, planes.length, M, B, H, k, maxBucket = 128,
+    beamOracleBody(tCtes, planes.length, maxBucket = 128,
       extraSelect = """,
         |       n_corpus,
         |       FLOOR(CAST(n_visited AS DOUBLE) / n_corpus * 10000.0 + 0.5)
@@ -2419,10 +2397,10 @@ object VectorOps {
     * `t(vec_id, v, nv, bucket)`; everything downstream (valved graph
     * build, H unrolled hops, visited top-k, brute-force recall) is
     * identical between the unstructured and clustered fixtures. */
-  private def beamOracleBody(tCtes: String, nPlanes: Int, M: Int, B: Int,
-                             H: Int, k: Int, maxBucket: Int,
+  private def beamOracleBody(tCtes: String, nPlanes: Int, maxBucket: Int,
                              extraSelect: String = "",
                              extraFrom: String = ""): String = {
+    import Beam._
     val masks = duckMaskList(nPlanes)
     def csu(v: String, nv: String, c: String, nc: String): String =
       s"CASE WHEN $nv = 0 OR $nc = 0 THEN -2000000 " +

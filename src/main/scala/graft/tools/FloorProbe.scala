@@ -73,9 +73,7 @@ object FloorProbe {
     names.foreach { n =>
       val fn = graft.SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query: $n"))
-      // warm at the smallest SF (codegen cache), like the bench warm-up
-      try fn(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+      graft.BenchProtocol.warmUp(spark, Seq(n), d)
       Thread.sleep(200)
       (1 to 2).foreach { pass =>
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

@@ -31,7 +31,6 @@ object IsolatedBench {
     // tools (calibration comparisons additionally require the same
     // SPARK_GRAFT_CPUS; see BenchProtocol's caveat)
     val spark = graft.BenchProtocol.session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
 
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("bench_full.json")), "UTF-8")
@@ -43,11 +42,7 @@ object IsolatedBench {
       .sortBy(-_._2).take(topN).map(_._1)
 
     val qs = graft.SparkEntry.queries
-    // warm-up: full codegen/JIT pass at the smallest SF (Bench protocol)
-    val warm = new java.io.File(sfDir).getParent + "/sf0.001"
-    keys.foreach { k =>
-      try qs(k)(spark, warm).count() catch { case _: Throwable => () }
-    }
+    graft.BenchProtocol.warmUp(spark, keys, sfDir)
     // table prep the timed keys depend on (one-time sinks, Bench protocol)
     graft.BenchProtocol.prepTables(spark, sfDir)
 

@@ -46,9 +46,7 @@ object JobProfile {
       }
     })
     names.foreach { n =>
-      // warm pass at the smallest sf (codegen/JIT), uncounted
-      try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-      catch { case t: Throwable => Console.err.println(s"[jobprofile] warm-up of '$n' failed: $t") }
+      graft.BenchProtocol.warmUp(spark, Seq(n), d) // uncounted
       Thread.sleep(300) // let listener drain
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
       val dt = graft.BenchProtocol.timeOnce(spark, n, graft.SparkEntry.queries(n), d)

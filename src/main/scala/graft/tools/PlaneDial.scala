@@ -32,7 +32,6 @@ object PlaneDial {
     val outJson = args.lift(2).getOrElse("BENCH_planes.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.BenchProtocol.session(cpus) // shared bench config
-    spark.sparkContext.setLogLevel("WARN")
     val big = ScaleCliff.scaledCopy(spark, base, factor)
     println(s"[planedial] scaled corpus at $big (${factor}x $base)")
 

@@ -91,16 +91,11 @@ object ScaleCliff {
       .filter(_.nonEmpty))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.BenchProtocol.session(cpus) // shared bench config
-    spark.sparkContext.setLogLevel("WARN")
     val big = scaledCopy(spark, base, factor)
     println(s"[scalecliff] scaled corpus at $big (${factor}x $base)")
     val keys = explicitKeys.getOrElse(slowestKeys(topN))
     val qs = graft.SparkEntry.queries
-    // codegen/JIT warm-up at the smallest SF (same protocol as Bench)
-    val warm = new java.io.File(base).getParent + "/sf0.001"
-    keys.foreach { k =>
-      try qs(k)(spark, warm).count() catch { case _: Throwable => () }
-    }
+    graft.BenchProtocol.warmUp(spark, keys, base)
     def once(k: String, dir: String): Double =
       graft.BenchProtocol.timeOnce(spark, k, qs(k), dir)
     def ms(v: Double): String =

@@ -23,8 +23,7 @@ object StageProfile {
         }
     })
     names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+      graft.BenchProtocol.warmUp(spark, Seq(n), d)
       Thread.sleep(300)
       stages.synchronized(stages.clear())
       val dt = graft.BenchProtocol.timeOnce(spark, n, graft.SparkEntry.queries(n), d)

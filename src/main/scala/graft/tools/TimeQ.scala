@@ -11,7 +11,7 @@ object TimeQ {
     spark.sparkContext.setLogLevel("ERROR")
     val reps = sys.env.getOrElse("TIMEQ_RUNS", "3").toInt
     names.foreach { n =>  // warm + N timed, report each + min
-      graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
+      graft.BenchProtocol.warmUp(spark, Seq(n), d)
       val ts = (1 to reps).map { i =>
         val dt = graft.BenchProtocol.timeOnce(spark, n,
           graft.SparkEntry.queries(n), d)

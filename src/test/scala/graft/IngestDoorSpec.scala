@@ -18,7 +18,8 @@ import graft.sources.GraftStoreRegistry
   * compaction lands, its verdicts and ingest counters on edge-case
   * inputs against a one-batch replay and against the distributed
   * classify, a door whose index path renders past Spark's
-  * plan-metadata abbreviation limit — and the ANN epoch's delta write
+  * plan-metadata abbreviation limit — and the ANN door: its job
+  * budget, when its compaction lands, and its epoch's delta write
   * guard. */
 class IngestDoorSpec extends SparkSuite {
 
@@ -38,6 +39,22 @@ class IngestDoorSpec extends SparkSuite {
 
   private def verdicts(c: DataFrame): Seq[(Long, String)] =
     c.collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+
+  private val embSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType))))
+
+  /** 16-dim one-hot vectors: two families are orthogonal, so a copy
+    * scores cosine 1 and nothing else matches it. */
+  private def oneHot(i: Int): Seq[Float] = (0 until 16).map(j => if (j == i) 1.0f else 0.0f)
+
+  private def stageAnn(path: String, fams: Seq[Int]): Unit =
+    VectorOps.stageAnnIndex(spark.createDataFrame(spark.sparkContext.parallelize(
+        fams.zipWithIndex.map { case (f, i) => Row(i.toLong, oneHot(f)) }.toList), embSchema),
+      path, nPlanes = 8, dim = 16)
+
+  /** (vec_id → status) of an ANN classification. */
+  private def annVerdicts(c: DataFrame): Map[Long, String] =
+    c.collect().map(r => r.getLong(0) -> r.getString(4)).toMap
 
   /** Runs `body` and returns the properties of every Spark job it
     * started. Listener delivery is asynchronous: a marker job submitted
@@ -156,6 +173,106 @@ class IngestDoorSpec extends SparkSuite {
       assert(IngestMetrics.compactionCounts.toMap.get(idx).contains(1L),
         s"exactly one mid-stream compaction: ${IngestMetrics.compactionCounts}")
     } finally GraftStoreRegistry.unregister("s_fold")
+  }
+
+  /** The ANN door's budget, measured on this fixture: 13 jobs in each
+    * plain epoch and 14 in the compacting one while the epoch
+    * checkpointed its batch and its classification and counted the
+    * verdicts with a rollup job; 10 and 11 once the classification is
+    * collected once on the driver. */
+  test("ANN door job budget: a 4-epoch stream with one compaction runs at most 10 Spark jobs per plain epoch and 11 in the compaction epoch") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_door_jobs")
+    val idx = dir.resolve("aj_idx").toString
+    stageAnn(idx, Seq(0, 1))
+    // each epoch admits one vector (a delta per epoch) and matches one,
+    // so compactEvery = 2 folds e0 and e1 at the end of epoch 2
+    val batches = (0 until 4).map { i =>
+      Seq(Row(100L + i * 10, oneHot(if (i == 0) 0 else i + 1)),
+        Row(101L + i * 10, oneHot(i + 2)))
+    }
+    val st = new StreamStore(1 << 20, Long.MaxValue / 2)
+    batches.foreach(b => st.append("vecs_jobs", embSchema, b))
+    GraftStoreRegistry.register("s_ann_jobs", st)
+    val perEpoch = TrieMap.empty[Long, Map[Long, String]]
+    try {
+      val (queryId, jobs) = jobsDuring {
+        val q = VectorOps.startAnnIngest(spark, "s_ann_jobs", "vecs_jobs", idx,
+          maxBatchesPerTrigger = 1, checkpointDir = dir.resolve("ckpt").toString,
+          onEpoch = (e, c) => { perEpoch.put(e, annVerdicts(c)); () },
+          nPlanes = 8, dim = 16, compactEvery = 2)
+        try q.processAllAvailable() finally q.stop()
+        q.id.toString
+      }
+      assert(perEpoch.keySet == Set(0L, 1L, 2L, 3L))
+      perEpoch.foreach { case (e, v) =>
+        assert(v == Map(100L + e * 10 -> "matched", 101L + e * 10 -> "new"),
+          s"epoch $e verdicts: $v")
+      }
+      assert(IngestMetrics.compactionCounts.toMap.get(idx).contains(1L),
+        s"exactly one mid-stream compaction: ${IngestMetrics.compactionCounts}")
+      val byEpoch = perBatch(jobs).collect { case ((q, b), n) if q == queryId => b -> n }
+      assert(byEpoch.keySet == Set(0L, 1L, 2L, 3L), s"jobs by epoch: $byEpoch")
+      info(s"jobs by epoch: ${byEpoch.toSeq.sorted.mkString(", ")}")
+      // the quantize checkpoint, the probe chain's stages and its
+      // collect, and the admitted rows' broadcast join and write; the
+      // callback's collect of the driver-local verdicts runs none; the
+      // compaction adds its merge write
+      Seq(0L, 1L, 3L).foreach(e => assert(byEpoch(e) <= 10,
+        s"plain epoch $e ran ${byEpoch(e)} jobs (budget 10): $byEpoch"))
+      assert(byEpoch(2L) <= 11,
+        s"compaction epoch ran ${byEpoch(2L)} jobs (budget 11): $byEpoch")
+    } finally GraftStoreRegistry.unregister("s_ann_jobs")
+  }
+
+  test("the ANN door's compacting epoch's callback sees compactEvery outstanding deltas, the next epoch reads the folded base, and collecting the callback frame runs no job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_door_fold")
+    val idx = dir.resolve("fa_idx").toString
+    stageAnn(idx, Seq(0, 1))
+    // epochs 0 and 1 admit (deltas e0, e1); epoch 2 admits nothing, so
+    // its callback sees exactly e0 and e1 before the fold; epoch 3
+    // copies epoch 0's admission
+    val batches = Seq(Seq(Row(100L, oneHot(2))), Seq(Row(110L, oneHot(3))),
+      Seq(Row(120L, oneHot(0))), Seq(Row(130L, oneHot(2)), Row(131L, oneHot(4))))
+    val st = new StreamStore(1 << 20, Long.MaxValue / 2)
+    batches.foreach(b => st.append("vecs_fold", embSchema, b))
+    GraftStoreRegistry.register("s_ann_fold", st)
+    // per epoch: verdicts, outstanding deltas, served base, probe plan
+    val seen = TrieMap.empty[Long, (Map[Long, String], Int, String, String)]
+    val tag = s"ann-callback-${System.nanoTime()}"
+    val sc = spark.sparkContext
+    try {
+      val (q, jobs) = jobsDuring {
+        val q = VectorOps.startAnnIngest(spark, "s_ann_fold", "vecs_fold", idx,
+          maxBatchesPerTrigger = 1, checkpointDir = dir.resolve("ckpt").toString,
+          onEpoch = (e, c) => {
+            sc.setLocalProperty("graft.spec.tag", tag)
+            val v = try annVerdicts(c) finally sc.setLocalProperty("graft.spec.tag", null)
+            seen.put(e, (v, DeltaIndex.outstanding(spark, idx),
+              DeltaIndex.currentBase(spark, idx), VectorOps.lastEpochPlan.get))
+            ()
+          }, nPlanes = 8, dim = 16, compactEvery = 2)
+        try q.processAllAvailable() finally q.stop()
+        q
+      }
+      assert(q.exception.isEmpty, s"door failed: ${q.exception}")
+      assert(seen.keySet == Set(0L, 1L, 2L, 3L))
+      val (v2, outstanding2, base2, _) = seen(2L)
+      assert(v2 == Map(120L -> "matched"))
+      assert(outstanding2 == 2 && base2 == idx,
+        s"epoch 2's callback runs before the fold: $outstanding2 deltas, base $base2")
+      val (v3, outstanding3, base3, plan3) = seen(3L)
+      assert(v3 == Map(130L -> "matched", 131L -> "new"),
+        s"the folded admission still classifies: $v3")
+      assert(base3 == s"${idx}_v1" && outstanding3 == 1,
+        s"epoch 3 runs on the folded base: $outstanding3 deltas, base $base3")
+      assert(plan3.contains("fa_idx_v1"),
+        s"epoch 3's probe must read the folded base:\n${plan3.take(3000)}")
+      assert(IngestMetrics.compactionCounts.toMap.get(idx).contains(1L),
+        s"exactly one mid-stream compaction: ${IngestMetrics.compactionCounts}")
+      val callbackJobs = jobs.count(p => tag == p.getProperty("graft.spec.tag"))
+      assert(callbackJobs == 0,
+        s"the callback frame is driver-local, yet collecting it ran $callbackJobs jobs")
+    } finally GraftStoreRegistry.unregister("s_ann_fold")
   }
 
   test("an epoch of only sub-3-token docs reads no index, admits them and clears a stale delta") {

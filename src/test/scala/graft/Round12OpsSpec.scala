@@ -124,7 +124,7 @@ class Round12OpsSpec extends SparkSuite {
       .filter(org.apache.spark.sql.functions.expr("vec_id % 20 = 0 AND vec_id <> 0"))
       .select(org.apache.spark.sql.functions.col("vec_id"),
         org.apache.spark.sql.functions.round(
-          VectorOps.nativeCosine(spark, org.apache.spark.sql.functions.col("embedding"), qLit), 6))
+          VectorOps.nativeCosine(org.apache.spark.sql.functions.col("embedding"), qLit), 6))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(viaSql == viaCol, "SQL path and Column path disagree")
   }

@@ -161,7 +161,6 @@ class Round14OpsSpec extends SparkSuite {
     // a FILTER breaks the bare-scan precondition: the rule must bail
     // (the MV pre-aggregates the full table, a filtered rewrite would
     // be WRONG) — with the conf armed, the plan must keep the fact scan
-    graft.expressions.VectorExpressions.register(spark)
     spark.conf.set("graft.mv.path", "/tmp/nonexistent_mv_never_read")
     spark.conf.set("graft.mv.base", s"$sf/lineitem")
     try {

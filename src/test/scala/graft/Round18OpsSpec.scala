@@ -9,7 +9,6 @@ import graft.engine.ScaleOps
 class Round18OpsSpec extends SparkSuite {
 
   test("graft_quantile_sketch: bins match an in-JVM histogram; merge across partitions is exact") {
-    graft.expressions.VectorExpressions.register(spark)
     import spark.implicits._
     // deterministic values over a domain that does NOT divide 256
     // (W = 1001, so every bin boundary exercises the ceil arithmetic),
@@ -30,7 +29,6 @@ class Round18OpsSpec extends SparkSuite {
   }
 
   test("graft_quantile_sketch: out-of-domain values clamp to edge bins, nulls skipped") {
-    graft.expressions.VectorExpressions.register(spark)
     import spark.implicits._
     Seq[java.lang.Long](-50L, 0L, 100L, 999L, 5000L, null)
       .toDF("v").createOrReplaceTempView("qs_clamp")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.engine.TextOps
-import graft.expressions.VectorExpressions
 import org.apache.spark.sql.functions._
 
 /** Native fused text expressions must agree with the HOF compositions
@@ -18,7 +17,6 @@ class TextExpressionSpec extends SparkSuite {
   ).toDF("doc_id", "text")
 
   test("graft_minhash_bands: fused pass equals HOF signature + polynomial banding") {
-    VectorExpressions.register(spark)
     val nHashes = 32; val bands = 8; val r = nHashes / bands
     val withSh = docs
       .withColumn("sh", TextOps.shingleHashes(TextOps.tokens(col("text")), 3))
@@ -42,7 +40,6 @@ class TextExpressionSpec extends SparkSuite {
   }
 
   test("graft_simhash64: fingerprint equals explode + 64-way bit-vote aggregation") {
-    VectorExpressions.register(spark)
     // reference computation: the pre-fusion shuffle formulation
     val tok = docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
       .withColumn("h", xxhash64(col("tok")))
@@ -66,7 +63,6 @@ class TextExpressionSpec extends SparkSuite {
   }
 
   test("graft_shingle_hashes: fused pass equals HOF transform/zip_with chain") {
-    VectorExpressions.register(spark)
     for (k <- Seq(2, 3, 5)) {
       val viaHof = docs
         .select(col("doc_id"),
@@ -81,7 +77,6 @@ class TextExpressionSpec extends SparkSuite {
   }
 
   test("graft_vector_avg: equals posexplode + per-dimension avg") {
-    VectorExpressions.register(spark)
     val vecs = Seq(
       (0, Array(1.0f, 2.0f, 3.0f)),
       (0, Array(3.0f, 2.0f, 1.0f)),
@@ -109,7 +104,6 @@ class TextExpressionSpec extends SparkSuite {
   }
 
   test("graft_minhash_bands rejects non-divisible banding at analysis") {
-    VectorExpressions.register(spark)
     val e = intercept[Exception] {
       docs.select(call_function("graft_minhash_bands",
         array(lit(1L)), lit(10), lit(3))).collect()
@@ -118,7 +112,6 @@ class TextExpressionSpec extends SparkSuite {
   }
 
   test("graft_char_ngrams equals the substring formulation, UTF-8 safe") {
-    VectorExpressions.register(spark)
     val texts = Seq((1L, "hello world"), (2L, "ab"), (3L, "abc"),
       (4L, ""), (5L, "héllo wörld"), (6L, "日本語のテスト")).toDF("id", "t")
     val viaNative = texts
@@ -135,7 +128,6 @@ class TextExpressionSpec extends SparkSuite {
   }
 
   test("graft_word_ngrams equals the zip_with formulation") {
-    VectorExpressions.register(spark)
     val viaNative = docs
       .select(col("doc_id"), call_function("graft_word_ngrams",
         TextOps.tokens(col("text")), lit(2)).as("g"))
@@ -151,7 +143,6 @@ class TextExpressionSpec extends SparkSuite {
   }
 
   test("graft_md5_minhash equals the conv(substr(md5)) SQL formulation") {
-    VectorExpressions.register(spark)
     val toks = TextOps.tokens(col("text"))
     val shingled = docs
       .filter(size(toks) >= 3)
@@ -186,7 +177,6 @@ class TextExpressionSpec extends SparkSuite {
   }
 
   test("graft_md5_simhash56 equals the 56-pass HOF bit-majority fold") {
-    VectorExpressions.register(spark)
     // generated code (ConvertToLocalRelation excluded, so the fixture's
     // projection is compiled instead of folded on the driver) and
     // interpreted eval
@@ -233,7 +223,6 @@ class TextExpressionSpec extends SparkSuite {
   }
 
   test("graft_jaro_winkler matches the standard (= DuckDB-pinned) values") {
-    VectorExpressions.register(spark)
     // r4-rounded expectations pinned from duckdb 1.0 jaro_winkler_similarity
     val cases = Seq(
       ("martha", "marhta", 0.9611),  // classic transposition example

@@ -1,7 +1,6 @@
 package graft
 
 import graft.engine.{Tables, VectorOps}
-import graft.expressions.VectorExpressions
 import org.apache.spark.sql.functions._
 
 /** Native CosineSimilarity expression: equivalence with the HOF
@@ -15,7 +14,7 @@ class VectorExpressionSpec extends SparkSuite {
       .crossJoin(emb.select(col("vec_id").as("b_id"), col("embedding").as("b")))
       .filter(col("a_id") < col("b_id")).limit(500)
     val both = pairs.select(
-      VectorOps.nativeCosine(spark, col("a"), col("b")).as("native"),
+      VectorOps.nativeCosine(col("a"), col("b")).as("native"),
       VectorOps.cosine(
         transform(col("a"), _.cast("double")),
         transform(col("b"), _.cast("double"))).as("hof"))
@@ -24,7 +23,6 @@ class VectorExpressionSpec extends SparkSuite {
   }
 
   test("registered function is callable from SQL") {
-    VectorExpressions.register(spark)
     val r = spark.sql(
       """SELECT graft_cosine(
         |  array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
@@ -34,7 +32,6 @@ class VectorExpressionSpec extends SparkSuite {
   }
 
   test("null input yields null, mismatched type fails analysis") {
-    VectorExpressions.register(spark)
     val r = spark.sql(
       "SELECT graft_cosine(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT)))")
       .head()
@@ -46,7 +43,6 @@ class VectorExpressionSpec extends SparkSuite {
   }
 
   test("sorted-merge jaccard matches the array_intersect/union formulation") {
-    VectorExpressions.register(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), graft.engine.TextOps.shingleHashes(
         graft.engine.TextOps.tokens(col("text")), 3).as("sh"))
@@ -65,13 +61,12 @@ class VectorExpressionSpec extends SparkSuite {
   test("self-similarity is exactly 1.0 for unit-consistent inputs") {
     val emb = Tables.embeddings(spark, sf).limit(50)
     val self = emb.select(
-      VectorOps.nativeCosine(spark, col("embedding"), col("embedding")).as("c"))
+      VectorOps.nativeCosine(col("embedding"), col("embedding")).as("c"))
     val bad = self.filter(abs(col("c") - 1.0) > 1e-12).count()
     assert(bad == 0)
   }
 
   test("SelfSimilarityFold rewrites diagonal jaccard to a constant (optimizer rule)") {
-    VectorExpressions.register(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), graft.engine.TextOps.shingleHashes(
         graft.engine.TextOps.tokens(col("text")), 3).as("sh"))

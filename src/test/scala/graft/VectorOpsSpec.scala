@@ -36,7 +36,7 @@ class VectorOpsSpec extends SparkSuite {
     assert(cents.length == 8)
     assert(cents.forall(_.length == emb.select("embedding").head().getSeq[Float](0).length))
     // assignment must produce clusters in range and cover >1 cluster
-    val clusters = emb.withColumn("c", VectorOps.nearestCentroid(spark, cents))
+    val clusters = emb.withColumn("c", VectorOps.nearestCentroid(cents))
       .select("c").distinct().collect().map(_.getInt(0))
     assert(clusters.forall(c => c >= 0 && c < 8))
     assert(clusters.length > 1)
@@ -52,7 +52,7 @@ class VectorOpsSpec extends SparkSuite {
     val truth = queries.crossJoin(emb)
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
-        VectorOps.nativeCosine(spark, col("q_emb"), col("embedding")).as("c"))
+        VectorOps.nativeCosine(col("q_emb"), col("embedding")).as("c"))
       .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("q_id")
           .orderBy(col("c").desc, col("vec_id").asc)))
