@@ -47,8 +47,12 @@ private[graft] object StagedPaths {
   }
 }
 
-/** Per-epoch delta directories for a staged ingest index — the
-  * replay-idempotence machinery of the ingest doors ([[IngestDoor]]).
+/** A staged ingest index and its per-epoch delta directories — the
+  * replay-idempotence machinery of the ingest doors ([[IngestDoor]]),
+  * and the ONE owner of the index's on-disk protocol: [[stage]] writes
+  * the base and its `_layout` sidecar, [[write]] an epoch's delta,
+  * [[compact]] a new base version; every other module only calls
+  * these.
   *
   * Spark's `foreachBatch` is at-least-once: an epoch can replay after
   * a crash between its side effects and the offset commit. Growing
@@ -82,9 +86,14 @@ private[graft] object StagedPaths {
   * fresh-checkpoint restart's epoch 0 overwrites a tombstoned `e0`
   * from the pre-restart generation, so a plan from before the
   * restart's compact can lose that delta's files — inherent to
-  * reusing the namespace, loud and retryable, never wrong results. */
+  * reusing the namespace, loud and retryable, never wrong results.
+  *
+  * Every operation sees the index through ONE [[snapshot]], taken
+  * under the per-index lock after crash recovery: the pointer is read
+  * and `_delta` listed nowhere else. */
 private[graft] object DeltaIndex {
   import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.functions.col
   import org.apache.spark.sql.types.StructType
   import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
   import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -97,35 +106,40 @@ private[graft] object DeltaIndex {
     * Spark's file listing ignores it inside the parquet dir. */
   private val Tombstone = "_RETIRED"
 
-  /** Per-index in-process lock (canonical-path keyed, same scope as
-    * [[IngestWriters]]): serializes compaction, crash recovery, and
-    * read PLANNING against each other — a reader can no longer replay
+  /** An index's row schema (partition columns included), its
+    * partition columns, and the dials its `_layout` sidecar records. */
+  private final case class Layout(schema: StructType, partCols: Seq[String],
+                                  dials: Map[String, String])
+
+  /** Per-index in-process state. Its monitor is the per-index lock: it
+    * serializes staging, compaction, crash recovery and read PLANNING
+    * against each other — a reader can no longer replay
     * [[finishCrashedCompact]] concurrently with a live writer's
     * in-flight compact (both passing the exists checks and destroying
     * the merged base — the round-13 reader-vs-compactor race). Plan
     * EXECUTION happens outside the lock, safe because the planned
-    * version dirs and delta files survive a full generation. */
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def canonicalKey(p: String): String =
+    * version dirs and delta files survive a full generation.
+    *
+    * `layout` is resolved ONCE per (JVM, index) from Spark's own schema
+    * and partition discovery over the base plus the sidecar — the
+    * layout is fixed at staging time, every delta is written from the
+    * same banded/quantized row shape, and every compaction preserves
+    * it, so it never goes stale ([[stage]] drops it). Reads then pass
+    * the schema explicitly: an inferring `spark.read.parquet` runs one
+    * schema-discovery job per scanned dir, per epoch; and probe-time
+    * dial validation reads no file. Guarded by the monitor. */
+  private final class Entry { var layout: Option[Layout] = None }
+
+  private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+
+  /** The canonical path keying every per-index map: these entries and
+    * [[IngestWriters]]' claims. */
+  private[graft] def canonicalKey(p: String): String =
     try new java.io.File(p).getCanonicalPath
     catch { case _: java.io.IOException => new java.io.File(p).getAbsolutePath }
-  private def lockFor(indexPath: String): Object =
-    locks.computeIfAbsent(canonicalKey(indexPath), _ => new Object)
 
-  /** An index's row schema (partition columns included) and its
-    * partition columns. */
-  private final case class Layout(schema: StructType, partCols: Seq[String])
-
-  /** Layout of an index, inferred ONCE per (JVM, index) from Spark's
-    * own schema and partition discovery over the base — the layout is
-    * fixed at staging time, every delta is written from the same
-    * banded/quantized row shape, and every compaction preserves it, so
-    * the cache never goes stale (staging afresh calls
-    * [[resetForStaging]], which drops it). Reads then pass the schema
-    * explicitly: an inferring `spark.read.parquet` runs one
-    * schema-discovery job per scanned dir, per epoch. */
-  private val layouts =
-    new java.util.concurrent.ConcurrentHashMap[String, Layout]()
+  private def lockFor(indexPath: String): Entry =
+    entries.computeIfAbsent(canonicalKey(indexPath), _ => new Entry)
 
   def dir(indexPath: String, epochId: Long): String =
     s"${indexPath}_delta/e$epochId"
@@ -140,10 +154,21 @@ private[graft] object DeltaIndex {
     new Path(s"${indexPath}_v$n")
   private def markerPath(indexPath: String) =
     new Path(indexPath + "_compact_commit")
+  private def layoutPath(indexPath: String) = new Path(indexPath + "_layout")
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
 
   /** Every on-disk version dir with its number — the ONE definition of
     * the `_v<N>` naming, shared by generation retirement and
-    * restaging cleanup. */
+    * restaging. */
   private def versionDirs(fs: FileSystem,
                           indexPath: String): Seq[(Path, Long)] = {
     val prefix = new Path(indexPath).getName + "_v"
@@ -153,73 +178,67 @@ private[graft] object DeltaIndex {
       .map(p => p -> p.getName.stripPrefix(prefix).toLong)
   }
 
-  /** The current base-version number: 0 = the as-staged dir
-    * (`indexPath` itself), N ≥ 1 = `<indexPath>_v<N>`. */
-  private def currentVersionNum(s: SparkSession, indexPath: String): Long = {
-    val p = versionPtr(indexPath)
-    val fs = fsOf(s, p)
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
+  /** The index on disk as one operation sees it: the base version (0 =
+    * the as-staged dir `indexPath` itself, N ≥ 1 = `<indexPath>_v<N>`),
+    * the base dir it names, and the live and the tombstoned
+    * (already-folded) deltas. */
+  private final case class Snapshot(version: Long, base: String,
+                                    live: Seq[Path], retired: Seq[Path])
+
+  /** The index's [[Snapshot]], taken under the per-index lock after
+    * [[finishCrashedCompact]] — the one way every operation reads the
+    * version pointer and lists `_delta`. */
+  private def snapshot(s: SparkSession, indexPath: String): Snapshot =
+    lockFor(indexPath).synchronized {
+      val fs = fsOf(s, new Path(indexPath))
+      finishCrashedCompact(fs, indexPath)
+      listing(fs, indexPath)
     }
+
+  /** [[snapshot]] without the recovery, for the recovery itself. Caller
+    * holds the per-index lock. */
+  private def listing(fs: FileSystem, indexPath: String): Snapshot = {
+    val ptr = versionPtr(indexPath)
+    val n = if (fs.exists(ptr)) readText(fs, ptr).trim.toLong else 0L
+    val root = new Path(indexPath + "_delta")
+    val deltas =
+      if (fs.exists(root))
+        fs.listStatus(root).toSeq.map(_.getPath).filter(_.getName.startsWith("e"))
+      else Seq.empty
+    val (retired, live) = deltas.partition(p => fs.exists(new Path(p, Tombstone)))
+    Snapshot(n, if (n == 0L) indexPath else versionDir(indexPath, n).toString,
+      live, retired)
   }
 
   /** The resolved current base dir — what reads scan and compactions
     * fold into. Spec-visible so layout assertions check the dir that
     * is actually served, not the original staging path. */
-  private[graft] def currentBase(s: SparkSession, indexPath: String): String = {
-    val n = currentVersionNum(s, indexPath)
-    if (n == 0L) indexPath else versionDir(indexPath, n).toString
-  }
-
-  private def isRetired(fs: FileSystem, deltaDir: Path): Boolean =
-    fs.exists(new Path(deltaDir, Tombstone))
-
-  /** ALL delta dirs on disk, tombstoned or not. */
-  private def deltaPaths(s: SparkSession, indexPath: String): Seq[Path] = {
-    val root = new Path(indexPath + "_delta")
-    if (fsOf(s, root).exists(root))
-      fsOf(s, root).listStatus(root).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("e"))
-    else Seq.empty
-  }
-
-  /** The LIVE deltas — tombstoned (already-folded) dirs excluded. */
-  private def liveDeltaPaths(s: SparkSession,
-                             indexPath: String): Seq[Path] = {
-    val root = new Path(indexPath + "_delta")
-    val fs = fsOf(s, root)
-    deltaPaths(s, indexPath).filterNot(isRetired(fs, _))
-  }
+  private[graft] def currentBase(s: SparkSession, indexPath: String): String =
+    snapshot(s, indexPath).base
 
   /** Outstanding (un-compacted) delta count — what the ingest streams'
     * periodic-compaction trigger, the `/metrics` gauge, and the specs
     * observe. */
   def outstanding(s: SparkSession, indexPath: String): Int =
-    lockFor(indexPath).synchronized {
-      finishCrashedCompact(s, indexPath)
-      liveDeltaPaths(s, indexPath).size
-    }
+    snapshot(s, indexPath).live.size
 
   /** Base index UNION all live deltas of OTHER epochs. Planned under
     * the per-index lock (stable listing); executes lock-free against
     * a one-generation-immutable snapshot. */
   def read(s: SparkSession, indexPath: String, excludeEpoch: Long): DataFrame =
     lockFor(indexPath).synchronized {
-      finishCrashedCompact(s, indexPath)
-      val base = currentBase(s, indexPath)
-      liveDeltaPaths(s, indexPath)
-        .filter(_.getName != s"e$excludeEpoch")
-        .foldLeft(scan(s, indexPath, base))((acc, p) =>
-          acc.unionByName(scan(s, indexPath, p.toString)))
+      val snap = snapshot(s, indexPath)
+      union(s, indexPath, snap.base +:
+        snap.live.filter(_.getName != s"e$excludeEpoch").map(_.toString))
     }
 
-  /** One dir of the index (base or delta), read with the index's
-    * resolved schema — no schema-discovery job. */
-  private def scan(s: SparkSession, indexPath: String, dir: String): DataFrame =
-    s.read.schema(layoutOf(s, indexPath).schema).parquet(dir)
+  /** Dirs of the index (base and deltas) unioned in order, each read
+    * with the index's resolved schema — no schema-discovery job. */
+  private def union(s: SparkSession, indexPath: String,
+                    dirs: Seq[String]): DataFrame = {
+    val schema = layoutOf(s, indexPath).schema
+    dirs.map(s.read.schema(schema).parquet(_)).reduce(_ unionByName _)
+  }
 
   /** The doors' per-epoch plan contract, checked STRUCTURALLY on the
     * un-executed physical plan (static properties — no data touched):
@@ -232,7 +251,7 @@ private[graft] object DeltaIndex {
   private[graft] def requireProbeContract(s: SparkSession, indexPath: String,
                                           what: String, plan: SparkPlan): Unit = {
     val base = {
-      val p = new Path(currentBase(s, indexPath))
+      val p = new Path(snapshot(s, indexPath).base)
       fsOf(s, p).makeQualified(p)
     }
     require(plan.find {
@@ -260,6 +279,59 @@ private[graft] object DeltaIndex {
   def readAll(s: SparkSession, indexPath: String): DataFrame =
     read(s, indexPath, excludeEpoch = -1L)
 
+  /** Stage — or RE-stage — the index at `indexPath` from `rows`, the
+    * index row shape, partitioned by `partCol` when set, and record
+    * `dials` in the `<indexPath>_layout` sidecar ([[IndexLayout]]; no
+    * dials, no sidecar). The restage order, under the per-index lock:
+    *   1. the stale sidecar goes FIRST, with the versioning state (a
+    *      stale pointer would keep serving the pre-restage `_v<N>` dir
+    *      over the fresh data) and the cached [[Layout]] (the schema,
+    *      partition layout and dials may all change);
+    *   2. the data is written (a full overwrite);
+    *   3. the new sidecar is written LAST, once the data is durable.
+    * A crash mid-restage therefore never leaves a sidecar claiming the
+    * NEW dials beside OLD-formula index data — that pair would pass
+    * validation and silently miss matches. Existing `_delta` dirs are
+    * left alone — restaging under live deltas keeps its previous
+    * (unusual but unchanged) semantics. */
+  private[graft] def stage(rows: DataFrame, indexPath: String,
+                           partCol: Option[String],
+                           dials: Seq[(String, String)]): Unit = {
+    val fs = fsOf(rows.sparkSession, new Path(indexPath))
+    val entry = lockFor(indexPath)
+    entry.synchronized {
+      Seq(layoutPath(indexPath), markerPath(indexPath),
+        new Path(indexPath + "_compact_commit.staging"), versionPtr(indexPath),
+        new Path(indexPath + "_version.staging"))
+        .foreach(p => if (fs.exists(p)) fs.delete(p, true))
+      versionDirs(fs, indexPath).foreach { case (p, _) => fs.delete(p, true) }
+      entry.layout = None
+      writeRows(rows, partCol.toSeq, indexPath)
+      if (dials.nonEmpty)
+        writeText(fs, layoutPath(indexPath), IndexLayout.format(dials))
+    }
+  }
+
+  /** The one write of index rows — a staged base, a delta, a compacted
+    * version — to `dir`, partitioned by `partCols`. Clustered by the
+    * partition key first, so each partition dir gets one file instead
+    * of one per (task × partition) — the small-files problem that
+    * kills partitioned layouts at any scale; `clustered` says the rows
+    * already sit in ONE task (a driver-local frame coalesced to one
+    * partition), so no clustering shuffle is needed. The overwrite
+    * pins `partitionOverwriteMode` STATIC: under a session-level
+    * dynamic mode a replayed epoch's overwrite would replace only the
+    * partitions present in the new image, leaving ghost admissions
+    * (and the tombstone) from the first attempt, and a restage would
+    * keep the old image's other partitions. */
+  private def writeRows(rows: DataFrame, partCols: Seq[String], dir: String,
+                        clustered: Boolean = false): Unit = {
+    val byKey =
+      if (partCols.isEmpty || clustered) rows else rows.repartition(partCols.map(col): _*)
+    val w = byKey.write.mode("overwrite").option("partitionOverwriteMode", "static")
+    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(dir)
+  }
+
   /** Overwrite this epoch's delta with `rows`, or — `None`, when the
     * caller's epoch admitted no rows — clear any stale delta a
     * previous attempt of the same epoch left: never an empty parquet
@@ -273,42 +345,30 @@ private[graft] object DeltaIndex {
     * epoch regardless of the probe's key set. `mode("overwrite")` on a
     * TOMBSTONED dir (epoch-id reuse after a fresh-checkpoint restart)
     * deletes the tombstone with the dir — the new delta is live
-    * again, correctly. `clustered`: the rows already sit in ONE task
-    * (a driver-local frame coalesced to one partition), so a
-    * partitioned write needs no clustering shuffle. */
+    * again, correctly. `clustered`: see [[writeRows]]. */
   def write(s: SparkSession, indexPath: String, epochId: Long,
             rows: Option[DataFrame], clustered: Boolean = false): Unit = {
     val delta = new Path(dir(indexPath, epochId))
     rows match {
       case Some(rows) =>
-        val pc = basePartitionCols(s, indexPath)
+        val pc = layoutOf(s, indexPath).partCols
         val missing = pc.filterNot(rows.columns.contains)
         require(missing.isEmpty,
           s"delta for '$indexPath' must carry the base's partition " +
             s"column(s) ${missing.mkString(", ")} — a flat delta under a " +
             "partitioned base breaks both the union schema and the " +
             "partition-pruned probe")
-        // clustered by the partition key first — one file per bucket dir
-        // per delta, not one per (task × bucket)
-        val byKey =
-          if (pc.isEmpty || clustered) rows
-          else rows.repartition(pc.map(org.apache.spark.sql.functions.col): _*)
-        // static overwrite PINNED: under a session-level dynamic
-        // partitionOverwriteMode a replayed epoch's overwrite would
-        // replace only the partitions present in the new image, leaving
-        // ghost admissions (and the tombstone) from the first attempt
-        val w = byKey.write.mode("overwrite")
-          .option("partitionOverwriteMode", "static")
-        (if (pc.nonEmpty) w.partitionBy(pc: _*) else w).parquet(delta.toString)
+        writeRows(rows, pc, delta.toString, clustered)
       case None =>
-        if (fsOf(s, delta).exists(delta)) { fsOf(s, delta).delete(delta, true); () }
+        val fs = fsOf(s, delta)
+        if (fs.exists(delta)) { fs.delete(delta, true); () }
     }
-    // gauge refresh under the per-index lock: an unlocked listing here
-    // could race a concurrent batch-side recovery's own refresh and
-    // persist a stale count until the next epoch
+    // gauge refresh under the per-index lock: set outside it, a count
+    // taken here could overwrite a concurrent compaction's newer one
+    // and persist a stale value until the next epoch
     lockFor(indexPath).synchronized {
       IngestMetrics.setOutstandingDeltas(indexPath,
-        liveDeltaPaths(s, indexPath).size.toLong)
+        snapshot(s, indexPath).live.size.toLong)
     }
   }
 
@@ -318,21 +378,30 @@ private[graft] object DeltaIndex {
     layoutOf(s, indexPath); ()
   }
 
-  /** The index's [[Layout]], resolved from the base on first use. */
-  private def layoutOf(s: SparkSession, indexPath: String): Layout =
-    layouts.computeIfAbsent(canonicalKey(indexPath), _ => {
-      val df = s.read.parquet(currentBase(s, indexPath))
-      Layout(df.schema, inferPartCols(df))
-    })
+  /** The dials the index was staged with (its `_layout` sidecar; empty
+    * when it has none), for [[IndexLayout.validate]]. */
+  private[graft] def dials(s: SparkSession, indexPath: String): Map[String, String] =
+    layoutOf(s, indexPath).dials
 
-  /** The base's partition columns via Spark's OWN partition discovery
-    * (handles multi-column layouts; a stray name=value file a dir
-    * listing would misread is judged exactly as the reader judges
-    * it), cached per (JVM, index) — layout is immutable after
-    * staging. */
-  private[graft] def basePartitionCols(s: SparkSession,
-                                       indexPath: String): Seq[String] =
-    layoutOf(s, indexPath).partCols
+  /** The index's [[Layout]], resolved on first use under the per-index
+    * lock: the schema and partition columns by Spark's OWN discovery
+    * over the base (handles multi-column layouts; a stray name=value
+    * file a dir listing would misread is judged exactly as the reader
+    * judges it), the dials from the sidecar. */
+  private def layoutOf(s: SparkSession, indexPath: String): Layout = {
+    val entry = lockFor(indexPath)
+    entry.synchronized {
+      entry.layout.getOrElse {
+        val df = s.read.parquet(snapshot(s, indexPath).base)
+        val side = layoutPath(indexPath)
+        val fs = fsOf(s, side)
+        val l = Layout(df.schema, inferPartCols(df),
+          if (fs.exists(side)) IndexLayout.parse(readText(fs, side)) else Map.empty)
+        entry.layout = Some(l)
+        l
+      }
+    }
+  }
 
   private def inferPartCols(df: DataFrame): Seq[String] =
     df.queryExecution.analyzed.collectFirst {
@@ -362,10 +431,15 @@ private[graft] object DeltaIndex {
     * alone for a replay to overwrite.
     *
     * CRASH-ATOMIC via a commit marker (the 'exactly one copy' contract
-    * survives a crash at any step), all under the per-index lock:
+    * survives a crash at any step), all under the per-index lock and
+    * from one [[snapshot]]:
     *   1. merged (current base ∪ folded live deltas) →
     *      `<indexPath>_v<N+1>` — invisible to readers until the flip,
-    *      PRESERVING the base's partition layout
+    *      PRESERVING the base's partition layout through [[writeRows]]
+    *      (a partitioned index folded to flat parquet would lose its
+    *      partition dirs and every later partition-pruned probe would
+    *      scan the full index); the target was just cleared, so the
+    *      static overwrite replaces nothing
     *   2. marker (`v<N+1>` + the folded delta names) renamed into
     *      place (atomic publish — no marker, no state change)
     *   3. tombstone each folded delta (files stay put for in-flight
@@ -373,19 +447,19 @@ private[graft] object DeltaIndex {
     *      generation (old version dir / flat staging dir, deltas
     *      tombstoned by earlier compactions)
     *   4. delete the marker
-    * [[finishCrashedCompact]] (run before every locked operation)
-    * replays step 3-4 from the marker: each step is idempotent and the
-    * merged image is complete before the marker can exist, so
-    * admissions are never lost and never double-counted. Single
-    * in-process writer per index by [[IngestWriters]] contract. */
+    * [[finishCrashedCompact]] (run by every snapshot) replays step 3-4
+    * from the marker: each step is idempotent and the merged image is
+    * complete before the marker can exist, so admissions are never
+    * lost and never double-counted. Single in-process writer per index
+    * by [[IngestWriters]] contract. */
   def compact(s: SparkSession, indexPath: String,
               belowEpoch: Long = Long.MaxValue): Unit =
     lockFor(indexPath).synchronized {
-      finishCrashedCompact(s, indexPath)
-      val folded = liveDeltaPaths(s, indexPath).filter(epochOf(_) < belowEpoch)
+      val snap = snapshot(s, indexPath)
+      val folded = snap.live.filter(epochOf(_) < belowEpoch)
       if (folded.isEmpty) return
       val fs = fsOf(s, markerPath(indexPath))
-      val newN = currentVersionNum(s, indexPath) + 1
+      val newN = snap.version + 1
       val target = versionDir(indexPath, newN)
       // a stale target from a pre-marker crashed attempt is dropped
       // OUTRIGHT before rebuilding (a pre-marker image is never
@@ -393,38 +467,19 @@ private[graft] object DeltaIndex {
       if (fs.exists(target))
         require(fs.delete(target, true),
           s"compact: could not clear stale $target")
-      // 1. complete merged image in the NEXT version dir — PRESERVING
-      // the base's partition layout: a bucket-partitioned index folded
-      // to flat parquet would silently lose its partition dirs and
-      // every later partition-pruned probe would degrade to a
-      // full-index scan.
-      val partCols = basePartitionCols(s, indexPath)
-      val merged = folded.foldLeft(scan(s, indexPath, currentBase(s, indexPath)))(
-        (acc, p) => acc.unionByName(scan(s, indexPath, p.toString)))
-      // cluster by the partition key so each generation keeps one file
-      // per bucket dir — file count stays flat across folds instead of
-      // accumulating every source's fragments
-      val clustered =
-        if (partCols.isEmpty) merged
-        else merged.repartition(
-          partCols.map(org.apache.spark.sql.functions.col): _*)
-      val w = clustered.write.mode("overwrite")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(target.toString)
+      // 1. complete merged image in the NEXT version dir
+      writeRows(union(s, indexPath, snap.base +: folded.map(_.toString)),
+        layoutOf(s, indexPath).partCols, target.toString)
       // 2. marker: new version + folded dir names, renamed into place.
       // The rename result is CHECKED: proceeding to the publish without
       // a durable marker would leave a crash window with no recovery.
       val staging = new Path(indexPath + "_compact_commit.staging")
-      val out = fs.create(staging, true)
-      try out.write((s"v$newN" +: folded.map(_.getName)).mkString("\n")
-        .getBytes("UTF-8"))
-      finally out.close()
+      writeText(fs, staging, (s"v$newN" +: folded.map(_.getName)).mkString("\n"))
       require(fs.rename(staging, markerPath(indexPath)),
         s"compact marker publish failed for $indexPath — aborting before any state change")
-      publishCompact(s, indexPath, newN, folded.map(_.getName))
+      publishCompact(fs, indexPath, newN, folded.map(_.getName))
       IngestMetrics.recordCompaction(indexPath)
-      IngestMetrics.setOutstandingDeltas(indexPath,
-        liveDeltaPaths(s, indexPath).size.toLong)
+      IngestMetrics.setOutstandingDeltas(indexPath, (snap.live.size - folded.size).toLong)
     }
 
   /** Steps 3-4 of the compact protocol — idempotent, so a crash at any
@@ -434,9 +489,8 @@ private[graft] object DeltaIndex {
     * image + deltas) stays fully recoverable and the next access
     * retries; silently proceeding would orphan the merged image or
     * leak a generation. Caller holds the per-index lock. */
-  private def publishCompact(s: SparkSession, indexPath: String,
+  private def publishCompact(fs: FileSystem, indexPath: String,
                              newN: Long, foldedNames: Seq[String]): Unit = {
-    val fs = fsOf(s, markerPath(indexPath))
     val root = new Path(indexPath + "_delta")
     // 3a. tombstone the folded deltas: excluded from every future
     // listing, parquet files untouched for in-flight plans
@@ -446,11 +500,10 @@ private[graft] object DeltaIndex {
     }
     // 3b. flip the version pointer (write-new, delete-old, rename —
     // the delete→rename gap is covered by the marker: recovery replays
-    // the flip, and every read runs recovery first)
+    // the flip, and every snapshot runs recovery first)
     val ptr = versionPtr(indexPath)
     val ptrStaging = new Path(indexPath + "_version.staging")
-    val out = fs.create(ptrStaging, true)
-    try out.write(newN.toString.getBytes("UTF-8")) finally out.close()
+    writeText(fs, ptrStaging, newN.toString)
     if (fs.exists(ptr))
       require(fs.delete(ptr, false),
         s"compact publish: could not retire old version pointer for $indexPath " +
@@ -471,8 +524,7 @@ private[graft] object DeltaIndex {
         s"compact publish: could not retire flat staging dir $indexPath (recoverable)")
     }
     val foldedSet = foldedNames.toSet
-    deltaPaths(s, indexPath)
-      .filter(p => isRetired(fs, p) && !foldedSet.contains(p.getName))
+    listing(fs, indexPath).retired.filterNot(p => foldedSet.contains(p.getName))
       .foreach(p => require(fs.delete(p, true),
         s"compact publish: could not retire folded delta $p (recoverable)"))
     // 4. retire the marker
@@ -481,20 +533,16 @@ private[graft] object DeltaIndex {
   }
 
   /** Recovery hook: when a compact crashed after publishing its marker
-    * (between steps 2 and 4), finish it before serving any locked
-    * operation — the on-disk state may otherwise hold a folded delta
-    * twice (marker present, pointer already flipped) or a half-retired
-    * generation. No marker → no-op (one `exists` probe on the hot
-    * path). Caller holds the per-index lock, so recovery can never
-    * race a live writer's in-flight compact. */
-  private def finishCrashedCompact(s: SparkSession, indexPath: String): Unit = {
+    * (between steps 2 and 4), finish it before any snapshot — the
+    * on-disk state may otherwise hold a folded delta twice (marker
+    * present, pointer already flipped) or a half-retired generation.
+    * No marker → no-op (one `exists` probe on the hot path). Caller
+    * holds the per-index lock, so recovery can never race a live
+    * writer's in-flight compact. */
+  private def finishCrashedCompact(fs: FileSystem, indexPath: String): Unit = {
     val marker = markerPath(indexPath)
-    val fs = fsOf(s, marker)
     if (!fs.exists(marker)) return
-    val in = fs.open(marker)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .mkString.split("\n").toSeq.filter(_.nonEmpty)
-    finally in.close()
+    val lines = readText(fs, marker).split("\n").toSeq.filter(_.nonEmpty)
     // actionable guard against an unparseable (e.g. pre-versioning)
     // marker: a bare NumberFormatException from inside every locked
     // operation would wedge the index without naming the fix
@@ -509,18 +557,19 @@ private[graft] object DeltaIndex {
       s"compact marker for $indexPath names version v$newN but the merged " +
         "image is missing — the marker is only ever written AFTER the image " +
         "completes; refusing to guess")
-    publishCompact(s, indexPath, newN, lines.tail)
+    publishCompact(fs, indexPath, newN, lines.tail)
   }
 
   /** Compact from inside a running stream's epoch N — [[IngestDoor]]
     * calls it after the epoch's callback — when the committed (< N)
-    * live delta count reached `every`: the cleanupLoop discipline, bounded so a long-lived stream's
+    * live delta count in the index's [[snapshot]] reached `every`: the
+    * cleanupLoop discipline, bounded so a long-lived stream's
     * per-probe plan depth never exceeds `every` delta reads plus the
     * base. */
   def maybeCompact(s: SparkSession, indexPath: String, epochId: Long,
                    every: Int): Unit =
     if (every > 0 &&
-        liveDeltaPaths(s, indexPath).count(epochOf(_) < epochId) >= every)
+        snapshot(s, indexPath).live.count(epochOf(_) < epochId) >= every)
       compact(s, indexPath, belowEpoch = epochId)
 
   /** True when `checkpointDir` already holds a streaming offsets log —
@@ -530,24 +579,6 @@ private[graft] object DeltaIndex {
     val p = new Path(checkpointDir, "offsets")
     fsOf(s, p).exists(p)
   }
-
-  /** Drop an index's versioning state before RE-STAGING its base from
-    * scratch (stageAnnIndex / stageNeardupIndex `mode("overwrite")`):
-    * a stale pointer would otherwise keep serving the pre-restage
-    * `_v<N>` dir over the freshly staged data, and the cached
-    * schema and partition layout may change with the new staging. Existing
-    * `_delta` dirs are left alone — restaging under live deltas keeps
-    * its previous (unusual but unchanged) semantics. */
-  private[graft] def resetForStaging(s: SparkSession, indexPath: String): Unit =
-    lockFor(indexPath).synchronized {
-      val fs = fsOf(s, markerPath(indexPath))
-      Seq(markerPath(indexPath), new Path(indexPath + "_compact_commit.staging"),
-        versionPtr(indexPath), new Path(indexPath + "_version.staging"))
-        .foreach(p => if (fs.exists(p)) fs.delete(p, true))
-      versionDirs(fs, indexPath).foreach { case (p, _) => fs.delete(p, true) }
-      layouts.remove(canonicalKey(indexPath))
-      ()
-    }
 }
 
 /** An ingest door's most recent epoch probe plan, for spec
@@ -567,75 +598,34 @@ private[graft] final class EpochPlan {
   def get: String = Option(plan.get).fold("")(_.toString)
 }
 
-/** Sidecar file (`<indexPath>_layout`) recording the dials an index
-  * was STAGED with (`bandBuckets` for the text near-dup index,
-  * `nPlanes` for the ANN index), so a probe called with a different
-  * dial fails loudly instead of silently missing matches: the stored
-  * bucket/band values are the staging formula's, and a mismatched
-  * probe-side formula would prune away index rows whose keys actually
-  * match (wrong `unique` verdicts — duplicate re-admission). One
-  * `key=value` pair per line; absent file = legacy/flat staging,
-  * validated only when the caller asks for a nonzero dial. */
+/** The `<indexPath>_layout` sidecar's format and its check: the dials
+  * an index was STAGED with (`bandBuckets` for the text near-dup index,
+  * `nPlanes` and `dim` for the ANN index), so a probe called with a
+  * different dial fails loudly instead of silently missing matches:
+  * the stored bucket/band values are the staging formula's, and a
+  * mismatched probe-side formula would prune away index rows whose
+  * keys actually match (wrong `unique` verdicts — duplicate
+  * re-admission). One `key=value` pair per line; absent file =
+  * legacy/flat staging, validated only when the caller asks for a
+  * nonzero dial. [[DeltaIndex.stage]] writes the file and
+  * [[DeltaIndex]]'s cached layout holds its dials, so validation reads
+  * no file. */
 private[graft] object IndexLayout {
   import org.apache.spark.sql.SparkSession
-  import org.apache.hadoop.fs.Path
 
-  private def pathOf(indexPath: String) = new Path(indexPath + "_layout")
-  private def fsOf(s: SparkSession, p: Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
+  def format(dials: Seq[(String, String)]): String =
+    dials.map { case (k, v) => s"$k=$v" }.mkString("\n")
 
-  // the sidecar is immutable after staging, so probe-time validation
-  // reads it from a per-JVM cache (write/clear refresh it) — a
-  // long-lived streaming epoch must not pay filesystem round-trips
-  // per validated key per micro-batch
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
-  private def cacheKey(p: String): String =
-    try new java.io.File(p).getCanonicalPath
-    catch { case _: java.io.IOException => new java.io.File(p).getAbsolutePath }
-
-  def write(s: SparkSession, indexPath: String,
-            props: Seq[(String, String)]): Unit = {
-    val p = pathOf(indexPath)
-    val out = fsOf(s, p).create(p, true)
-    try out.write(props.map { case (k, v) => s"$k=$v" }.mkString("\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-    cache.put(cacheKey(indexPath), props.toMap)
-    ()
-  }
-
-  def clear(s: SparkSession, indexPath: String): Unit = {
-    val p = pathOf(indexPath)
-    val fs = fsOf(s, p)
-    if (fs.exists(p)) fs.delete(p, false)
-    cache.put(cacheKey(indexPath), Map.empty)
-    ()
-  }
-
-  def read(s: SparkSession, indexPath: String): Map[String, String] =
-    cache.computeIfAbsent(cacheKey(indexPath), _ => readDisk(s, indexPath))
-
-  private def readDisk(s: SparkSession,
-                       indexPath: String): Map[String, String] = {
-    val p = pathOf(indexPath)
-    val fs = fsOf(s, p)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.split("\n").toSeq.filter(_.contains("="))
-        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-        .toMap
-    }
-  }
+  def parse(text: String): Map[String, String] =
+    text.split("\n").toSeq.filter(_.contains("="))
+      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
+      .toMap
 
   /** Fail loudly when the caller's dial contradicts the staged one —
     * the silent alternative is wrong verdicts, not slow plans. */
   def validate(s: SparkSession, indexPath: String, key: String,
                callerValue: String): Unit =
-    read(s, indexPath).get(key).foreach { stored =>
+    DeltaIndex.dials(s, indexPath).get(key).foreach { stored =>
       if (stored != callerValue)
         throw new IllegalArgumentException(
           s"index '$indexPath' was staged with $key=$stored but the probe " +
@@ -670,17 +660,13 @@ private[graft] object IngestWriters {
   private val live =
     new java.util.concurrent.ConcurrentHashMap[String, Writer]()
 
-  private def key(indexPath: String): String =
-    try new java.io.File(indexPath).getCanonicalPath
-    catch { case _: java.io.IOException =>
-      new java.io.File(indexPath).getAbsolutePath }
 
   /** Claim the index for one stream, atomically. A claim whose query
     * is no longer active (stopped, failed) is reclaimed; a LIVE claim
     * under a different checkpoint fails fast. Mid-start claims (query
     * not yet bound) count as live — the window is one start() call. */
   def acquire(indexPath: String, checkpointDir: String): Unit = {
-    val k = key(indexPath)
+    val k = DeltaIndex.canonicalKey(indexPath)
     while (true) {
       val mine = new Writer(checkpointDir)
       val cur = live.putIfAbsent(k, mine)
@@ -701,16 +687,16 @@ private[graft] object IngestWriters {
   /** Bind the started query to its claim so a later acquire can tell
     * stopped from live. */
   def bind(indexPath: String, q: StreamingQuery): Unit = {
-    val w = live.get(key(indexPath))
+    val w = live.get(DeltaIndex.canonicalKey(indexPath))
     if (w != null) w.query = Some(q)
   }
 
   /** Drop a claim (start() failed before a query existed). */
-  def release(indexPath: String): Unit = { live.remove(key(indexPath)); () }
+  def release(indexPath: String): Unit = { live.remove(DeltaIndex.canonicalKey(indexPath)); () }
 
   /** The live claim's checkpoint, for specs. */
   def liveCheckpoint(indexPath: String): Option[String] = {
-    val w = live.get(key(indexPath))
+    val w = live.get(DeltaIndex.canonicalKey(indexPath))
     if (w == null) None
     else if (w.query.exists(q => !q.isActive)) None
     else Some(w.checkpointDir)
@@ -726,8 +712,9 @@ private[graft] object IngestWriters {
   * MicroBatchStream, `maxBatchesPerTrigger` admission control bounds
   * each epoch, and every epoch runs the door's [[Epoch]] function: probe
   * the staged index, admit, and grow the index by the admitted rows
-  * (per-epoch delta dirs, replay-idempotent — see [[DeltaIndex]]), so
-  * later epochs see them as existing. The doors differ only in that
+  * (per-epoch delta dirs, replay-idempotent — see [[DeltaIndex]], which
+  * owns every file the index has on disk), so later epochs see them as
+  * existing. The doors differ only in that
   * function. [[start]], in order:
   *   1. claims the index for ONE live writer ([[IngestWriters]]): a
   *      second concurrent stream would overwrite this one's
@@ -737,8 +724,9 @@ private[graft] object IngestWriters {
   *      previous run's deltas into the base, which would otherwise be
   *      overwritten epoch by epoch; a RESUMING checkpoint keeps its
   *      deltas — the replay-idempotence contract needs them;
-  *   3. resolves the index layout, so no epoch pays a schema-discovery
-  *      job;
+  *   3. resolves the index layout — schema, partition columns and
+  *      staged dials — so no epoch pays a schema-discovery job or reads
+  *      the `_layout` sidecar;
   *   4. reads the topic with admission control;
   *   5. per epoch: the epoch function, the per-topic counters, `onEpoch`
   *      when the epoch classified any row, then the fold;

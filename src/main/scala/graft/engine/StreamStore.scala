@@ -37,7 +37,6 @@ final class StreamStore(
   private final class Entry(val schema: StructType) {
     val batches = mutable.ArrayDeque.empty[Batch]
     var currentBytes = 0L
-    var currentRows = 0L
     var droppedRows = 0L
     /** Batches whose zone stats were computed — incremented only in
       * append, so specs can pin "planning never rescans rows" as
@@ -79,14 +78,12 @@ final class StreamStore(
     while (e.currentBytes + size > maxBytesPerStream && e.batches.nonEmpty) {
       val old = e.batches.removeHead()
       e.currentBytes -= old.sizeBytes
-      e.currentRows -= old.rows.size
       dropped += old.rows.size
     }
     e.droppedRows += dropped
     e.batches.append(Batch(rows, size, computeZones(schema, rows)))
     e.zoneComputations += 1
     e.currentBytes += size
-    e.currentRows += rows.size
     e.appended += 1
     dropped
   }
@@ -217,11 +214,6 @@ final class StreamStore(
     * recomputed at plan time. */
   def zoneComputations(topic: String): Long =
     synchronized { streams.get(topic).map(_.zoneComputations).getOrElse(0L) }
-
-  /** Rows currently buffered (maintained incrementally on append and
-    * eviction — the numRows half of the scan's reported statistics). */
-  def bufferedRows(topic: String): Long =
-    synchronized { streams.get(topic).map(_.currentRows).getOrElse(0L) }
 
   /** Monotone batch-append count — the streaming source's latest
     * offset for the topic (0 for unknown topics). */

@@ -58,7 +58,7 @@ object Tables {
     * The doors' versioned indexes do NOT come through here:
     * their base and delta dir names change every compaction and epoch,
     * so `DeltaIndex` keeps one schema PER INDEX instead — resolved from
-    * the base on first use and dropped by `resetForStaging`. Reusing it
+    * the base on first use and dropped by `DeltaIndex.stage`. Reusing it
     * is safe because the layout is fixed at staging: every delta is
     * written from the same banded/quantized row shape (partition
     * columns included), and compaction rewrites that shape unchanged. */

@@ -82,16 +82,6 @@ object TextOps {
     }: _*)
   }
 
-  /** Band hashes for LSH: split an n-length signature into `bands`
-    * equal bands and hash each. Docs sharing any band hash are
-    * candidate pairs; P(candidate) ≈ 1-(1-j^r)^b for jaccard j. */
-  def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(array_join(transform(
-          slice(sig, b * rowsPerBand + 1, rowsPerBand), _.cast("string")), ",")).as("bh"))
-    }: _*)
-
   /** Per-document 64-bit SimHash fingerprints: per token, xxhash64
     * (seed 42, = Spark's xxhash64) votes ±1 on 64 bit counters;
     * fingerprint bit i is counter i's sign. Computed by the native
@@ -2819,27 +2809,14 @@ object TextOps {
                         bandBuckets: Int = 0): Unit = {
     require(bandBuckets <= 65536,
       s"bandBuckets must be <= 65536, got $bandBuckets")
-    DeltaIndex.resetForStaging(corpus.sparkSession, path)
-    // stale sidecar retired BEFORE the restage; the new one is written
-    // only AFTER the data lands (see stageAnnIndex — a crash window
-    // must never pair a new-dial sidecar with old-formula data)
-    IndexLayout.clear(corpus.sparkSession, path)
-    val rows = md5Bands(corpus)
-    // cluster by the bucket key before the partitioned write — one
-    // file per bucket dir instead of tasks × buckets tiny files (see
-    // stageAnnIndex)
-    if (bandBuckets > 0)
-      rows.withColumn("bkt", bandBucketOf(bandBuckets))
-        .repartition(col("bkt"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static") // full-truncate restage
-        .partitionBy("bkt").parquet(path)
-    else rows.write.mode("overwrite").parquet(path)
     // the dial is recorded for BOTH layouts (0 = flat), so probing a
     // flat-staged index with a nonzero bandBuckets fails with the
     // actionable dial-mismatch error instead of a generic
     // cannot-resolve-'bkt' analysis error downstream
-    IndexLayout.write(corpus.sparkSession, path,
+    val rows = md5Bands(corpus)
+    DeltaIndex.stage(
+      if (bandBuckets > 0) rows.withColumn("bkt", bandBucketOf(bandBuckets)) else rows,
+      path, Option.when(bandBuckets > 0)("bkt"),
       Seq("bandBuckets" -> bandBuckets.toString))
   }
 

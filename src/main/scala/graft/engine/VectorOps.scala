@@ -158,49 +158,6 @@ object VectorOps {
     } finally pinned.unpersist()
   }
 
-  /** Sample-trained k-means for the IVF coarse quantizer — the
-    * at-scale design (FAISS practice: train on a bounded ~256·k
-    * sample, not the corpus): ONE bounded collect, then Lloyd
-    * iterations run driver-local on the sample (cosine assignment,
-    * matching nearestCentroid). The corpus-sized work stays in the
-    * single distributed indexing pass. Vs the distributed-loop
-    * kmeansCentroids this removes 2·iters sequential Spark jobs —
-    * quantizer quality is statistically identical because centroids
-    * only need sample-level resolution. Deterministic (ordered
-    * sample, fixed init). */
-  def kmeansCentroidsSampled(emb: DataFrame, k: Int, iters: Int,
-                             sampleN: Int = 4096): Seq[Seq[Float]] = {
-    val sample = emb.orderBy("vec_id").limit(math.max(sampleN, k))
-      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-    val dim = sample.head.length
-    var centroids = sample.take(k).map(_.clone())
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < dim) { dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i); i += 1 }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(k)(new Array[Double](dim))
-      val counts = new Array[Long](k)
-      sample.foreach { v =>
-        var best = 0; var bestScore = Double.MinValue; var c = 0
-        while (c < k) {
-          val s = cos(v, centroids(c))
-          if (s > bestScore) { bestScore = s; best = c }
-          c += 1
-        }
-        counts(best) += 1
-        var i = 0
-        while (i < dim) { sums(best)(i) += v(i); i += 1 }
-      }
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0) old // empty cluster keeps its centroid
-        else Array.tabulate(dim)(i => (sums(c)(i) / counts(c)).toFloat)
-      }
-    }
-    centroids.map(_.toSeq).toSeq
-  }
-
   /** Argmax-cosine cluster assignment against centroid literals. */
   def nearestCentroid(centroids: Seq[Seq[Float]]): Column = {
     val scored = centroids.zipWithIndex.map { case (c, i) =>
@@ -1785,15 +1742,10 @@ object VectorOps {
     val indexPath = annIngestIndexCopies.computeIfAbsent(
       s"$d#$nPlanes#$bucketPartitioned", _ => {
         val p = StagedPaths.tmp("graft_ann_ingest_idx")
-        val rows = withNv(base.filter(col("vec_id") % 2 === 0))
+        DeltaIndex.stage(withNv(base.filter(col("vec_id") % 2 === 0))
           .withColumn("bucket",
-            lshBucket(transform(col("v"), x => x.cast("double")), planes))
-        // clustered by bucket like stageAnnIndex — one file per bucket
-        // dir, not one per (task × bucket)
-        val clustered =
-          if (bucketPartitioned) rows.repartition(col("bucket")) else rows
-        val w = clustered.write.mode("overwrite")
-        (if (bucketPartitioned) w.partitionBy("bucket") else w).parquet(p)
+            lshBucket(transform(col("v"), x => x.cast("double")), planes)),
+          p, Option.when(bucketPartitioned)("bucket"), dials = Nil)
         p
       })
     val index = s.read.parquet(indexPath)
@@ -2027,12 +1979,6 @@ object VectorOps {
   def stageAnnIndex(emb: DataFrame, path: String,
                     nPlanes: Int = 8, dim: Int = 64,
                     bucketPartitioned: Boolean = false): Unit = {
-    val rows = annMicroRows(emb, "vec_id", hyperplanes(nPlanes, dim))
-    // the stale sidecar goes FIRST and the new one is written only
-    // AFTER the data lands: a crash mid-restage must never leave a
-    // sidecar claiming the NEW dials beside OLD-formula index data —
-    // that combination would pass validation and silently miss matches
-    IndexLayout.clear(emb.sparkSession, path)
     // bucketPartitioned = the 100 TB layout, executable: one parquet
     // partition dir per LSH bucket. classifyAnnBatch(bucketPartitioned
     // = true) then pushes the batch's bounded multiprobe key set as a
@@ -2045,26 +1991,12 @@ object VectorOps {
     // parse back as ints where the flat layout serves longs; the probe
     // join coerces, and classify results are layout-independent by
     // spec. Default stays flat: at fixture scale 2^nPlanes directories
-    // of tiny files cost more than they prune. DeltaIndex.compact
-    // preserves the layout (it re-partitions the folded base by the
-    // detected partition column).
-    DeltaIndex.resetForStaging(emb.sparkSession, path)
-    // partitioned staging CLUSTERS by the partition key first: without
-    // the repartition every write task emits a file into every bucket
-    // dir (tasks × buckets tiny files — the small-files problem that
-    // kills partitioned layouts at any scale); with it each bucket dir
-    // holds exactly one file
-    if (bucketPartitioned)
-      rows.repartition(col("bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static") // full-truncate restage
-        .partitionBy("bucket").parquet(path)
-    else rows.write.mode("overwrite").parquet(path)
-    // record the staging dials (data is durable now): a probe at a
-    // different nPlanes/dim computes different buckets/quantizations
-    // and would silently miss true matches (classifyAnnBatch and
-    // annIngestEpoch validate)
-    IndexLayout.write(emb.sparkSession, path,
+    // of tiny files cost more than they prune. The dials are recorded:
+    // a probe at a different nPlanes/dim computes different
+    // buckets/quantizations and would silently miss true matches
+    // (classifyAnnBatch and annIngestEpoch validate).
+    DeltaIndex.stage(annMicroRows(emb, "vec_id", hyperplanes(nPlanes, dim)), path,
+      Option.when(bucketPartitioned)("bucket"),
       Seq("nPlanes" -> nPlanes.toString, "dim" -> dim.toString))
   }
 
@@ -2158,8 +2090,9 @@ object VectorOps {
     * the returned frame — driver-local, with the classification's
     * schema, so collecting it runs no job. The distributed work is the
     * quantize checkpoint of the batch, the probe chain behind the
-    * collect, and the delta write of `probes` ⋈ the admitted rows (a
-    * null-id `new` row admits nothing). */
+    * collect, and the delta write of `probes` ⋈ the distinct admitted
+    * ids — exactly the epoch's probe rows of admitted ids (a null-id
+    * `new` row admits nothing). */
   private def annEpoch(s: SparkSession, indexPath: String, epochId: Long,
                        data: DataFrame, nPlanes: Int, dim: Int,
                        thresholdMicro: Long, probeBits: Int,
@@ -2196,8 +2129,10 @@ object VectorOps {
           "the recall back.")
       }
     }
+    // distinct: an id arriving k times has k probe rows, and joining
+    // them to k admitted rows would write it k² times
     val admitted = rows.filter(r => r.getString(status) == "new" && !r.isNullAt(0))
-      .map(r => org.apache.spark.sql.Row(r.get(0)))
+      .map(r => org.apache.spark.sql.Row(r.get(0))).distinct
     DeltaIndex.write(s, indexPath, epochId,
       Some(admitted).filter(_.nonEmpty).map { ids =>
         probes.join(s.createDataFrame(ids.asJava,

@@ -218,14 +218,20 @@ object VectorExpressions {
 
   /** Installs the library on a built session, idempotently: each rule
     * is appended to `experimental.extraOptimizations` only if absent,
-    * and re-registering a function replaces it with itself. */
+    * and each function is registered only if its name is absent or
+    * bound to another class — a session that already carries the
+    * library is left untouched (no replaced-function warning per name
+    * per call). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     rules.foreach { r =>
       if (!spark.experimental.extraOptimizations.contains(r))
         spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ r
     }
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { f =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(f.name, f.build, "built-in")
+      val id = FunctionIdentifier(f.name)
+      if (!registry.lookupFunction(id).exists(_.getClassName == f.cls.getName))
+        registry.registerFunction(id, new ExpressionInfo(f.cls.getName, f.name), f.build)
     }
   }
 }

@@ -143,7 +143,6 @@ final class GraftStoreTable(storeName: String, topic: String, schema: StructType
 object GraftStoreTable {
   val BatchOffsetCol = "_batch_offset"
   val RowInBatchCol = "_row_in_batch"
-  val MetaCols: Set[String] = Set(BatchOffsetCol, RowInBatchCol)
 }
 
 final case class GraftMetaColumn(name: String, about: String)

@@ -19,8 +19,8 @@ import graft.sources.GraftStoreRegistry
   * inputs against a one-batch replay and against the distributed
   * classify, a door whose index path renders past Spark's
   * plan-metadata abbreviation limit — and the ANN door: its job
-  * budget, when its compaction lands, and its epoch's delta write
-  * guard. */
+  * budget, when its compaction lands, and its epoch's delta writes —
+  * and the one staging call restaging a compacted index. */
 class IngestDoorSpec extends SparkSuite {
 
   private val docSchema = StructType(Seq(
@@ -450,5 +450,50 @@ class IngestDoorSpec extends SparkSuite {
     assert(out == Seq("new"))
     assert(!new java.io.File(s"${idx}_delta/e0").exists,
       "a null-id row joins no probe row: nothing to admit, no delta")
+  }
+
+  test("ANN epoch: an id arriving twice in one epoch writes its two probe rows to the delta, not four") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_repeat_id")
+    val idx = dir.resolve("ar_idx").toString
+    stageAnn(idx, Seq(0))
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(
+      List(Row(7L, oneHot(3)), Row(7L, oneHot(3)))), embSchema)
+    val out = VectorOps.annIngestEpoch(spark, idx, 0L, batch, nPlanes = 8, dim = 16)
+      .collect().map(r => r.getLong(0) -> r.getString(4)).toSeq
+    assert(out == Seq(7L -> "new", 7L -> "new"))
+    val delta = spark.read.parquet(DeltaIndex.dir(idx, 0L)).collect()
+    assert(delta.length == 2 && delta.forall(_.getAs[Long]("vec_id") == 7L),
+      s"the delta holds the epoch's 2 probe rows of vec_id 7: ${delta.toSeq}")
+    assert(DeltaIndex.readAll(spark, idx).count() == 3, "the staged row and the 2 probe rows")
+  }
+
+  test("restaging a compacted index with another dial drops its versions and serves only the new rows at the new dial") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_restage")
+    val idx = dir.resolve("rs_idx").toString
+    def rows(first: Long, fams: Seq[String]) =
+      df(fams.zipWithIndex.map { case (f, i) => Row(first + i, text(f)) })
+    TextOps.stageNeardupIndex(rows(0L, Seq("e0", "e1")), idx, bandBuckets = 4)
+    // two admitting epochs, each folded: the served base is _v2
+    Seq("f0", "f1").zipWithIndex.foreach { case (f, e) =>
+      TextOps.neardupIngestEpoch(spark, idx, e.toLong, rows(100L + e, Seq(f)),
+        bandBuckets = 4).collect()
+      DeltaIndex.compact(spark, idx)
+    }
+    assert(DeltaIndex.currentBase(spark, idx) == s"${idx}_v2")
+    assert(new java.io.File(s"${idx}_v2").isDirectory)
+    TextOps.stageNeardupIndex(rows(500L, Seq("g0", "g1")), idx, bandBuckets = 8)
+    assert(!new java.io.File(s"${idx}_version").exists, "the version pointer is gone")
+    val versions = dir.toFile.list().filter(_.matches("rs_idx_v[0-9]+"))
+    assert(versions.isEmpty, s"no _v<N> dir survives the restage: ${versions.toSeq}")
+    assert(DeltaIndex.currentBase(spark, idx) == idx)
+    val served = DeltaIndex.readAll(spark, idx).select("doc_id").distinct()
+      .collect().map(_.getLong(0)).toSet
+    assert(served == Set(500L, 501L), s"only the restaged rows are served: $served")
+    val probe = rows(900L, Seq("g0", "f0"))
+    val err = intercept[IllegalArgumentException](
+      TextOps.classifyNeardupBatch(spark, idx, probe, bandBuckets = 4).collect())
+    assert(err.getMessage.contains("was staged with bandBuckets=8"), err.getMessage)
+    assert(verdicts(TextOps.classifyNeardupBatch(spark, idx, probe, bandBuckets = 8)).toMap ==
+      Map(900L -> "dup_of_existing", 901L -> "unique"))
   }
 }

@@ -40,4 +40,14 @@ class FunctionTableSpec extends SparkSuite {
       assert(spark.experimental.extraOptimizations == VectorExpressions.rules)
     } finally VectorExpressions.register(spark)
   }
+
+  test("a second recipe call on a session carrying the library replaces no function") {
+    val registry = spark.sessionState.functionRegistry
+    def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    val before = infos
+    assert(before.forall(_.isDefined))
+    assert(BenchProtocol.session("4") eq spark)
+    assert(infos.zip(before).forall { case (a, b) => a.get eq b.get },
+      "every name keeps its ExpressionInfo object")
+  }
 }
