@@ -40,6 +40,14 @@ object BenchProtocol {
     * reads this conf. Not scale-dependent — no production value
     * differs.
     *
+    * The `file:` scheme is bound, for both Hadoop's FileSystem and its
+    * FileContext, to graft's fork-free local filesystem
+    * ([[graft.engine.GraftLocalFileSystem]], [[graft.engine.GraftLocalFs]]):
+    * without `libhadoop`, the stock one forks a `chmod` for every file
+    * and dir it creates and a `readlink` for every streaming-log
+    * rename. Same files, same permission bits; other schemes (HDFS,
+    * S3) are untouched.
+    *
     * This is the ONE session recipe: Bench, Verify, the test suites
     * and every tool build through it, so the verified engine is the
     * benched engine. It logs at WARN (a caller wanting ERROR sets it
@@ -56,6 +64,10 @@ object BenchProtocol {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.ui.explainMode", "simple")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.engine.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.engine.GraftLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.expressions.VectorExpressions.register(spark)

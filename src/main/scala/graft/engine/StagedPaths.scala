@@ -90,11 +90,23 @@ private[graft] object StagedPaths {
   *
   * Every operation sees the index through ONE [[snapshot]], taken
   * under the per-index lock after crash recovery: the pointer is read
-  * and `_delta` listed nowhere else. */
+  * and `_delta` listed nowhere else. A door epoch takes one, in its
+  * read ([[readSnapshot]]), and carries it through the epoch — its
+  * probe contract, its delta write's gauge and its fold decision —
+  * because [[IngestWriters]]' single writer is the only thing that
+  * changes the delta set; compaction and door start list afresh.
+  *
+  * An epoch's delta is bounded by the epoch and already on the driver,
+  * so [[write]] writes it there — one Parquet file per partition dir
+  * and one rename, no Spark job and no file-commit protocol. Staging
+  * and compaction, whose input is corpus-sized, write through Spark. */
 private[graft] object DeltaIndex {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   import org.apache.spark.sql.functions.col
   import org.apache.spark.sql.types.StructType
+  import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+  import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
   import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
   import org.apache.spark.sql.catalyst.plans.LeftSemi
@@ -127,8 +139,12 @@ private[graft] object DeltaIndex {
     * it, so it never goes stale ([[stage]] drops it). Reads then pass
     * the schema explicitly: an inferring `spark.read.parquet` runs one
     * schema-discovery job per scanned dir, per epoch; and probe-time
-    * dial validation reads no file. Guarded by the monitor. */
-  private final class Entry { var layout: Option[Layout] = None }
+    * dial validation reads no file. `listings` counts the `_delta`
+    * listings taken, for the specs. Guarded by the monitor. */
+  private final class Entry {
+    var layout: Option[Layout] = None
+    var listings = 0L
+  }
 
   private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
@@ -182,8 +198,8 @@ private[graft] object DeltaIndex {
     * the as-staged dir `indexPath` itself, N ≥ 1 = `<indexPath>_v<N>`),
     * the base dir it names, and the live and the tombstoned
     * (already-folded) deltas. */
-  private final case class Snapshot(version: Long, base: String,
-                                    live: Seq[Path], retired: Seq[Path])
+  private[graft] final case class Snapshot(version: Long, base: String,
+                                           live: Seq[Path], retired: Seq[Path])
 
   /** The index's [[Snapshot]], taken under the per-index lock after
     * [[finishCrashedCompact]] — the one way every operation reads the
@@ -198,6 +214,7 @@ private[graft] object DeltaIndex {
   /** [[snapshot]] without the recovery, for the recovery itself. Caller
     * holds the per-index lock. */
   private def listing(fs: FileSystem, indexPath: String): Snapshot = {
+    lockFor(indexPath).listings += 1
     val ptr = versionPtr(indexPath)
     val n = if (fs.exists(ptr)) readText(fs, ptr).trim.toLong else 0L
     val root = new Path(indexPath + "_delta")
@@ -222,14 +239,23 @@ private[graft] object DeltaIndex {
   def outstanding(s: SparkSession, indexPath: String): Int =
     snapshot(s, indexPath).live.size
 
-  /** Base index UNION all live deltas of OTHER epochs. Planned under
-    * the per-index lock (stable listing); executes lock-free against
-    * a one-generation-immutable snapshot. */
-  def read(s: SparkSession, indexPath: String, excludeEpoch: Long): DataFrame =
+  /** `_delta` listings taken of the index in this JVM, for the specs. */
+  private[graft] def listings(indexPath: String): Long = {
+    val entry = lockFor(indexPath)
+    entry.synchronized(entry.listings)
+  }
+
+  /** Base index UNION all live deltas of OTHER epochs, and the
+    * [[Snapshot]] it was planned over, which a door epoch carries to
+    * [[requireProbeContract]], [[write]] and [[maybeCompact]]. Planned
+    * under the per-index lock (stable listing); executes lock-free
+    * against a one-generation-immutable snapshot. */
+  private[graft] def readSnapshot(s: SparkSession, indexPath: String,
+                                  excludeEpoch: Long): (DataFrame, Snapshot) =
     lockFor(indexPath).synchronized {
       val snap = snapshot(s, indexPath)
-      union(s, indexPath, snap.base +:
-        snap.live.filter(_.getName != s"e$excludeEpoch").map(_.toString))
+      (union(s, indexPath, snap.base +:
+        snap.live.filter(_.getName != s"e$excludeEpoch").map(_.toString)), snap)
     }
 
   /** Dirs of the index (base and deltas) unioned in order, each read
@@ -247,11 +273,12 @@ private[graft] object DeltaIndex {
     * past `spark.sql.maxMetadataStringLength`), and the index is
     * probed through a broadcast LEFT SEMI join (never shuffled). A
     * regression here would silently turn every epoch
-    * corpus-proportional at 100 TB. */
-  private[graft] def requireProbeContract(s: SparkSession, indexPath: String,
+    * corpus-proportional at 100 TB. `read` is the snapshot the probe
+    * was planned over ([[readSnapshot]]). */
+  private[graft] def requireProbeContract(s: SparkSession, read: Snapshot,
                                           what: String, plan: SparkPlan): Unit = {
     val base = {
-      val p = new Path(snapshot(s, indexPath).base)
+      val p = new Path(read.base)
       fsOf(s, p).makeQualified(p)
     }
     require(plan.find {
@@ -277,7 +304,7 @@ private[graft] object DeltaIndex {
     * writer — batch reads racing a live writer on the same index can
     * retry; verdicts are never silently wrong. */
   def readAll(s: SparkSession, indexPath: String): DataFrame =
-    read(s, indexPath, excludeEpoch = -1L)
+    readSnapshot(s, indexPath, excludeEpoch = -1L)._1
 
   /** Stage — or RE-stage — the index at `indexPath` from `rows`, the
     * index row shape, partitioned by `partCol` when set, and record
@@ -312,63 +339,111 @@ private[graft] object DeltaIndex {
     }
   }
 
-  /** The one write of index rows — a staged base, a delta, a compacted
-    * version — to `dir`, partitioned by `partCols`. Clustered by the
-    * partition key first, so each partition dir gets one file instead
-    * of one per (task × partition) — the small-files problem that
-    * kills partitioned layouts at any scale; `clustered` says the rows
-    * already sit in ONE task (a driver-local frame coalesced to one
-    * partition), so no clustering shuffle is needed. The overwrite
-    * pins `partitionOverwriteMode` STATIC: under a session-level
-    * dynamic mode a replayed epoch's overwrite would replace only the
-    * partitions present in the new image, leaving ghost admissions
-    * (and the tombstone) from the first attempt, and a restage would
-    * keep the old image's other partitions. */
-  private def writeRows(rows: DataFrame, partCols: Seq[String], dir: String,
-                        clustered: Boolean = false): Unit = {
-    val byKey =
-      if (partCols.isEmpty || clustered) rows else rows.repartition(partCols.map(col): _*)
+  /** The Spark write of corpus-sized index rows — a staged base, a
+    * compacted version — to `dir`, partitioned by `partCols`. Clustered
+    * by the partition key first, so each partition dir gets one file
+    * instead of one per (task × partition) — the small-files problem
+    * that kills partitioned layouts at any scale. The overwrite pins
+    * `partitionOverwriteMode` STATIC: under a session-level dynamic
+    * mode a restage would keep the old image's other partitions. */
+  private def writeRows(rows: DataFrame, partCols: Seq[String], dir: String): Unit = {
+    val byKey = if (partCols.isEmpty) rows else rows.repartition(partCols.map(col): _*)
     val w = byKey.write.mode("overwrite").option("partitionOverwriteMode", "static")
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(dir)
   }
 
-  /** Overwrite this epoch's delta with `rows`, or — `None`, when the
-    * caller's epoch admitted no rows — clear any stale delta a
-    * previous attempt of the same epoch left: never an empty parquet
-    * part accumulating on the listing, and never a GHOST admission
+  /** Overwrite this epoch's delta with `rows` (of `schema`, the index
+    * row shape), or — no rows, when the epoch admitted none — clear
+    * any stale delta a previous attempt of the same epoch left: never
+    * an empty parquet part on the listing, and never a GHOST admission
     * when the replayed epoch's batch was evicted in the meantime.
     *
-    * The write MIRRORS the base's partition layout (a
-    * bucket-partitioned index gets bucket-partitioned deltas), so a
-    * partition-pruned probe prunes the delta scans exactly like the
-    * base scan — a flat delta would re-open every delta file on every
-    * epoch regardless of the probe's key set. `mode("overwrite")` on a
-    * TOMBSTONED dir (epoch-id reuse after a fresh-checkpoint restart)
-    * deletes the tombstone with the dir — the new delta is live
-    * again, correctly. `clustered`: see [[writeRows]]. */
-  def write(s: SparkSession, indexPath: String, epochId: Long,
-            rows: Option[DataFrame], clustered: Boolean = false): Unit = {
+    * The rows are bounded by the epoch and already on the driver, so
+    * the driver writes them ([[writeParquet]]): ONE Parquet file per
+    * partition dir in the hidden `_delta/.e<n>.staging` dir — cleared
+    * first, since a crash can leave one — then `e<n>` is deleted and
+    * the staging dir renamed into place. No Spark job and no
+    * file-commit protocol (attempt dirs, job-commit renames,
+    * `_SUCCESS`). A crash before the rename leaves no `e<n>` and an
+    * unlisted staging dir: the epoch's offsets are not committed, so it
+    * replays and writes both again. Deleting a TOMBSTONED `e<n>`
+    * (epoch-id reuse after a fresh-checkpoint restart) deletes its
+    * tombstone with it — the new delta is live again, correctly.
+    *
+    * The partition dirs MIRROR the base's layout (a bucket-partitioned
+    * index gets bucket-partitioned deltas), so a partition-pruned probe
+    * prunes the delta scans exactly like the base scan — a flat delta
+    * would re-open every delta file on every epoch regardless of the
+    * probe's key set.
+    *
+    * `seen` is the snapshot the epoch read the index through
+    * ([[readSnapshot]]); the single writer is the only thing that
+    * changes the delta set, so the outstanding-delta gauge is refreshed
+    * from it rather than from a second listing (without one, the index
+    * is listed once, after the write). Returns the index as it stands
+    * after the write, for the epoch's [[maybeCompact]]. */
+  def write(s: SparkSession, indexPath: String, epochId: Long, schema: StructType,
+            rows: Seq[Row], seen: Option[Snapshot] = None): Snapshot = {
     val delta = new Path(dir(indexPath, epochId))
-    rows match {
-      case Some(rows) =>
-        val pc = layoutOf(s, indexPath).partCols
-        val missing = pc.filterNot(rows.columns.contains)
-        require(missing.isEmpty,
-          s"delta for '$indexPath' must carry the base's partition " +
-            s"column(s) ${missing.mkString(", ")} — a flat delta under a " +
-            "partitioned base breaks both the union schema and the " +
-            "partition-pruned probe")
-        writeRows(rows, pc, delta.toString, clustered)
-      case None =>
-        val fs = fsOf(s, delta)
-        if (fs.exists(delta)) { fs.delete(delta, true); () }
+    val staging = new Path(delta.getParent, s".e$epochId.staging")
+    val fs = fsOf(s, delta)
+    if (fs.exists(staging))
+      require(fs.delete(staging, true), s"could not clear the stale $staging")
+    if (rows.nonEmpty) {
+      val pc = layoutOf(s, indexPath).partCols
+      val missing = pc.filterNot(schema.fieldNames.contains)
+      require(missing.isEmpty,
+        s"delta for '$indexPath' must carry the base's partition " +
+          s"column(s) ${missing.mkString(", ")} — a flat delta under a " +
+          "partitioned base breaks both the union schema and the " +
+          "partition-pruned probe")
+      writeParquet(s, staging, schema, pc, rows)
     }
+    if (fs.exists(delta)) require(fs.delete(delta, true), s"could not clear $delta")
+    if (rows.nonEmpty)
+      require(fs.rename(staging, delta), s"could not rename $staging to $delta")
     // gauge refresh under the per-index lock: set outside it, a count
     // taken here could overwrite a concurrent compaction's newer one
     // and persist a stale value until the next epoch
     lockFor(indexPath).synchronized {
-      IngestMetrics.setOutstandingDeltas(indexPath,
-        snapshot(s, indexPath).live.size.toLong)
+      val before = seen.getOrElse(snapshot(s, indexPath))
+      val others = (p: Path) => p.getName != delta.getName
+      val after = before.copy(
+        live = before.live.filter(others) ++
+          (if (rows.nonEmpty) Seq(fs.makeQualified(delta)) else Nil),
+        retired = before.retired.filter(others))
+      IngestMetrics.setOutstandingDeltas(indexPath, after.live.size.toLong)
+      after
+    }
+  }
+
+  /** `rows` (of `schema`) under `dir` as ONE Parquet file per partition
+    * dir of `partCols`, written on the driver by Spark's own Parquet
+    * writer — the codec, footer metadata and partition dir names are
+    * those a Spark write leaves. */
+  private def writeParquet(s: SparkSession, dir: Path, schema: StructType,
+                           partCols: Seq[String], rows: Seq[Row]): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val dataSchema = StructType(schema.filterNot(f => partCols.contains(f.name)))
+    val dataIdx = dataSchema.fieldNames.toSeq.map(schema.fieldIndex)
+    val partIdx = partCols.map(schema.fieldIndex)
+    val job = Job.getInstance(s.sessionState.newHadoopConf())
+    val writers = new ParquetFileFormat().prepareWrite(s, job, Map.empty, dataSchema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(dataSchema)
+    val file = s"part-00000-${java.util.UUID.randomUUID}-c000" +
+      writers.getFileExtension(task)
+    rows.groupBy(r => partIdx.map(r.get)).foreach { case (values, part) =>
+      val partDir = partCols.zip(values).foldLeft(dir) { case (d, (c, v)) =>
+        new Path(d, ExternalCatalogUtils.getPartitionPathString(c,
+          Option(v).map(_.toString).orNull))
+      }
+      val w = writers.newInstance(new Path(partDir, file).toString, dataSchema, task)
+      try part.foreach(r =>
+        w.write(toInternal(Row.fromSeq(dataIdx.map(r.get))).asInstanceOf[InternalRow]))
+      finally w.close()
     }
   }
 
@@ -562,14 +637,16 @@ private[graft] object DeltaIndex {
 
   /** Compact from inside a running stream's epoch N — [[IngestDoor]]
     * calls it after the epoch's callback — when the committed (< N)
-    * live delta count in the index's [[snapshot]] reached `every`: the
-    * cleanupLoop discipline, bounded so a long-lived stream's
-    * per-probe plan depth never exceeds `every` delta reads plus the
-    * base. */
+    * live delta count reached `every`: the cleanupLoop discipline,
+    * bounded so a long-lived stream's per-probe plan depth never
+    * exceeds `every` delta reads plus the base. The count is taken
+    * from `seen`, the snapshot the epoch carried ([[write]]'s result),
+    * else from a fresh [[snapshot]]. A stale `seen` (a callback that
+    * compacted) only over-counts, and [[compact]] lists afresh. */
   def maybeCompact(s: SparkSession, indexPath: String, epochId: Long,
-                   every: Int): Unit =
+                   every: Int, seen: Option[Snapshot] = None): Unit =
     if (every > 0 &&
-        snapshot(s, indexPath).live.count(epochOf(_) < epochId) >= every)
+        seen.getOrElse(snapshot(s, indexPath)).live.count(epochOf(_) < epochId) >= every)
       compact(s, indexPath, belowEpoch = epochId)
 
   /** True when `checkpointDir` already holds a streaming offsets log —
@@ -729,7 +806,9 @@ private[graft] object IngestWriters {
   *      the `_layout` sidecar;
   *   4. reads the topic with admission control;
   *   5. per epoch: the epoch function, the per-topic counters, `onEpoch`
-  *      when the epoch classified any row, then the fold;
+  *      when the epoch classified any row, then the fold — decided on
+  *      the snapshot the epoch read and its delta write updated, so a
+  *      plain epoch lists `_delta` once;
   *   6. binds the started query to its claim — a failed start releases
   *      it.
   *
@@ -758,9 +837,11 @@ private[graft] object IngestDoor {
 
   /** One door epoch: (session, epoch id, the store batch) → the
     * epoch's per-row verdicts, driver-local and bounded by the epoch,
-    * and its verdict count per status. The function projects the
-    * batch columns it reads. */
-  type Epoch = (SparkSession, Long, DataFrame) => (DataFrame, Map[String, Long])
+    * its verdict count per status, and the index as its delta write
+    * left it ([[DeltaIndex.write]]), for the fold decision. The
+    * function projects the batch columns it reads. */
+  type Epoch = (SparkSession, Long, DataFrame) =>
+    (DataFrame, Map[String, Long], DeltaIndex.Snapshot)
 
   def start(s: SparkSession, storeName: String, topic: String,
             indexPath: String, maxBatchesPerTrigger: Long,
@@ -779,12 +860,12 @@ private[graft] object IngestDoor {
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, epochId: Long) =>
           val sess = batch.sparkSession
-          val (verdicts, counts) = epoch(sess, epochId, batch)
+          val (verdicts, counts, index) = epoch(sess, epochId, batch)
           // per-topic admitted/dup counters (the reference's per-stream
           // metric family), from the epoch's own verdicts
           IngestMetrics.recordEpoch(topic, counts)
           if (counts.nonEmpty) onEpoch(epochId, verdicts)
-          DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery)
+          DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery, Some(index))
           ()
         }
         .start()

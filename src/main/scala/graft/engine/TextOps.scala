@@ -2943,26 +2943,26 @@ object TextOps {
     StructField("band", IntegerType, nullable = false),
     StructField("sig", StringType, nullable = false)))
 
-  /** [[neardupIngestEpoch]] plus the epoch's verdict count per status.
-    * The epoch is bounded by the door's admission control
-    * (`maxBatchesPerTrigger` buffered batches), so it is classified on
-    * the DRIVER and only the probe into the index is distributed —
-    * four Spark jobs:
+  /** [[neardupIngestEpoch]] plus the epoch's verdict count per status
+    * and the index as its delta write left it. The epoch is bounded by
+    * the door's admission control (`maxBatchesPerTrigger` buffered
+    * batches), so it is classified on the DRIVER and only the probe
+    * into the index is distributed — three Spark jobs:
     *   1. [[md5BandArrays]] bands the epoch (the native expression of
     *      the distributed path) and is collected;
     *   2. [[indexHits]] probes the index with the epoch's (band, sig)
     *      keys through a broadcast LEFT SEMI — 3. the broadcast build —
     *      and collects the hit keys; an epoch with no keys reads no
-    *      index;
-    *   4. the admitted docs' bands are written from ONE task (one
-    *      delta file per bucket dir).
-    * Verdicts follow [[neardupVerdicts]]' rule exactly (see
-    * [[localVerdicts]]), one row per input row, null-id and band-less
-    * docs `unique`. The returned frame is driver-local: collecting it
-    * runs no job. */
+    *      index.
+    * The admitted docs' bands are already on the driver, so
+    * [[DeltaIndex.write]] writes them there (one delta file per bucket
+    * dir), with the snapshot the probe read. Verdicts follow
+    * [[neardupVerdicts]]' rule exactly (see [[localVerdicts]]), one row
+    * per input row, null-id and band-less docs `unique`. The returned
+    * frame is driver-local: collecting it runs no job. */
   private def neardupEpoch(s: SparkSession, indexPath: String, epochId: Long,
                            data: DataFrame, bandBuckets: Int)
-      : (DataFrame, Map[String, Long]) = {
+      : (DataFrame, Map[String, Long], DeltaIndex.Snapshot) = {
     import scala.jdk.CollectionConverters._
     IndexLayout.validate(s, indexPath, "bandBuckets", bandBuckets.toString)
     val idField = data.schema("doc_id")
@@ -2986,10 +2986,13 @@ object TextOps {
       else rows.iterator.filter(!_.isNullAt(1)).flatMap(r =>
         bandsOf(r).zip(r.getSeq[Int](2))).toMap
     val keys = byId.values.flatMap(_._2).toSeq.distinct
-    val hits =
-      if (keys.isEmpty) Set.empty[BandKey]
-      else indexHits(s, indexPath, epochId, keys,
-        keys.flatMap(bucketOf.get).distinct, bandBuckets)
+    val (hits, seen) =
+      if (keys.isEmpty) (Set.empty[BandKey], None)
+      else {
+        val (h, read) = indexHits(s, indexPath, epochId, keys,
+          keys.flatMap(bucketOf.get).distinct, bandBuckets)
+        (h, Some(read))
+      }
     val status = localVerdicts(byId.map { case (k, (_, b)) => k -> b }, hits, ord)
     val verdicts = rows.toSeq.map(r => Row(r.get(0),
       if (r.isNullAt(0)) "unique" else status(toKey(r.get(0)))))
@@ -3002,39 +3005,38 @@ object TextOps {
     // so the delta scans prune exactly like the base scan
     val bandSchema = StructType(Seq(idField) ++ bandKeySchema.fields ++
       (if (bandBuckets > 0) Seq(StructField("bkt", IntegerType)) else Nil))
-    DeltaIndex.write(s, indexPath, epochId,
-      Some(admitted).filter(_.nonEmpty)
-        .map(a => s.createDataFrame(a.asJava, bandSchema).coalesce(1)),
-      clustered = true)
+    val index = DeltaIndex.write(s, indexPath, epochId, bandSchema, admitted, seen)
     val verdictSchema = StructType(Seq(idField,
       StructField("status", StringType, nullable = false)))
     (s.createDataFrame(verdicts.asJava, verdictSchema),
-      verdicts.groupBy(_.getString(1)).map { case (st, v) => st -> v.size.toLong })
+      verdicts.groupBy(_.getString(1)).map { case (st, v) => st -> v.size.toLong },
+      index)
   }
 
   /** The index's hit keys among an epoch's (band, sig) `keys` (non-
     * empty): the index (base + every other epoch's delta; on a
     * partitioned layout pre-filtered to `buckets`) joined LEFT SEMI
     * against the broadcast keys, deduplicated per partition and
-    * collected — at most the epoch's keys per index partition. The
-    * probe plan contract is required on this plan every epoch. */
+    * collected — at most the epoch's keys per index partition — with
+    * the snapshot the probe read. The probe plan contract is required
+    * on this plan every epoch. */
   private def indexHits(s: SparkSession, indexPath: String, epochId: Long,
                         keys: Seq[BandKey], buckets: Seq[Int],
-                        bandBuckets: Int): Set[BandKey] = {
+                        bandBuckets: Int): (Set[BandKey], DeltaIndex.Snapshot) = {
     import scala.jdk.CollectionConverters._
-    val index = DeltaIndex.read(s, indexPath, epochId)
+    val (index, read) = DeltaIndex.readSnapshot(s, indexPath, epochId)
     val indexIn = bucketPush(index, buckets, bandBuckets)
     val probe = s.createDataFrame(keys.map { case (b, g) => Row(b, g) }.asJava,
       bandKeySchema)
     val qe = indexIn.join(broadcast(probe), Seq("band", "sig"), "left_semi")
       .select("band", "sig").queryExecution
-    DeltaIndex.requireProbeContract(s, indexPath, s"epoch $epochId", qe.sparkPlan)
+    DeltaIndex.requireProbeContract(s, read, s"epoch $epochId", qe.sparkPlan)
     lastEpochPlan.set(qe.sparkPlan)
-    qe.toRdd.mapPartitions { it =>
+    (qe.toRdd.mapPartitions { it =>
       val seen = scala.collection.mutable.HashSet.empty[BandKey]
       it.foreach(r => seen += (r.getInt(0) -> r.getUTF8String(1).toString))
       seen.iterator
-    }.collect().toSet
+    }.collect().toSet, read)
   }
 
   /** [[neardupVerdicts]]' rule over one epoch's doc_ids (Catalyst form)

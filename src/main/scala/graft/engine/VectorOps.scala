@@ -2083,32 +2083,34 @@ object VectorOps {
     annEpoch(s, indexPath, epochId, data, nPlanes, dim, thresholdMicro,
       probeBits, bucketPartitioned, occupancyWarnMean)._1
 
-  /** [[annIngestEpoch]] plus the epoch's verdict count per status. The
-    * epoch is bounded by the door's admission control, so its
-    * classification is COLLECTED once: those rows give the status
-    * counts, the occupancy mean (from `n_cand`), the admitted ids and
-    * the returned frame — driver-local, with the classification's
-    * schema, so collecting it runs no job. The distributed work is the
-    * quantize checkpoint of the batch, the probe chain behind the
-    * collect, and the delta write of `probes` ⋈ the distinct admitted
-    * ids — exactly the epoch's probe rows of admitted ids (a null-id
-    * `new` row admits nothing). */
+  /** [[annIngestEpoch]] plus the epoch's verdict count per status and
+    * the index as its delta write left it. The epoch is bounded by the
+    * door's admission control, so its classification is COLLECTED
+    * once: those rows give the status counts, the occupancy mean (from
+    * `n_cand`), the admitted ids and the returned frame — driver-local,
+    * with the classification's schema, so collecting it runs no job.
+    * The distributed work is the quantize checkpoint of the batch, the
+    * probe chain behind the collect, and the collect of `probes` ⋈ the
+    * distinct admitted ids — exactly the epoch's probe rows of admitted
+    * ids (a null-id `new` row admits nothing), bounded by the epoch —
+    * which [[DeltaIndex.write]] writes on the driver, with the snapshot
+    * the probe read. */
   private def annEpoch(s: SparkSession, indexPath: String, epochId: Long,
                        data: DataFrame, nPlanes: Int, dim: Int,
                        thresholdMicro: Long, probeBits: Int,
                        bucketPartitioned: Boolean, occupancyWarnMean: Double)
-      : (DataFrame, Map[String, Long]) = {
+      : (DataFrame, Map[String, Long], DeltaIndex.Snapshot) = {
     import scala.jdk.CollectionConverters._
     IndexLayout.validate(s, indexPath, "nPlanes", nPlanes.toString)
     IndexLayout.validate(s, indexPath, "dim", dim.toString)
-    val (classified, probes) = classifyAnnCore(
-      DeltaIndex.read(s, indexPath, epochId), data, nPlanes, dim,
+    val (index, read) = DeltaIndex.readSnapshot(s, indexPath, epochId)
+    val (classified, probes) = classifyAnnCore(index, data, nPlanes, dim,
       thresholdMicro, probeBits, indexKeyPrune = bucketPartitioned)
     // plan contract per epoch, on the un-executed frame (see
     // DeltaIndex.requireProbeContract): staged index read + broadcast semi
     val qe = classified.queryExecution
     lastEpochPlan.set(qe.sparkPlan)
-    DeltaIndex.requireProbeContract(s, indexPath, s"epoch $epochId", qe.sparkPlan)
+    DeltaIndex.requireProbeContract(s, read, s"epoch $epochId", qe.sparkPlan)
     val rows = classified.collect().toSeq
     val status = classified.schema.fieldIndex("status")
     val counts = rows.groupBy(_.getString(status))
@@ -2133,15 +2135,14 @@ object VectorOps {
     // them to k admitted rows would write it k² times
     val admitted = rows.filter(r => r.getString(status) == "new" && !r.isNullAt(0))
       .map(r => org.apache.spark.sql.Row(r.get(0))).distinct
-    DeltaIndex.write(s, indexPath, epochId,
-      Some(admitted).filter(_.nonEmpty).map { ids =>
-        probes.join(s.createDataFrame(ids.asJava,
-            org.apache.spark.sql.types.StructType(Seq(classified.schema("probe_id")))),
-            "probe_id")
-          .select(col("probe_id").as("vec_id"), col("v"), col("nv"),
-            col("bucket0").as("bucket"))
-      })
-    (s.createDataFrame(rows.asJava, classified.schema), counts)
+    val delta = probes.join(s.createDataFrame(admitted.asJava,
+        org.apache.spark.sql.types.StructType(Seq(classified.schema("probe_id")))),
+        "probe_id")
+      .select(col("probe_id").as("vec_id"), col("v"), col("nv"),
+        col("bucket0").as("bucket"))
+    val written = DeltaIndex.write(s, indexPath, epochId, delta.schema,
+      if (admitted.isEmpty) Nil else delta.collect().toSeq, Some(read))
+    (s.createDataFrame(rows.asJava, classified.schema), counts, written)
   }
 
   /** The ANN ingest door ([[IngestDoor]]), the vector mirror of

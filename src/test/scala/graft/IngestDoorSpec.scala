@@ -20,7 +20,9 @@ import graft.sources.GraftStoreRegistry
   * classify, a door whose index path renders past Spark's
   * plan-metadata abbreviation limit — and the ANN door: its job
   * budget, when its compaction lands, and its epoch's delta writes —
-  * and the one staging call restaging a compacted index. */
+  * the one staging call restaging a compacted index, and the
+  * driver-written delta: one `_delta` listing per plain epoch, a stale
+  * staging dir, one file per partition dir, a Spark write's footer. */
 class IngestDoorSpec extends SparkSuite {
 
   private val docSchema = StructType(Seq(
@@ -90,7 +92,7 @@ class IngestDoorSpec extends SparkSuite {
                            b <- Option(p.getProperty("streaming.sql.batchId")))
       yield (q, b.toLong)).groupBy(identity).map { case (k, v) => k -> v.size }
 
-  test("door job budget: a 4-epoch stream with one compaction runs at most 4 Spark jobs per plain epoch and 5 in the compaction epoch") {
+  test("door job budget: a 4-epoch stream with one compaction runs at most 3 Spark jobs per plain epoch and 4 in the compaction epoch") {
     val dir = java.nio.file.Files.createTempDirectory("graft_door_jobs")
     val idx = dir.resolve("jb_idx").toString
     stage(idx, Seq("e0", "e1"))
@@ -123,15 +125,46 @@ class IngestDoorSpec extends SparkSuite {
       val byEpoch = perBatch(jobs).collect { case ((q, b), n) if q == queryId => b -> n }
       assert(byEpoch.keySet == Set(0L, 1L, 2L, 3L), s"jobs by epoch: $byEpoch")
       info(s"jobs by epoch: ${byEpoch.toSeq.sorted.mkString(", ")}")
-      // the banding collect, the probe's broadcast build and semi-join
-      // collect, and the delta write; the callback's collect of the
-      // driver-local verdicts runs none; the compaction adds its merge
-      // write
-      Seq(0L, 1L, 3L).foreach(e => assert(byEpoch(e) <= 4,
-        s"plain epoch $e ran ${byEpoch(e)} jobs (budget 4): $byEpoch"))
-      assert(byEpoch(2L) <= 5,
-        s"compaction epoch ran ${byEpoch(2L)} jobs (budget 5): $byEpoch")
+      // the banding collect and the probe's broadcast build and
+      // semi-join collect; the delta is written on the driver and the
+      // callback's collect of the driver-local verdicts runs none; the
+      // compaction adds its merge write
+      Seq(0L, 1L, 3L).foreach(e => assert(byEpoch(e) <= 3,
+        s"plain epoch $e ran ${byEpoch(e)} jobs (budget 3): $byEpoch"))
+      assert(byEpoch(2L) <= 4,
+        s"compaction epoch ran ${byEpoch(2L)} jobs (budget 4): $byEpoch")
     } finally GraftStoreRegistry.unregister("s_jobs")
+  }
+
+  test("a plain door epoch lists the index's _delta once; the fold lists afresh") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_door_listings")
+    val idx = dir.resolve("ls_idx").toString
+    stage(idx, Seq("e0", "e1"))
+    // every epoch admits a doc; compactEvery = 2 folds e0 and e1 at the
+    // end of epoch 2, between epoch 2's callback and epoch 3's
+    val batches = (0 until 4).map(i => Seq(Row(100L + i, text(s"f$i"))))
+    val st = new StreamStore(1 << 20, Long.MaxValue / 2)
+    batches.foreach(b => st.append("docs_ls", docSchema, b))
+    GraftStoreRegistry.register("s_ls", st)
+    val at = TrieMap.empty[Long, Long]
+    try {
+      val q = TextOps.startNeardupIngest(spark, "s_ls", "docs_ls", idx,
+        maxBatchesPerTrigger = 1, checkpointDir = dir.resolve("ckpt").toString,
+        onEpoch = (e, _) => { at.put(e, DeltaIndex.listings(idx)); () },
+        compactEvery = 2)
+      try q.processAllAvailable() finally q.stop()
+      assert(q.exception.isEmpty, s"door failed: ${q.exception}")
+      assert(at.keySet == Set(0L, 1L, 2L, 3L))
+      // from one callback to the next: the previous epoch's fold
+      // decision, then this epoch's read, probe contract and delta write
+      val between = (1L to 3L).map(e => e -> (at(e) - at(e - 1))).toMap
+      assert(between(1L) == 1L && between(2L) == 1L,
+        s"a plain epoch takes one _delta listing: $between")
+      assert(between(3L) > 1L, s"the fold lists the index itself: $between")
+      assert(IngestMetrics.compactionCounts.toMap.get(idx).contains(1L))
+      assert(IngestMetrics.outstandingDeltaGauges.toMap.get(idx).contains(2L),
+        s"e2 and e3 stay outstanding: ${IngestMetrics.outstandingDeltaGauges}")
+    } finally GraftStoreRegistry.unregister("s_ls")
   }
 
   test("the compacting epoch's callback still sees compactEvery outstanding deltas, and the fold lands before the next epoch reads the index") {
@@ -214,7 +247,7 @@ class IngestDoorSpec extends SparkSuite {
       assert(byEpoch.keySet == Set(0L, 1L, 2L, 3L), s"jobs by epoch: $byEpoch")
       info(s"jobs by epoch: ${byEpoch.toSeq.sorted.mkString(", ")}")
       // the quantize checkpoint, the probe chain's stages and its
-      // collect, and the admitted rows' broadcast join and write; the
+      // collect, and the admitted rows' broadcast join and its collect; the
       // callback's collect of the driver-local verdicts runs none; the
       // compaction adds its merge write
       Seq(0L, 1L, 3L).foreach(e => assert(byEpoch(e) <= 10,
@@ -495,5 +528,106 @@ class IngestDoorSpec extends SparkSuite {
     assert(err.getMessage.contains("was staged with bandBuckets=8"), err.getMessage)
     assert(verdicts(TextOps.classifyNeardupBatch(spark, idx, probe, bandBuckets = 8)).toMap ==
       Map(900L -> "dup_of_existing", 901L -> "unique"))
+  }
+
+  /** The parquet files directly under `d`. */
+  private def parquetFiles(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".parquet"))
+
+  /** The partition dirs under `d` and their parquet file counts. */
+  private def filesPerPartDir(d: java.io.File, key: String): Map[String, Int] = {
+    val kids = d.listFiles().toSeq.filter(_.isDirectory)
+    assert(kids.nonEmpty && kids.forall(_.getName.startsWith(s"$key=")),
+      s"$d holds only $key= dirs: ${d.list().toSeq}")
+    kids.map(k => k.getName -> parquetFiles(k).size).toMap
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+
+  test("a stale .e<n>.staging dir and a replayed epoch that admits fewer rows leave no ghost rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_delta_staging")
+    val idx = dir.resolve("sg_idx").toString
+    stage(idx, Seq("e0"))
+    val delta = new java.io.File(s"${idx}_delta/e3")
+    // a first attempt of epoch 3 admits two docs...
+    TextOps.neardupIngestEpoch(spark, idx, 3L,
+      df(Seq(Row(300L, text("g0")), Row(301L, text("g1"))))).collect()
+    assert(parquetFiles(delta).size == 1, s"one delta file: ${delta.list().toSeq}")
+    // ...a second attempt crashed mid-write, leaving its staging dir
+    // with both admissions in it
+    val staging = new java.io.File(s"${idx}_delta/.e3.staging")
+    java.nio.file.Files.createDirectories(staging.toPath)
+    delta.listFiles().foreach(f => java.nio.file.Files.copy(f.toPath,
+      staging.toPath.resolve(f.getName)))
+    // the replay admits only doc 300: its batch lost doc 301
+    val out = verdicts(TextOps.neardupIngestEpoch(spark, idx, 3L,
+      df(Seq(Row(300L, text("g0"))))))
+    assert(out == Seq(300L -> "unique"))
+    assert(!staging.exists, "the stale staging dir is cleared")
+    assert(parquetFiles(delta).size == 1, s"one delta file: ${delta.list().toSeq}")
+    val served = DeltaIndex.readAll(spark, idx).select("doc_id").distinct()
+      .collect().map(_.getLong(0)).toSet
+    assert(served == Set(0L, 300L), s"no ghost admission of doc 301: $served")
+  }
+
+  test("bandBuckets and bucketPartitioned deltas write one file per bkt=/bucket= dir, and readAll after compact equals the rows before it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_delta_parts")
+    val nd = dir.resolve("np_idx").toString
+    TextOps.stageNeardupIndex(df(Seq(Row(0L, text("e0")), Row(1L, text("e1")))), nd,
+      bandBuckets = 4)
+    TextOps.neardupIngestEpoch(spark, nd, 0L, df((0 until 6).map(i =>
+      Row(100L + i, text(s"p$i")))), bandBuckets = 4).collect()
+    val ndFiles = filesPerPartDir(new java.io.File(s"${nd}_delta/e0"), "bkt")
+    assert(ndFiles.size > 1 && ndFiles.values.forall(_ == 1), s"files per bkt dir: $ndFiles")
+    val ann = dir.resolve("ap_idx").toString
+    VectorOps.stageAnnIndex(spark.createDataFrame(spark.sparkContext.parallelize(
+        List(Row(0L, oneHot(0)))), embSchema), ann, nPlanes = 8, dim = 16,
+      bucketPartitioned = true)
+    val annOut = annVerdicts(VectorOps.annIngestEpoch(spark, ann, 0L,
+      spark.createDataFrame(spark.sparkContext.parallelize((1 until 6).map(i =>
+        Row(100L + i, oneHot(i))).toList), embSchema),
+      nPlanes = 8, dim = 16, bucketPartitioned = true))
+    assert(annOut.values.toSet == Set("new"), s"verdicts: $annOut")
+    val annFiles = filesPerPartDir(new java.io.File(s"${ann}_delta/e0"), "bucket")
+    assert(annFiles.nonEmpty && annFiles.values.forall(_ == 1), s"files per bucket dir: $annFiles")
+    Seq(nd, ann).foreach { idx =>
+      val before = sortedRows(DeltaIndex.readAll(spark, idx))
+      DeltaIndex.compact(spark, idx)
+      assert(DeltaIndex.outstanding(spark, idx) == 0)
+      assert(sortedRows(DeltaIndex.readAll(spark, idx)) == before, s"rows of $idx across compact")
+    }
+  }
+
+  test("the driver-written delta file carries the schema, codec and footer metadata of a Spark write of the same rows") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val dir = java.nio.file.Files.createTempDirectory("graft_delta_footer")
+    val idx = dir.resolve("ft_idx").toString
+    stage(idx, Seq("e0"))
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("band", IntegerType, nullable = false),
+      StructField("sig", StringType, nullable = false)))
+    val rows = Seq(Row(7L, 0, "a1"), Row(7L, 1, "b2"), Row(8L, 0, "c3"))
+    DeltaIndex.write(spark, idx, 9L, schema, rows)
+    val sparkDir = dir.resolve("by_spark").toString
+    spark.createDataFrame(rows.asJava, schema).coalesce(1).write.parquet(sparkDir)
+    def footer(d: String) = {
+      val Seq(f) = parquetFiles(new java.io.File(d))
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString), spark.sparkContext.hadoopConfiguration))
+      try {
+        val m = r.getFooter
+        (m.getFileMetaData.getSchema, m.getFileMetaData.getKeyValueMetaData.asScala.toMap,
+          m.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet,
+          f.getName.dropWhile(_ != '.'))
+      } finally r.close()
+    }
+    assert(footer(DeltaIndex.dir(idx, 9L)) == footer(sparkDir))
+    assert(sortedRows(spark.read.parquet(DeltaIndex.dir(idx, 9L))) ==
+      sortedRows(spark.createDataFrame(rows.asJava, schema)))
   }
 }
