@@ -23,6 +23,8 @@ import java.util.concurrent.atomic.AtomicLong
 object IngestMetrics {
   private val counts = new ConcurrentHashMap[(String, String), AtomicLong]()
   private val epochs = new ConcurrentHashMap[String, AtomicLong]()
+  // (topic, phase) → nanoseconds spent in that phase of the door's epochs
+  private val phaseNanos = new ConcurrentHashMap[(String, String), AtomicLong]()
 
   private def normalize(status: String): String = status match {
     case "unique" | "new" => "admitted"
@@ -44,6 +46,24 @@ object IngestMetrics {
                                  statusCounts: Map[String, Long]): Unit = {
     epochs.computeIfAbsent(topic, _ => new AtomicLong()).incrementAndGet()
     statusCounts.foreach { case (status, n) => add(topic, status, n) }
+  }
+
+  /** Time one epoch spent per phase — `epoch` (the door's epoch
+    * function: banding, probe, verdicts, delta write), `callback` (the
+    * counters and `onEpoch`) and `fold` (the compaction decision, the
+    * compaction and the next epoch's scan preparation) — in nanoseconds,
+    * as [[IngestDoor]] timed it. */
+  private[graft] def recordPhases(topic: String, nanos: Seq[(String, Long)]): Unit =
+    nanos.foreach { case (phase, n) =>
+      phaseNanos.computeIfAbsent((topic, phase), _ => new AtomicLong()).addAndGet(n)
+    }
+
+  /** (topic, phase) → seconds spent in that epoch phase, for the
+    * exposition. */
+  def epochSeconds: Seq[((String, String), Double)] = {
+    import scala.jdk.CollectionConverters._
+    phaseNanos.asScala.map { case (k, v) => k -> v.get() / 1e9 }.toSeq
+      .sortBy { case ((t, p), _) => (t, p) }
   }
 
   // ---- LSM maintenance observability (round-14): a production door
@@ -110,6 +130,8 @@ object IngestMetrics {
     counts.keySet.asScala.filter(_._1 == topic)
       .foreach(k => counts.remove(k))
     epochs.remove(topic)
+    phaseNanos.keySet.asScala.filter(_._1 == topic)
+      .foreach(k => phaseNanos.remove(k))
     ()
   }
 }

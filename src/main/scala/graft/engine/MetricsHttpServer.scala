@@ -124,6 +124,11 @@ final class MetricsHttpServer(
       IngestMetrics.epochCounts.map { case (t, v) =>
         (Seq("topic" -> t), v.toDouble)
       })
+    metric("graft_ingest_epoch_seconds_total", "counter",
+      "Seconds ingest epochs spent per topic and phase (epoch function, callback, fold)")(
+      IngestMetrics.epochSeconds.map { case ((t, p), v) =>
+        (Seq("topic" -> t, "phase" -> p), v)
+      })
 
     // LSM maintenance pressure (round-14): per-epoch probe plan depth
     // is outstanding deltas + base, so the gauge IS the plan-depth

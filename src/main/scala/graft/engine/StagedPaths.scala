@@ -91,23 +91,42 @@ private[graft] object StagedPaths {
   * Every operation sees the index through ONE [[snapshot]], taken
   * under the per-index lock after crash recovery: the pointer is read
   * and `_delta` listed nowhere else. A door epoch takes one, in its
-  * read ([[readSnapshot]]), and carries it through the epoch — its
-  * probe contract, its delta write's gauge and its fold decision —
+  * read ([[probeScans]] for the near-dup door, [[readSnapshot]] for the
+  * ANN door), and carries it through the epoch — its probe contract,
+  * its delta write's gauge, its fold decision and, after the fold, the
+  * next epoch's scan preparation —
   * because [[IngestWriters]]' single writer is the only thing that
   * changes the delta set; compaction and door start list afresh.
   *
   * An epoch's delta is bounded by the epoch and already on the driver,
   * so [[write]] writes it there — one Parquet file per partition dir
   * and one rename, no Spark job and no file-commit protocol. Staging
-  * and compaction, whose input is corpus-sized, write through Spark. */
+  * and compaction, whose input is corpus-sized, write through Spark.
+  *
+  * PREPARED SCANS ([[PreparedScan]]): every dir a probe reads — a base
+  * version or a committed delta — is immutable until [[write]]
+  * overwrites it or a compaction retires it, so the near-dup door plans
+  * each dir's read through Spark SQL ONCE: planned, checked against the
+  * scan contract (a file scan of that dir, no exchange) and turned into
+  * a row RDD, kept in the per-index entry. An epoch's probe is then one
+  * Spark job over the union of its snapshot's prepared scans
+  * ([[probeScans]]); the door prepares the next epoch's scans after its
+  * fold ([[prepare]]). [[write]] drops `e<n>` before overwriting it,
+  * [[compact]] drops the folded deltas and the previous base, and
+  * [[stage]] and crash recovery drop them all, so an index holds at
+  * most one base plus its live deltas. `readAll` and the ANN door keep
+  * their SQL reads. */
 private[graft] object DeltaIndex {
+  import org.apache.spark.rdd.RDD
   import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   import org.apache.spark.sql.functions.col
   import org.apache.spark.sql.types.StructType
   import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
   import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+  import org.apache.spark.sql.execution.datasources.FilePartition
   import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+  import org.apache.spark.sql.execution.exchange.Exchange
   import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
   import org.apache.spark.sql.catalyst.plans.LeftSemi
   import org.apache.hadoop.fs.{FileSystem, Path}
@@ -140,11 +159,25 @@ private[graft] object DeltaIndex {
     * the schema explicitly: an inferring `spark.read.parquet` runs one
     * schema-discovery job per scanned dir, per epoch; and probe-time
     * dial validation reads no file. `listings` counts the `_delta`
-    * listings taken, for the specs. Guarded by the monitor. */
+    * listings taken, for the specs. `scans` holds the index's
+    * [[PreparedScan]]s by [[dirKey]], and `version` the base version
+    * last listed or published in this JVM — a snapshot of another
+    * version is stale and prepares nothing. Guarded by the monitor. */
   private final class Entry {
     var layout: Option[Layout] = None
     var listings = 0L
+    val scans = scala.collection.mutable.Map.empty[String, PreparedScan]
+    var version = -1L
   }
+
+  /** One immutable index dir's read, planned once: the executed `plan`,
+    * its row `rdd` and, per split of the rdd, the partition values of
+    * the file it reads (the empty row on a flat layout). On a
+    * partitioned layout no split holds two files, so a split's
+    * partition values are its whole content's. */
+  private[graft] final class PreparedScan(val dir: String, val plan: SparkPlan,
+                                          val rdd: RDD[InternalRow],
+                                          val splits: IndexedSeq[InternalRow])
 
   private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
@@ -156,6 +189,11 @@ private[graft] object DeltaIndex {
 
   private def lockFor(indexPath: String): Entry =
     entries.computeIfAbsent(canonicalKey(indexPath), _ => new Entry)
+
+  /** The key of an index dir among its [[PreparedScan]]s: snapshots name
+    * a dir qualified (a listing) or not (the base), so both forms map to
+    * the canonical local path. */
+  private[graft] def dirKey(dir: String): String = canonicalKey(new Path(dir).toUri.getPath)
 
   def dir(indexPath: String, epochId: Long): String =
     s"${indexPath}_delta/e$epochId"
@@ -214,9 +252,11 @@ private[graft] object DeltaIndex {
   /** [[snapshot]] without the recovery, for the recovery itself. Caller
     * holds the per-index lock. */
   private def listing(fs: FileSystem, indexPath: String): Snapshot = {
-    lockFor(indexPath).listings += 1
+    val entry = lockFor(indexPath)
+    entry.listings += 1
     val ptr = versionPtr(indexPath)
     val n = if (fs.exists(ptr)) readText(fs, ptr).trim.toLong else 0L
+    entry.version = n
     val root = new Path(indexPath + "_delta")
     val deltas =
       if (fs.exists(root))
@@ -266,8 +306,10 @@ private[graft] object DeltaIndex {
     dirs.map(s.read.schema(schema).parquet(_)).reduce(_ unionByName _)
   }
 
-  /** The doors' per-epoch plan contract, checked STRUCTURALLY on the
-    * un-executed physical plan (static properties — no data touched):
+  /** The ANN door's per-epoch plan contract (the near-dup door checks
+    * its own once per prepared scan, [[prepareScan]]), checked
+    * STRUCTURALLY on the un-executed physical plan (static properties —
+    * no data touched):
     * the index's current base is scanned, matched on the scan's root
     * paths rather than the rendered plan (which abbreviates locations
     * past `spark.sql.maxMetadataStringLength`), and the index is
@@ -291,6 +333,113 @@ private[graft] object DeltaIndex {
         case _ => false
       }.isDefined,
       s"$what must probe via broadcast semi-join:\n" + plan.toString.take(2000))
+  }
+
+  /** The near-dup door's probe read: the index's [[snapshot]] (its one
+    * listing) and the [[PreparedScan]]s of `cols` over the snapshot's
+    * base and every live delta of OTHER epochs, base first — a scan
+    * missing from the entry (a door's start, a replay) is prepared here.
+    * The union the epoch probes must start with the snapshot's base. */
+  private[graft] def probeScans(s: SparkSession, indexPath: String, excludeEpoch: Long,
+                                cols: Seq[String]): (Seq[PreparedScan], Snapshot) = {
+    val entry = lockFor(indexPath)
+    entry.synchronized {
+      val snap = snapshot(s, indexPath)
+      val scans = scansOf(s, indexPath, entry, snap, snap.base +:
+        snap.live.filter(_.getName != s"e$excludeEpoch").map(_.toString), cols)
+      require(scans.headOption.exists(_.dir == dirKey(snap.base)),
+        s"epoch $excludeEpoch's probe of '$indexPath' must start with its base ${snap.base}")
+      (scans, snap)
+    }
+  }
+
+  /** Prepare the scans of `cols` the door's next epoch reads: `snap`'s
+    * base and live deltas, the index as the epoch's fold left it — taken
+    * from its delta write or its compaction, so no listing. A snapshot
+    * of a version older than the last one published in this JVM (a
+    * callback that compacted) prepares nothing; the next probe prepares
+    * what it misses. */
+  private[graft] def prepare(s: SparkSession, indexPath: String, snap: Snapshot,
+                             cols: Seq[String]): Unit = {
+    val entry = lockFor(indexPath)
+    entry.synchronized {
+      if (entry.version == snap.version)
+        scansOf(s, indexPath, entry, snap, snap.base +: snap.live.map(_.toString), cols)
+      ()
+    }
+  }
+
+  /** The prepared scans of the index's dirs, for the specs. */
+  private[graft] def preparedScans(indexPath: String): Seq[PreparedScan] = {
+    val entry = lockFor(indexPath)
+    entry.synchronized(entry.scans.values.toSeq)
+  }
+
+  /** The [[PreparedScan]]s of `cols` over `dirs` of `snap`, in order,
+    * each prepared when the entry lacks it; a scan of any dir outside
+    * `snap` (a retired base or delta) is dropped, so the entry holds at
+    * most one base plus the live deltas. Caller holds the entry's lock. */
+  private def scansOf(s: SparkSession, indexPath: String, entry: Entry, snap: Snapshot,
+                      dirs: Seq[String], cols: Seq[String]): Seq[PreparedScan] = {
+    val inSnap = (snap.base +: snap.live.map(_.toString)).map(dirKey).toSet
+    entry.scans.filterInPlace((k, _) => inSnap(k))
+    dirs.map { d =>
+      val k = dirKey(d)
+      entry.scans.getOrElseUpdate(k, prepareScan(s, indexPath, d, cols))
+    }
+  }
+
+  /** Plan `dir`'s read of `cols` and check it once: the executed plan
+    * reads `dir` through a [[FileSourceScanExec]] (matched on its root
+    * path, like [[requireProbeContract]]) and holds no exchange, so a
+    * probe over it filters map-side and never shuffles the index. A
+    * partitioned layout is planned in [[filePerSplit]]'s session and
+    * must give one file per split, so a probe prunes its splits by
+    * partition value exactly as a static partition filter prunes files. */
+  private def prepareScan(s: SparkSession, indexPath: String, dir: String,
+                          cols: Seq[String]): PreparedScan = {
+    val layout = layoutOf(s, indexPath)
+    val reader = if (layout.partCols.isEmpty) s else filePerSplit(s)
+    val qe = reader.read.schema(layout.schema).parquet(dir)
+      .select(cols.map(col): _*).queryExecution
+    val plan = qe.executedPlan
+    val root = {
+      val p = new Path(dir)
+      fsOf(s, p).makeQualified(p)
+    }
+    val scan = plan.collectFirst {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.contains(root) => f
+    }
+    require(scan.isDefined,
+      s"the prepared scan must read $root through a file scan:\n" + plan.toString.take(2000))
+    require(plan.find(_.isInstanceOf[Exchange]).isEmpty,
+      s"the prepared scan of $root must not shuffle:\n" + plan.toString.take(2000))
+    val files = scan.get.inputRDD.partitions.toIndexedSeq.map {
+      case f: FilePartition => f.files.toSeq
+      case p => throw new IllegalStateException(s"unexpected split $p in the scan of $root")
+    }
+    require(layout.partCols.isEmpty || files.forall(_.map(_.filePath).distinct.size <= 1),
+      s"a prepared scan of the partitioned $root packed two files into one split")
+    val rdd = qe.toRdd
+    require(rdd.getNumPartitions == files.size,
+      s"the prepared scan of $root must keep one split per file split")
+    new PreparedScan(dirKey(dir), plan, rdd,
+      files.map(_.headOption.fold(InternalRow.empty)(_.partitionValues)))
+  }
+
+  private val splitSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** `s` with its runtime SQL conf, in a session whose
+    * `openCostInBytes` equals `maxPartitionBytes`: a split is full once
+    * it holds one file, so no split packs two. Derived once per session. */
+  private def filePerSplit(s: SparkSession): SparkSession = splitSessions.synchronized {
+    splitSessions.computeIfAbsent(s, _ => {
+      val n = s.newSession()
+      s.conf.getAll.foreach { case (k, v) => if (n.conf.isModifiable(k)) n.conf.set(k, v) }
+      n.conf.set("spark.sql.files.openCostInBytes",
+        n.conf.get("spark.sql.files.maxPartitionBytes"))
+      n
+    })
   }
 
   /** The COMPLETE index — base plus every live delta. The read a
@@ -333,6 +482,7 @@ private[graft] object DeltaIndex {
         .foreach(p => if (fs.exists(p)) fs.delete(p, true))
       versionDirs(fs, indexPath).foreach { case (p, _) => fs.delete(p, true) }
       entry.layout = None
+      entry.scans.clear()
       writeRows(rows, partCol.toSeq, indexPath)
       if (dials.nonEmpty)
         writeText(fs, layoutPath(indexPath), IndexLayout.format(dials))
@@ -399,13 +549,15 @@ private[graft] object DeltaIndex {
           "partition-pruned probe")
       writeParquet(s, staging, schema, pc, rows)
     }
+    val entry = lockFor(indexPath)
+    entry.synchronized(entry.scans.remove(dirKey(delta.toString)))
     if (fs.exists(delta)) require(fs.delete(delta, true), s"could not clear $delta")
     if (rows.nonEmpty)
       require(fs.rename(staging, delta), s"could not rename $staging to $delta")
     // gauge refresh under the per-index lock: set outside it, a count
     // taken here could overwrite a concurrent compaction's newer one
     // and persist a stale value until the next epoch
-    lockFor(indexPath).synchronized {
+    entry.synchronized {
       val before = seen.getOrElse(snapshot(s, indexPath))
       val others = (p: Path) => p.getName != delta.getName
       val after = before.copy(
@@ -514,7 +666,9 @@ private[graft] object DeltaIndex {
     *      (a partitioned index folded to flat parquet would lose its
     *      partition dirs and every later partition-pruned probe would
     *      scan the full index); the target was just cleared, so the
-    *      static overwrite replaces nothing
+    *      static overwrite replaces nothing, and a failed write
+    *      deletes its partial target before the failure propagates (a
+    *      failed delete rides on it as suppressed)
     *   2. marker (`v<N+1>` + the folded delta names) renamed into
     *      place (atomic publish — no marker, no state change)
     *   3. tombstone each folded delta (files stay put for in-flight
@@ -526,36 +680,54 @@ private[graft] object DeltaIndex {
     * from the marker: each step is idempotent and the merged image is
     * complete before the marker can exist, so admissions are never
     * lost and never double-counted. Single in-process writer per index
-    * by [[IngestWriters]] contract. */
+    * by [[IngestWriters]] contract. Returns the index as the compaction
+    * left it (unchanged when nothing was folded), for the door's
+    * [[prepare]]. */
   def compact(s: SparkSession, indexPath: String,
-              belowEpoch: Long = Long.MaxValue): Unit =
-    lockFor(indexPath).synchronized {
+              belowEpoch: Long = Long.MaxValue): Snapshot = {
+    val entry = lockFor(indexPath)
+    entry.synchronized {
       val snap = snapshot(s, indexPath)
       val folded = snap.live.filter(epochOf(_) < belowEpoch)
-      if (folded.isEmpty) return
-      val fs = fsOf(s, markerPath(indexPath))
-      val newN = snap.version + 1
-      val target = versionDir(indexPath, newN)
-      // a stale target from a pre-marker crashed attempt is dropped
-      // OUTRIGHT before rebuilding (a pre-marker image is never
-      // authoritative — no marker, no state change)
-      if (fs.exists(target))
-        require(fs.delete(target, true),
-          s"compact: could not clear stale $target")
-      // 1. complete merged image in the NEXT version dir
-      writeRows(union(s, indexPath, snap.base +: folded.map(_.toString)),
-        layoutOf(s, indexPath).partCols, target.toString)
-      // 2. marker: new version + folded dir names, renamed into place.
-      // The rename result is CHECKED: proceeding to the publish without
-      // a durable marker would leave a crash window with no recovery.
-      val staging = new Path(indexPath + "_compact_commit.staging")
-      writeText(fs, staging, (s"v$newN" +: folded.map(_.getName)).mkString("\n"))
-      require(fs.rename(staging, markerPath(indexPath)),
-        s"compact marker publish failed for $indexPath — aborting before any state change")
-      publishCompact(fs, indexPath, newN, folded.map(_.getName))
-      IngestMetrics.recordCompaction(indexPath)
-      IngestMetrics.setOutstandingDeltas(indexPath, (snap.live.size - folded.size).toLong)
+      if (folded.isEmpty) snap
+      else {
+        val fs = fsOf(s, markerPath(indexPath))
+        val newN = snap.version + 1
+        val target = versionDir(indexPath, newN)
+        // a stale target from a pre-marker crashed attempt is dropped
+        // OUTRIGHT before rebuilding (a pre-marker image is never
+        // authoritative — no marker, no state change)
+        entry.scans.remove(dirKey(target.toString))
+        if (fs.exists(target))
+          require(fs.delete(target, true),
+            s"compact: could not clear stale $target")
+        // 1. complete merged image in the NEXT version dir; a failed
+        // write (an interrupted door stop, an unreadable input) leaves no
+        // partial image behind
+        try writeRows(union(s, indexPath, snap.base +: folded.map(_.toString)),
+          layoutOf(s, indexPath).partCols, target.toString)
+        catch { case t: Throwable =>
+          try {
+            if (fs.exists(target) && !fs.delete(target, true))
+              t.addSuppressed(new java.io.IOException(s"could not delete the partial $target"))
+          } catch { case d: Throwable => t.addSuppressed(d) }
+          throw t
+        }
+        // 2. marker: new version + folded dir names, renamed into place.
+        // The rename result is CHECKED: proceeding to the publish without
+        // a durable marker would leave a crash window with no recovery.
+        val staging = new Path(indexPath + "_compact_commit.staging")
+        writeText(fs, staging, (s"v$newN" +: folded.map(_.getName)).mkString("\n"))
+        require(fs.rename(staging, markerPath(indexPath)),
+          s"compact marker publish failed for $indexPath — aborting before any state change")
+        publishCompact(fs, indexPath, newN, folded.map(_.getName))
+        entry.scans --= (snap.base +: folded.map(_.toString)).map(dirKey)
+        IngestMetrics.recordCompaction(indexPath)
+        IngestMetrics.setOutstandingDeltas(indexPath, (snap.live.size - folded.size).toLong)
+        Snapshot(newN, target.toString, snap.live.filterNot(folded.contains), folded)
+      }
     }
+  }
 
   /** Steps 3-4 of the compact protocol — idempotent, so a crash at any
     * point replays cleanly from the marker. Every delete/rename result
@@ -617,6 +789,7 @@ private[graft] object DeltaIndex {
   private def finishCrashedCompact(fs: FileSystem, indexPath: String): Unit = {
     val marker = markerPath(indexPath)
     if (!fs.exists(marker)) return
+    lockFor(indexPath).scans.clear()
     val lines = readText(fs, marker).split("\n").toSeq.filter(_.nonEmpty)
     // actionable guard against an unparseable (e.g. pre-versioning)
     // marker: a bare NumberFormatException from inside every locked
@@ -642,12 +815,16 @@ private[graft] object DeltaIndex {
     * exceeds `every` delta reads plus the base. The count is taken
     * from `seen`, the snapshot the epoch carried ([[write]]'s result),
     * else from a fresh [[snapshot]]. A stale `seen` (a callback that
-    * compacted) only over-counts, and [[compact]] lists afresh. */
+    * compacted) only over-counts, and [[compact]] lists afresh. Returns
+    * the index after the fold: [[compact]]'s snapshot, else the one the
+    * decision was taken on. */
   def maybeCompact(s: SparkSession, indexPath: String, epochId: Long,
-                   every: Int, seen: Option[Snapshot] = None): Unit =
-    if (every > 0 &&
-        seen.getOrElse(snapshot(s, indexPath)).live.count(epochOf(_) < epochId) >= every)
+                   every: Int, seen: Option[Snapshot] = None): Snapshot = {
+    val before = seen.getOrElse(snapshot(s, indexPath))
+    if (every > 0 && before.live.count(epochOf(_) < epochId) >= every)
       compact(s, indexPath, belowEpoch = epochId)
+    else before
+  }
 
   /** True when `checkpointDir` already holds a streaming offsets log —
     * i.e. a start() against it RESUMES the epoch-id sequence instead
@@ -808,7 +985,13 @@ private[graft] object IngestWriters {
   *   5. per epoch: the epoch function, the per-topic counters, `onEpoch`
   *      when the epoch classified any row, then the fold — decided on
   *      the snapshot the epoch read and its delta write updated, so a
-  *      plain epoch lists `_delta` once;
+  *      plain epoch lists `_delta` once — and, for a door that probes
+  *      prepared scans (`probeCols`, the near-dup door), the next
+  *      epoch's [[DeltaIndex.prepare]] over the index the fold left, so
+  *      that planning is off the append-to-serve path. The three phases
+  *      (epoch function, callback, fold) are timed into
+  *      `graft_ingest_epoch_seconds_total{topic,phase}`
+  *      ([[IngestMetrics.recordPhases]]);
   *   6. binds the started query to its claim — a failed start releases
   *      it.
   *
@@ -846,7 +1029,7 @@ private[graft] object IngestDoor {
   def start(s: SparkSession, storeName: String, topic: String,
             indexPath: String, maxBatchesPerTrigger: Long,
             checkpointDir: String, onEpoch: (Long, DataFrame) => Unit,
-            compactEvery: Int)(epoch: Epoch): StreamingQuery = {
+            compactEvery: Int, probeCols: Seq[String] = Nil)(epoch: Epoch): StreamingQuery = {
     IngestWriters.acquire(indexPath, checkpointDir)
     val q = try {
       if (!DeltaIndex.resumesCheckpoint(s, checkpointDir))
@@ -860,13 +1043,18 @@ private[graft] object IngestDoor {
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, epochId: Long) =>
           val sess = batch.sparkSession
+          val t0 = System.nanoTime()
           val (verdicts, counts, index) = epoch(sess, epochId, batch)
+          val t1 = System.nanoTime()
           // per-topic admitted/dup counters (the reference's per-stream
           // metric family), from the epoch's own verdicts
           IngestMetrics.recordEpoch(topic, counts)
           if (counts.nonEmpty) onEpoch(epochId, verdicts)
-          DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery, Some(index))
-          ()
+          val t2 = System.nanoTime()
+          val folded = DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery, Some(index))
+          if (probeCols.nonEmpty) DeltaIndex.prepare(sess, indexPath, folded, probeCols)
+          IngestMetrics.recordPhases(topic, Seq("epoch" -> (t1 - t0),
+            "callback" -> (t2 - t1), "fold" -> (System.nanoTime() - t2)))
         }
         .start()
     } catch { case t: Throwable => IngestWriters.release(indexPath); throw t }
@@ -888,10 +1076,10 @@ private[graft] object IngestDoor {
   def resume(s: SparkSession, storeName: String, topic: String,
              indexPath: String, maxBatchesPerTrigger: Long,
              freshCheckpointDir: String, onEpoch: (Long, DataFrame) => Unit,
-             compactEvery: Int)(epoch: Epoch): StreamingQuery = {
+             compactEvery: Int, probeCols: Seq[String] = Nil)(epoch: Epoch): StreamingQuery = {
     validateResume(s, storeName, topic, freshCheckpointDir)
     start(s, storeName, topic, indexPath, maxBatchesPerTrigger,
-      freshCheckpointDir, onEpoch, compactEvery)(epoch)
+      freshCheckpointDir, onEpoch, compactEvery, probeCols)(epoch)
   }
 
   private def validateResume(s: SparkSession, storeName: String, topic: String,

@@ -2947,13 +2947,12 @@ object TextOps {
     * and the index as its delta write left it. The epoch is bounded by
     * the door's admission control (`maxBatchesPerTrigger` buffered
     * batches), so it is classified on the DRIVER and only the probe
-    * into the index is distributed — three Spark jobs:
+    * into the index is distributed — two Spark jobs:
     *   1. [[md5BandArrays]] bands the epoch (the native expression of
     *      the distributed path) and is collected;
-    *   2. [[indexHits]] probes the index with the epoch's (band, sig)
-    *      keys through a broadcast LEFT SEMI — 3. the broadcast build —
-    *      and collects the hit keys; an epoch with no keys reads no
-    *      index.
+    *   2. [[indexHits]] probes the index's prepared scans with the
+    *      epoch's (band, sig) keys and collects the hit keys; an epoch
+    *      with no keys reads no index.
     * The admitted docs' bands are already on the driver, so
     * [[DeltaIndex.write]] writes them there (one delta file per bucket
     * dir), with the snapshot the probe read. Verdicts follow
@@ -3014,30 +3013,51 @@ object TextOps {
   }
 
   /** The index's hit keys among an epoch's (band, sig) `keys` (non-
-    * empty): the index (base + every other epoch's delta; on a
-    * partitioned layout pre-filtered to `buckets`) joined LEFT SEMI
-    * against the broadcast keys, deduplicated per partition and
-    * collected — at most the epoch's keys per index partition — with
-    * the snapshot the probe read. The probe plan contract is required
-    * on this plan every epoch. */
+    * empty), with the snapshot the probe read, in ONE Spark job: the
+    * union of the snapshot's prepared (band, sig) scans
+    * ([[DeltaIndex.probeScans]]: base + every other epoch's delta, each
+    * planned and contract-checked once) filtered map-side against the
+    * keys — shipped in a driver broadcast, which runs no job —
+    * deduplicated per split and collected. On a partitioned layout only
+    * the splits of the probed `buckets` are kept, unless they cover the
+    * whole space (as [[bucketPush]] does); no kept split, no job. */
   private def indexHits(s: SparkSession, indexPath: String, epochId: Long,
                         keys: Seq[BandKey], buckets: Seq[Int],
                         bandBuckets: Int): (Set[BandKey], DeltaIndex.Snapshot) = {
-    import scala.jdk.CollectionConverters._
-    val (index, read) = DeltaIndex.readSnapshot(s, indexPath, epochId)
-    val indexIn = bucketPush(index, buckets, bandBuckets)
-    val probe = s.createDataFrame(keys.map { case (b, g) => Row(b, g) }.asJava,
-      bandKeySchema)
-    val qe = indexIn.join(broadcast(probe), Seq("band", "sig"), "left_semi")
-      .select("band", "sig").queryExecution
-    DeltaIndex.requireProbeContract(s, read, s"epoch $epochId", qe.sparkPlan)
-    lastEpochPlan.set(qe.sparkPlan)
-    (qe.toRdd.mapPartitions { it =>
-      val seen = scala.collection.mutable.HashSet.empty[BandKey]
-      it.foreach(r => seen += (r.getInt(0) -> r.getUTF8String(1).toString))
-      seen.iterator
-    }.collect().toSet, read)
+    import org.apache.spark.unsafe.types.UTF8String
+    val (scans, read) = DeltaIndex.probeScans(s, indexPath, epochId, ProbeCols)
+    val probed = buckets.toSet
+    val prune = bandBuckets > 0 && probed.nonEmpty && probed.size < bandBuckets
+    val kept = scans.map(p => p -> p.splits.indices.filter(i =>
+      !prune || probed(p.splits(i).getInt(0))))
+    lastProbe.set(EpochProbe(scans.map(_.dir), kept.map(_._2.size).sum,
+      scans.map(_.splits.size).sum,
+      kept.flatMap { case (p, is) => if (prune) is.map(p.splits(_).getInt(0)) else Nil },
+      if (prune) probed else Set.empty))
+    val rdds = kept.collect {
+      case (p, is) if is.size == p.splits.size => p.rdd
+      case (p, is) if is.nonEmpty =>
+        org.apache.spark.rdd.PartitionPruningRDD.create(p.rdd, is.toSet)
+    }
+    if (rdds.isEmpty) (Set.empty, read)
+    else {
+      val want = s.sparkContext.broadcast(
+        keys.map { case (b, g) => (b, UTF8String.fromString(g)) }.toSet)
+      try (s.sparkContext.union(rdds).mapPartitions { it =>
+        val in = want.value
+        val seen = scala.collection.mutable.HashSet.empty[BandKey]
+        it.foreach { r =>
+          val k = (r.getInt(0), r.getUTF8String(1))
+          if (in(k)) seen += (k._1 -> k._2.toString)
+        }
+        seen.iterator
+      }.collect().toSet, read)
+      finally want.destroy()
+    }
   }
+
+  /** The (band, sig) columns the door's prepared index scans read. */
+  private val ProbeCols = Seq("band", "sig")
 
   /** [[neardupVerdicts]]' rule over one epoch's doc_ids (Catalyst form)
     * and their (band, sig) keys: `dup_of_existing` when a key is an
@@ -3055,8 +3075,16 @@ object TextOps {
     }
   }
 
-  /** The most recent ingest epoch's probe plan, for spec assertions. */
-  private[graft] val lastEpochPlan = new EpochPlan
+  /** One door epoch's index probe, for spec assertions: the dirs it
+    * read (base first), the splits it kept of the `total`, the bucket of
+    * every kept split and the epoch's probed buckets (both empty when
+    * nothing was pruned). */
+  private[graft] final case class EpochProbe(dirs: Seq[String], kept: Int, total: Int,
+                                             buckets: Seq[Int], probed: Set[Int])
+
+  /** The most recent ingest epoch's probe, for spec assertions. */
+  private[graft] val lastProbe =
+    new java.util.concurrent.atomic.AtomicReference[EpochProbe]()
 
   /** The near-dup ingest door ([[IngestDoor]]): a stream over a store
     * topic of (doc_id, text) whose every epoch runs
@@ -3077,7 +3105,7 @@ object TextOps {
                          bandBuckets: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     IngestDoor.start(s, storeName, topic, indexPath, maxBatchesPerTrigger,
-      checkpointDir, onEpoch, compactEvery)(neardupDoorEpoch(indexPath, bandBuckets))
+      checkpointDir, onEpoch, compactEvery, ProbeCols)(neardupDoorEpoch(indexPath, bandBuckets))
 
   /** The TTL-expiry recovery recipe ([[IngestDoor.resume]]) for the
     * near-dup door: after the topic idle-expired and the caller
@@ -3092,7 +3120,7 @@ object TextOps {
                                      bandBuckets: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     IngestDoor.resume(s, storeName, topic, indexPath, maxBatchesPerTrigger,
-      freshCheckpointDir, onEpoch, compactEvery)(neardupDoorEpoch(indexPath, bandBuckets))
+      freshCheckpointDir, onEpoch, compactEvery, ProbeCols)(neardupDoorEpoch(indexPath, bandBuckets))
 
   /** The door's epoch: [[neardupEpoch]] over the batch's (doc_id, text)
     * — it collects the batch in its banding pass, so the source is read

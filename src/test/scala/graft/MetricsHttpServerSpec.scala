@@ -1,6 +1,8 @@
 package graft
 
-import graft.engine.{GraftMetricsListener, MetricsHttpServer, StreamStore, StreamingOps}
+import graft.engine.{GraftMetricsListener, IngestMetrics, MetricsHttpServer, StreamStore,
+  StreamingOps, TextOps}
+import graft.sources.GraftStoreRegistry
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types._
@@ -97,5 +99,40 @@ class MetricsHttpServerSpec extends SparkSuite {
       val (_, body, _) = get(srv.boundPort, "/metrics")
       assert(body.contains("""graft_stream_memory_bytes{topic="odd\"topic\\name"}"""))
     } finally srv.close()
+  }
+
+  test("scrape serves an ingest door's time per epoch phase beside its epoch count") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_phase_met")
+    val idx = dir.resolve("ph_idx").toString
+    val docs = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+    def text(fam: String) = (0 until 8).map(i => s"${fam}tok$i").mkString(" ")
+    TextOps.stageNeardupIndex(spark.createDataFrame(
+      spark.sparkContext.parallelize(List(Row(0L, text("e0")))), docs), idx)
+    val store = new StreamStore(1 << 20, Long.MaxValue / 2)
+    IngestMetrics.reset("docs_phase")
+    Seq(Seq(Row(100L, text("e0"))), Seq(Row(110L, text("f1"))))
+      .foreach(b => store.append("docs_phase", docs, b))
+    GraftStoreRegistry.register("s_phase", store)
+    val srv = new MetricsHttpServer(store, new GraftMetricsListener)
+    try {
+      val q = TextOps.startNeardupIngest(spark, "s_phase", "docs_phase", idx,
+        maxBatchesPerTrigger = 1, checkpointDir = dir.resolve("ckpt").toString,
+        onEpoch = (_, c) => { c.collect(); () })
+      try q.processAllAvailable() finally q.stop()
+      val (_, body, _) = get(srv.boundPort, "/metrics")
+      assert(body.contains("# TYPE graft_ingest_epoch_seconds_total counter"))
+      assert(body.contains("""graft_ingest_epochs_total{topic="docs_phase"} 2"""))
+      val phases = body.linesIterator
+        .filter(_.startsWith("""graft_ingest_epoch_seconds_total{topic="docs_phase",""")).map { l =>
+          l.stripPrefix("""graft_ingest_epoch_seconds_total{topic="docs_phase",phase="""")
+            .takeWhile(_ != '"') -> l.split(' ').last.toDouble
+        }.toMap
+      assert(phases.keySet == Set("epoch", "callback", "fold"), body)
+      assert(phases.values.forall(_ > 0.0), s"every phase took time: $phases")
+      assert(phases("epoch") > phases("callback"), s"the epoch function dominates: $phases")
+    } finally {
+      srv.close()
+      GraftStoreRegistry.unregister("s_phase")
+    }
   }
 }
