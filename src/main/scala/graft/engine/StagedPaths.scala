@@ -91,10 +91,9 @@ private[graft] object StagedPaths {
   * Every operation sees the index through ONE [[snapshot]], taken
   * under the per-index lock after crash recovery: the pointer is read
   * and `_delta` listed nowhere else. A door epoch takes one, in its
-  * read ([[probeScans]] for the near-dup door, [[readSnapshot]] for the
-  * ANN door), and carries it through the epoch — its probe contract,
-  * its delta write's gauge, its fold decision and, after the fold, the
-  * next epoch's scan preparation —
+  * probe ([[probe]]), and carries it through the epoch — its delta
+  * write's gauge, its fold decision and, after the fold, the next
+  * epoch's scan preparation —
   * because [[IngestWriters]]' single writer is the only thing that
   * changes the delta set; compaction and door start list afresh.
   *
@@ -105,20 +104,22 @@ private[graft] object StagedPaths {
   *
   * PREPARED SCANS ([[PreparedScan]]): every dir a probe reads — a base
   * version or a committed delta — is immutable until [[write]]
-  * overwrites it or a compaction retires it, so the near-dup door plans
-  * each dir's read through Spark SQL ONCE: planned, checked against the
-  * scan contract (a file scan of that dir, no exchange) and turned into
-  * a row RDD, kept in the per-index entry. An epoch's probe is then one
-  * Spark job over the union of its snapshot's prepared scans
-  * ([[probeScans]]); the door prepares the next epoch's scans after its
-  * fold ([[prepare]]). [[write]] drops `e<n>` before overwriting it,
+  * overwrites it or a compaction retires it, so each dir's read is
+  * planned through Spark SQL ONCE: planned, checked against the scan
+  * contract (a file scan of that dir, no exchange) and turned into a
+  * row RDD, kept in the per-index entry. Both doors' epoch probe is
+  * then one Spark job over the union of its snapshot's prepared scans
+  * ([[probe]]); a door prepares the next epoch's scans after its fold
+  * ([[prepare]]) and drops them all when its query terminates
+  * ([[release]]). [[write]] drops `e<n>` before overwriting it,
   * [[compact]] drops the folded deltas and the previous base, and
   * [[stage]] and crash recovery drop them all, so an index holds at
-  * most one base plus its live deltas. `readAll` and the ANN door keep
-  * their SQL reads. */
+  * most one base plus its live deltas. Only the batch-side [[readAll]]
+  * and compaction read through Spark SQL per call. */
 private[graft] object DeltaIndex {
-  import org.apache.spark.rdd.RDD
-  import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+  import scala.reflect.ClassTag
+  import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+  import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   import org.apache.spark.sql.functions.col
   import org.apache.spark.sql.types.StructType
   import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -127,8 +128,6 @@ private[graft] object DeltaIndex {
   import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
   import org.apache.spark.sql.execution.exchange.Exchange
-  import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-  import org.apache.spark.sql.catalyst.plans.LeftSemi
   import org.apache.hadoop.fs.{FileSystem, Path}
 
   /** Tombstone file name: a folded delta keeps its parquet files (so
@@ -160,24 +159,33 @@ private[graft] object DeltaIndex {
     * schema-discovery job per scanned dir, per epoch; and probe-time
     * dial validation reads no file. `listings` counts the `_delta`
     * listings taken, for the specs. `scans` holds the index's
-    * [[PreparedScan]]s by [[dirKey]], and `version` the base version
-    * last listed or published in this JVM — a snapshot of another
-    * version is stale and prepares nothing. Guarded by the monitor. */
+    * [[PreparedScan]]s by [[dirKey]], `version` the base version last
+    * listed or published in this JVM — a snapshot of another version is
+    * stale and prepares nothing — and `probe` the last epoch probe.
+    * Guarded by the monitor. */
   private final class Entry {
     var layout: Option[Layout] = None
     var listings = 0L
     val scans = scala.collection.mutable.Map.empty[String, PreparedScan]
     var version = -1L
+    var probe: Option[EpochProbe] = None
   }
 
   /** One immutable index dir's read, planned once: the executed `plan`,
-    * its row `rdd` and, per split of the rdd, the partition values of
-    * the file it reads (the empty row on a flat layout). On a
+    * its row `rdd` and, per split of the rdd, the partition value of
+    * the file it reads, as a long (None on a flat layout). On a
     * partitioned layout no split holds two files, so a split's
-    * partition values are its whole content's. */
+    * partition value is its whole content's. */
   private[graft] final class PreparedScan(val dir: String, val plan: SparkPlan,
                                           val rdd: RDD[InternalRow],
-                                          val splits: IndexedSeq[InternalRow])
+                                          val keys: IndexedSeq[Option[Long]])
+
+  /** One epoch's index probe, for spec assertions: the dirs it read
+    * (base first), the splits it kept of the `total`, the partition
+    * value of each kept split (none on a flat layout) and the probed
+    * values. */
+  private[graft] final case class EpochProbe(dirs: Seq[String], kept: Int, total: Int,
+                                             buckets: Seq[Long], probed: Set[Long])
 
   private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
@@ -285,19 +293,6 @@ private[graft] object DeltaIndex {
     entry.synchronized(entry.listings)
   }
 
-  /** Base index UNION all live deltas of OTHER epochs, and the
-    * [[Snapshot]] it was planned over, which a door epoch carries to
-    * [[requireProbeContract]], [[write]] and [[maybeCompact]]. Planned
-    * under the per-index lock (stable listing); executes lock-free
-    * against a one-generation-immutable snapshot. */
-  private[graft] def readSnapshot(s: SparkSession, indexPath: String,
-                                  excludeEpoch: Long): (DataFrame, Snapshot) =
-    lockFor(indexPath).synchronized {
-      val snap = snapshot(s, indexPath)
-      (union(s, indexPath, snap.base +:
-        snap.live.filter(_.getName != s"e$excludeEpoch").map(_.toString)), snap)
-    }
-
   /** Dirs of the index (base and deltas) unioned in order, each read
     * with the index's resolved schema — no schema-discovery job. */
   private def union(s: SparkSession, indexPath: String,
@@ -306,51 +301,54 @@ private[graft] object DeltaIndex {
     dirs.map(s.read.schema(schema).parquet(_)).reduce(_ unionByName _)
   }
 
-  /** The ANN door's per-epoch plan contract (the near-dup door checks
-    * its own once per prepared scan, [[prepareScan]]), checked
-    * STRUCTURALLY on the un-executed physical plan (static properties —
-    * no data touched):
-    * the index's current base is scanned, matched on the scan's root
-    * paths rather than the rendered plan (which abbreviates locations
-    * past `spark.sql.maxMetadataStringLength`), and the index is
-    * probed through a broadcast LEFT SEMI join (never shuffled). A
-    * regression here would silently turn every epoch
-    * corpus-proportional at 100 TB. `read` is the snapshot the probe
-    * was planned over ([[readSnapshot]]). */
-  private[graft] def requireProbeContract(s: SparkSession, read: Snapshot,
-                                          what: String, plan: SparkPlan): Unit = {
-    val base = {
-      val p = new Path(read.base)
-      fsOf(s, p).makeQualified(p)
-    }
-    require(plan.find {
-        case f: FileSourceScanExec => f.relation.location.rootPaths.contains(base)
-        case _ => false
-      }.isDefined,
-      s"$what must read the staged index $base:\n" + plan.toString.take(2000))
-    require(plan.find {
-        case j: BroadcastHashJoinExec => j.joinType == LeftSemi
-        case _ => false
-      }.isDefined,
-      s"$what must probe via broadcast semi-join:\n" + plan.toString.take(2000))
-  }
-
-  /** The near-dup door's probe read: the index's [[snapshot]] (its one
-    * listing) and the [[PreparedScan]]s of `cols` over the snapshot's
-    * base and every live delta of OTHER epochs, base first — a scan
-    * missing from the entry (a door's start, a replay) is prepared here.
-    * The union the epoch probes must start with the snapshot's base. */
-  private[graft] def probeScans(s: SparkSession, indexPath: String, excludeEpoch: Long,
-                                cols: Seq[String]): (Seq[PreparedScan], Snapshot) = {
+  /** Epoch `epochId`'s probe — the ONE probe path of both doors — and
+    * the [[snapshot]] it read (its one listing), which the epoch carries
+    * to [[write]] and [[maybeCompact]]. It reads the [[PreparedScan]]s of
+    * `cols` over the base and every live delta of OTHER epochs, base
+    * first, preparing any missing (a door's start, a replay); a
+    * partitioned layout keeps only the splits of `probed` values. ONE
+    * Spark job runs `job` over the kept splits, each mapped by
+    * `perSplit` against `shipped`, a driver broadcast destroyed after
+    * the job. No kept split, no job: `None`. */
+  private[graft] def probe[B: ClassTag, T: ClassTag, R](s: SparkSession, indexPath: String,
+      epochId: Long, cols: Seq[Column], probed: Set[Long], shipped: B)(
+      perSplit: (B, Iterator[InternalRow]) => Iterator[T])(job: RDD[T] => R)
+      : (Option[R], Snapshot) = {
     val entry = lockFor(indexPath)
-    entry.synchronized {
+    val (scans, read) = entry.synchronized {
       val snap = snapshot(s, indexPath)
       val scans = scansOf(s, indexPath, entry, snap, snap.base +:
-        snap.live.filter(_.getName != s"e$excludeEpoch").map(_.toString), cols)
+        snap.live.filter(_.getName != s"e$epochId").map(_.toString), cols)
       require(scans.headOption.exists(_.dir == dirKey(snap.base)),
-        s"epoch $excludeEpoch's probe of '$indexPath' must start with its base ${snap.base}")
+        s"epoch $epochId's probe of '$indexPath' must start with its base ${snap.base}")
       (scans, snap)
     }
+    val kept = scans.map(p => p -> p.keys.indices.filter(i => p.keys(i).forall(probed)))
+    entry.synchronized(entry.probe = Some(EpochProbe(scans.map(_.dir),
+      kept.map(_._2.size).sum, scans.map(_.keys.size).sum,
+      kept.flatMap { case (p, is) => is.flatMap(p.keys(_)) }, probed)))
+    val rdds = kept.collect {
+      case (p, is) if is.size == p.keys.size => p.rdd
+      case (p, is) if is.nonEmpty => PartitionPruningRDD.create(p.rdd, is.toSet)
+    }
+    if (rdds.isEmpty) (None, read)
+    else {
+      val bc = s.sparkContext.broadcast(shipped)
+      try (Some(job(s.sparkContext.union(rdds).mapPartitions(it => perSplit(bc.value, it)))), read)
+      finally bc.destroy()
+    }
+  }
+
+  /** The index's last epoch probe, for the specs; None once its door stops. */
+  private[graft] def lastProbe(indexPath: String): Option[EpochProbe] = {
+    val entry = lockFor(indexPath)
+    entry.synchronized(entry.probe)
+  }
+
+  /** Drop the index's prepared scans and probe record: its door stopped. */
+  private[graft] def release(indexPath: String): Unit = {
+    val entry = lockFor(indexPath)
+    entry.synchronized { entry.scans.clear(); entry.probe = None }
   }
 
   /** Prepare the scans of `cols` the door's next epoch reads: `snap`'s
@@ -360,7 +358,7 @@ private[graft] object DeltaIndex {
     * callback that compacted) prepares nothing; the next probe prepares
     * what it misses. */
   private[graft] def prepare(s: SparkSession, indexPath: String, snap: Snapshot,
-                             cols: Seq[String]): Unit = {
+                             cols: Seq[Column]): Unit = {
     val entry = lockFor(indexPath)
     entry.synchronized {
       if (entry.version == snap.version)
@@ -380,7 +378,7 @@ private[graft] object DeltaIndex {
     * `snap` (a retired base or delta) is dropped, so the entry holds at
     * most one base plus the live deltas. Caller holds the entry's lock. */
   private def scansOf(s: SparkSession, indexPath: String, entry: Entry, snap: Snapshot,
-                      dirs: Seq[String], cols: Seq[String]): Seq[PreparedScan] = {
+                      dirs: Seq[String], cols: Seq[Column]): Seq[PreparedScan] = {
     val inSnap = (snap.base +: snap.live.map(_.toString)).map(dirKey).toSet
     entry.scans.filterInPlace((k, _) => inSnap(k))
     dirs.map { d =>
@@ -390,18 +388,21 @@ private[graft] object DeltaIndex {
   }
 
   /** Plan `dir`'s read of `cols` and check it once: the executed plan
-    * reads `dir` through a [[FileSourceScanExec]] (matched on its root
-    * path, like [[requireProbeContract]]) and holds no exchange, so a
-    * probe over it filters map-side and never shuffles the index. A
+    * reads `dir` through a [[FileSourceScanExec]] — matched on its root
+    * path, not on the rendered plan, which abbreviates locations past
+    * `spark.sql.maxMetadataStringLength` — and holds no exchange, so a
+    * probe over it works map-side and never shuffles the index. A
     * partitioned layout is planned in [[filePerSplit]]'s session and
     * must give one file per split, so a probe prunes its splits by
-    * partition value exactly as a static partition filter prunes files. */
+    * partition value exactly as a static partition filter prunes files;
+    * the one partition column's value is kept as a long, whatever
+    * integral type discovery gave it. */
   private def prepareScan(s: SparkSession, indexPath: String, dir: String,
-                          cols: Seq[String]): PreparedScan = {
+                          cols: Seq[Column]): PreparedScan = {
     val layout = layoutOf(s, indexPath)
     val reader = if (layout.partCols.isEmpty) s else filePerSplit(s)
     val qe = reader.read.schema(layout.schema).parquet(dir)
-      .select(cols.map(col): _*).queryExecution
+      .select(cols: _*).queryExecution
     val plan = qe.executedPlan
     val root = {
       val p = new Path(dir)
@@ -423,8 +424,10 @@ private[graft] object DeltaIndex {
     val rdd = qe.toRdd
     require(rdd.getNumPartitions == files.size,
       s"the prepared scan of $root must keep one split per file split")
-    new PreparedScan(dirKey(dir), plan, rdd,
-      files.map(_.headOption.fold(InternalRow.empty)(_.partitionValues)))
+    val key = layout.partCols.headOption.map(layout.schema(_).dataType)
+    new PreparedScan(dirKey(dir), plan, rdd, files.map(_.headOption.zip(key).flatMap {
+      case (f, t) => Option(f.partitionValues.get(0, t)).collect { case n: Number => n.longValue }
+    }))
   }
 
   private val splitSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
@@ -453,7 +456,10 @@ private[graft] object DeltaIndex {
     * writer — batch reads racing a live writer on the same index can
     * retry; verdicts are never silently wrong. */
   def readAll(s: SparkSession, indexPath: String): DataFrame =
-    readSnapshot(s, indexPath, excludeEpoch = -1L)._1
+    lockFor(indexPath).synchronized {
+      val snap = snapshot(s, indexPath)
+      union(s, indexPath, snap.base +: snap.live.map(_.toString))
+    }
 
   /** Stage — or RE-stage — the index at `indexPath` from `rows`, the
     * index row shape, partitioned by `partCol` when set, and record
@@ -527,7 +533,7 @@ private[graft] object DeltaIndex {
     * probe's key set.
     *
     * `seen` is the snapshot the epoch read the index through
-    * ([[readSnapshot]]); the single writer is the only thing that
+    * ([[probe]]); the single writer is the only thing that
     * changes the delta set, so the outstanding-delta gauge is refreshed
     * from it rather than from a second listing (without one, the index
     * is listed once, after the write). Returns the index as it stands
@@ -835,23 +841,6 @@ private[graft] object DeltaIndex {
   }
 }
 
-/** An ingest door's most recent epoch probe plan, for spec
-  * assertions: the epoch keeps its physical plan as planned (the
-  * `sparkPlan` its probe contract is checked on) and it is rendered
-  * only when read, so no epoch pays for the plan string. The executed
-  * plan is not kept: it would hold the epoch's broadcast relation
-  * until the next epoch. */
-private[graft] final class EpochPlan {
-  import org.apache.spark.sql.execution.SparkPlan
-
-  private val plan = new java.util.concurrent.atomic.AtomicReference[SparkPlan]()
-
-  def set(p: SparkPlan): Unit = plan.set(p)
-
-  /** The plan as `SparkPlan.toString` renders it; "" before any epoch. */
-  def get: String = Option(plan.get).fold("")(_.toString)
-}
-
 /** The `<indexPath>_layout` sidecar's format and its check: the dials
   * an index was STAGED with (`bandBuckets` for the text near-dup index,
   * `nPlanes` and `dim` for the ANN index), so a probe called with a
@@ -985,15 +974,17 @@ private[graft] object IngestWriters {
   *   5. per epoch: the epoch function, the per-topic counters, `onEpoch`
   *      when the epoch classified any row, then the fold — decided on
   *      the snapshot the epoch read and its delta write updated, so a
-  *      plain epoch lists `_delta` once — and, for a door that probes
-  *      prepared scans (`probeCols`, the near-dup door), the next
-  *      epoch's [[DeltaIndex.prepare]] over the index the fold left, so
-  *      that planning is off the append-to-serve path. The three phases
+  *      plain epoch lists `_delta` once — and the next epoch's
+  *      [[DeltaIndex.prepare]] of the door's `probeCols` over the index
+  *      the fold left, so that planning is off the append-to-serve
+  *      path. The three phases
   *      (epoch function, callback, fold) are timed into
   *      `graft_ingest_epoch_seconds_total{topic,phase}`
   *      ([[IngestMetrics.recordPhases]]);
   *   6. binds the started query to its claim — a failed start releases
-  *      it.
+  *      it — and, from a listener, drops the index's prepared scans when
+  *      the query terminates, unless another writer has claimed it since
+  *      ([[DeltaIndex.release]]).
   *
   * The epoch runs even when its batch drained EMPTY (offsets evicted
   * between attempts): an empty epoch CLEARS any stale delta its first
@@ -1015,8 +1006,9 @@ private[graft] object IngestWriters {
   * not held up by it, and it lands before epoch N+1 reads the index.
   * `compactEvery <= 0` disables mid-stream compaction. */
 private[graft] object IngestDoor {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.streaming.StreamingQuery
+  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+  import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+  import StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
   /** One door epoch: (session, epoch id, the store batch) → the
     * epoch's per-row verdicts, driver-local and bounded by the epoch,
@@ -1029,7 +1021,7 @@ private[graft] object IngestDoor {
   def start(s: SparkSession, storeName: String, topic: String,
             indexPath: String, maxBatchesPerTrigger: Long,
             checkpointDir: String, onEpoch: (Long, DataFrame) => Unit,
-            compactEvery: Int, probeCols: Seq[String] = Nil)(epoch: Epoch): StreamingQuery = {
+            compactEvery: Int, probeCols: Seq[Column])(epoch: Epoch): StreamingQuery = {
     IngestWriters.acquire(indexPath, checkpointDir)
     val q = try {
       if (!DeltaIndex.resumesCheckpoint(s, checkpointDir))
@@ -1052,13 +1044,26 @@ private[graft] object IngestDoor {
           if (counts.nonEmpty) onEpoch(epochId, verdicts)
           val t2 = System.nanoTime()
           val folded = DeltaIndex.maybeCompact(sess, indexPath, epochId, compactEvery, Some(index))
-          if (probeCols.nonEmpty) DeltaIndex.prepare(sess, indexPath, folded, probeCols)
+          DeltaIndex.prepare(sess, indexPath, folded, probeCols)
           IngestMetrics.recordPhases(topic, Seq("epoch" -> (t1 - t0),
             "callback" -> (t2 - t1), "fold" -> (System.nanoTime() - t2)))
         }
         .start()
     } catch { case t: Throwable => IngestWriters.release(indexPath); throw t }
     IngestWriters.bind(indexPath, q)
+    lazy val listener: StreamingQueryListener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.runId == q.runId) stopped()
+    }
+    def stopped(): Unit = {
+      s.streams.removeListener(listener)
+      if (IngestWriters.liveCheckpoint(indexPath).isEmpty) DeltaIndex.release(indexPath)
+    }
+    s.streams.addListener(listener)
+    // a query that ended before the listener was added sends it no event
+    if (!q.isActive) stopped()
     q
   }
 
@@ -1076,7 +1081,7 @@ private[graft] object IngestDoor {
   def resume(s: SparkSession, storeName: String, topic: String,
              indexPath: String, maxBatchesPerTrigger: Long,
              freshCheckpointDir: String, onEpoch: (Long, DataFrame) => Unit,
-             compactEvery: Int, probeCols: Seq[String] = Nil)(epoch: Epoch): StreamingQuery = {
+             compactEvery: Int, probeCols: Seq[Column])(epoch: Epoch): StreamingQuery = {
     validateResume(s, storeName, topic, freshCheckpointDir)
     start(s, storeName, topic, indexPath, maxBatchesPerTrigger,
       freshCheckpointDir, onEpoch, compactEvery, probeCols)(epoch)

@@ -2950,9 +2950,10 @@ object TextOps {
     * into the index is distributed — two Spark jobs:
     *   1. [[md5BandArrays]] bands the epoch (the native expression of
     *      the distributed path) and is collected;
-    *   2. [[indexHits]] probes the index's prepared scans with the
-    *      epoch's (band, sig) keys and collects the hit keys; an epoch
-    *      with no keys reads no index.
+    *   2. [[DeltaIndex.probe]] filters the index's prepared (band, sig)
+    *      scans map-side against the epoch's keys and collects the hit
+    *      keys; on a partitioned layout only the splits of the probed
+    *      buckets are read, and an epoch with no keys reads no index.
     * The admitted docs' bands are already on the driver, so
     * [[DeltaIndex.write]] writes them there (one delta file per bucket
     * dir), with the snapshot the probe read. Verdicts follow
@@ -2963,6 +2964,7 @@ object TextOps {
                            data: DataFrame, bandBuckets: Int)
       : (DataFrame, Map[String, Long], DeltaIndex.Snapshot) = {
     import scala.jdk.CollectionConverters._
+    import org.apache.spark.unsafe.types.UTF8String
     IndexLayout.validate(s, indexPath, "bandBuckets", bandBuckets.toString)
     val idField = data.schema("doc_id")
     val banded = md5BandArrays(data)
@@ -2988,9 +2990,15 @@ object TextOps {
     val (hits, seen) =
       if (keys.isEmpty) (Set.empty[BandKey], None)
       else {
-        val (h, read) = indexHits(s, indexPath, epochId, keys,
-          keys.flatMap(bucketOf.get).distinct, bandBuckets)
-        (h, Some(read))
+        // the probe's broadcast ships the keys; each split keeps its hits
+        // once, copied out of the reused row buffer
+        val (h, read) = DeltaIndex.probe(s, indexPath, epochId, ProbeCols,
+            keys.flatMap(bucketOf.get).map(_.toLong).toSet,
+            keys.map { case (b, g) => (b, UTF8String.fromString(g)) }.toSet) { (in, it) =>
+          it.map(r => (r.getInt(0), r.getUTF8String(1))).filter(in)
+            .map { case (b, g) => (b, g.toString) }.toSet.iterator
+        }(_.collect().toSet)
+        (h.getOrElse(Set.empty[BandKey]), Some(read))
       }
     val status = localVerdicts(byId.map { case (k, (_, b)) => k -> b }, hits, ord)
     val verdicts = rows.toSeq.map(r => Row(r.get(0),
@@ -3012,52 +3020,8 @@ object TextOps {
       index)
   }
 
-  /** The index's hit keys among an epoch's (band, sig) `keys` (non-
-    * empty), with the snapshot the probe read, in ONE Spark job: the
-    * union of the snapshot's prepared (band, sig) scans
-    * ([[DeltaIndex.probeScans]]: base + every other epoch's delta, each
-    * planned and contract-checked once) filtered map-side against the
-    * keys — shipped in a driver broadcast, which runs no job —
-    * deduplicated per split and collected. On a partitioned layout only
-    * the splits of the probed `buckets` are kept, unless they cover the
-    * whole space (as [[bucketPush]] does); no kept split, no job. */
-  private def indexHits(s: SparkSession, indexPath: String, epochId: Long,
-                        keys: Seq[BandKey], buckets: Seq[Int],
-                        bandBuckets: Int): (Set[BandKey], DeltaIndex.Snapshot) = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val (scans, read) = DeltaIndex.probeScans(s, indexPath, epochId, ProbeCols)
-    val probed = buckets.toSet
-    val prune = bandBuckets > 0 && probed.nonEmpty && probed.size < bandBuckets
-    val kept = scans.map(p => p -> p.splits.indices.filter(i =>
-      !prune || probed(p.splits(i).getInt(0))))
-    lastProbe.set(EpochProbe(scans.map(_.dir), kept.map(_._2.size).sum,
-      scans.map(_.splits.size).sum,
-      kept.flatMap { case (p, is) => if (prune) is.map(p.splits(_).getInt(0)) else Nil },
-      if (prune) probed else Set.empty))
-    val rdds = kept.collect {
-      case (p, is) if is.size == p.splits.size => p.rdd
-      case (p, is) if is.nonEmpty =>
-        org.apache.spark.rdd.PartitionPruningRDD.create(p.rdd, is.toSet)
-    }
-    if (rdds.isEmpty) (Set.empty, read)
-    else {
-      val want = s.sparkContext.broadcast(
-        keys.map { case (b, g) => (b, UTF8String.fromString(g)) }.toSet)
-      try (s.sparkContext.union(rdds).mapPartitions { it =>
-        val in = want.value
-        val seen = scala.collection.mutable.HashSet.empty[BandKey]
-        it.foreach { r =>
-          val k = (r.getInt(0), r.getUTF8String(1))
-          if (in(k)) seen += (k._1 -> k._2.toString)
-        }
-        seen.iterator
-      }.collect().toSet, read)
-      finally want.destroy()
-    }
-  }
-
   /** The (band, sig) columns the door's prepared index scans read. */
-  private val ProbeCols = Seq("band", "sig")
+  private val ProbeCols = Seq(col("band"), col("sig"))
 
   /** [[neardupVerdicts]]' rule over one epoch's doc_ids (Catalyst form)
     * and their (band, sig) keys: `dup_of_existing` when a key is an
@@ -3074,17 +3038,6 @@ object TextOps {
        else "unique")
     }
   }
-
-  /** One door epoch's index probe, for spec assertions: the dirs it
-    * read (base first), the splits it kept of the `total`, the bucket of
-    * every kept split and the epoch's probed buckets (both empty when
-    * nothing was pruned). */
-  private[graft] final case class EpochProbe(dirs: Seq[String], kept: Int, total: Int,
-                                             buckets: Seq[Int], probed: Set[Int])
-
-  /** The most recent ingest epoch's probe, for spec assertions. */
-  private[graft] val lastProbe =
-    new java.util.concurrent.atomic.AtomicReference[EpochProbe]()
 
   /** The near-dup ingest door ([[IngestDoor]]): a stream over a store
     * topic of (doc_id, text) whose every epoch runs

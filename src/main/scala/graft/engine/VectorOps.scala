@@ -1,8 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Similarity search over the `embeddings` fixture (vec_id,
   * embedding: array<float>, label) — BASELINE north-star ops.
@@ -1849,9 +1850,10 @@ object VectorOps {
     (0 to bits).flatMap(b => combos(0, b))
   }
 
-  /** The probe-scoring core shared by [[qStreamAnnIngest]] (batch
-    * replay of the ingest shape) and [[startAnnIngest]] (the real
-    * streaming composition). `index` holds (vec_id, v, nv, bucket) in
+  /** The distributed probe-scoring core of [[qStreamAnnIngest]] (batch
+    * replay of the ingest shape) and [[classifyAnnBatch]] — the
+    * reference the streaming door's epoch ([[annEpoch]]) is
+    * checked against. `index` holds (vec_id, v, nv, bucket) in
     * micro-units; `probes` holds (probe_id, v, nv, bucket0). Each
     * probe fans out to its multiprobe buckets (every bucket within
     * `probeBits` Hamming bits — the recall dial that PAIRS with the
@@ -1911,10 +1913,9 @@ object VectorOps {
         // bucket space). An EMPTY key set must NOT become a
         // known-empty LocalRelation build: Catalyst would collapse the
         // index scan and the semi-join out of the plan entirely, and
-        // the per-epoch plan-contract requires (staged read +
-        // broadcast semi) would kill a deliberately-empty replay epoch
-        // — the evicted-batch stale-delta clear. The checkpoint-derived
-        // distinct frame keeps the plan shape.
+        // the callers' plan-shape requires (staged read + broadcast
+        // semi) would fail on a deliberately-empty batch. The
+        // checkpoint-derived distinct frame keeps the plan shape.
         val kf = if (!complete || keys.isEmpty) probeKeys else {
           val sp = index.sparkSession
           import sp.implicits._
@@ -2013,34 +2014,15 @@ object VectorOps {
                        bucketPartitioned: Boolean = false): DataFrame = {
     IndexLayout.validate(s, indexPath, "nPlanes", nPlanes.toString)
     IndexLayout.validate(s, indexPath, "dim", dim.toString)
-    // the COMPLETE index: base plus every delta a stream has admitted
-    // (see classifyNeardupBatch — same duplicate-admission hazard)
-    classifyAnnCore(DeltaIndex.readAll(s, indexPath), batch, nPlanes, dim,
-      thresholdMicro, probeBits, indexKeyPrune = bucketPartitioned)._1
-  }
-
-  /** Classification plus the CHECKPOINTED quantized probe frame, for
-    * callers (the streaming epoch) that also need the admitted
-    * vectors' index rows — deriving them from `probes` avoids
-    * re-quantizing what this pass already quantized. */
-  private def classifyAnnCore(index: DataFrame, batch: DataFrame,
-                              nPlanes: Int, dim: Int,
-                              thresholdMicro: Long,
-                              probeBits: Int = 1,
-                              indexKeyPrune: Boolean = false)
-      : (DataFrame, DataFrame) = {
     val probes = annMicroRows(batch, "vec_id", hyperplanes(nPlanes, dim))
       .withColumnRenamed("vec_id", "probe_id")
       .withColumnRenamed("bucket", "bucket0")
       .localCheckpoint(true) // one quantize pass feeds fan-out AND report
-    (annProbeScore(index, probes, nPlanes, thresholdMicro, probeBits,
-      indexKeyPrune), probes)
+    // the COMPLETE index: base plus every delta a stream has admitted
+    // (see classifyNeardupBatch — same duplicate-admission hazard)
+    annProbeScore(DeltaIndex.readAll(s, indexPath), probes, nPlanes, thresholdMicro,
+      probeBits, indexKeyPrune = bucketPartitioned)
   }
-
-  /** The most recent ingest epoch's probe plan, kept for spec
-    * assertions (the classified frame the epoch returns is
-    * driver-local — its own plan is a local scan). */
-  private[graft] val lastEpochPlan = new EpochPlan
 
   /** Whether this THREAD's most recent prune-mode [[annProbeScore]]
     * actually applied the static key push (false when legitimately
@@ -2056,68 +2038,97 @@ object VectorOps {
   /** ONE ANN ingest epoch, IDEMPOTENT under at-least-once foreachBatch
     * replay (see [[graft.engine.DeltaIndex]]): classify against base +
     * every OTHER epoch's delta, then OVERWRITE this epoch's delta with
-    * the admitted vectors' index rows — taken from the probe frame the
-    * classification already quantized (no re-quantization). With
-    * `bucketPartitioned` (an index staged partitioned, deltas
-    * partitioned to match by [[DeltaIndex.write]]'s layout mirror),
-    * the batch's bounded multiprobe key set pushes as a STATIC
-    * partition filter on base AND delta scans — per-epoch probe cost
-    * becomes proportional to the batch's multiprobe buckets, not the
-    * corpus (the 100 TB claim, now executable from the streaming
-    * door, not only the batch path).
+    * the admitted vectors' index rows as the epoch quantized them.
     *
     * `occupancyWarnMean` > 0 arms the mis-dial alarm: when the
     * epoch's mean candidates/probe crosses it, the measured
     * super-linear probe regime (BENCH_planes.json pins (8 planes,
     * 1 bit) at ×10 exponent 1.421) announces itself loudly instead of
-    * silently degrading — the mean is taken from the collected
-    * classification's `n_cand`, at no extra job. */
+    * silently degrading — the mean is taken from the verdicts'
+    * `n_cand`, at no extra job. */
   private[graft] def annIngestEpoch(s: SparkSession, indexPath: String,
                                     epochId: Long, data: DataFrame,
                                     nPlanes: Int = 8, dim: Int = 64,
                                     thresholdMicro: Long = 950000L,
                                     probeBits: Int = 1,
-                                    bucketPartitioned: Boolean = false,
                                     occupancyWarnMean: Double = 0.0)
       : DataFrame =
     annEpoch(s, indexPath, epochId, data, nPlanes, dim, thresholdMicro,
-      probeBits, bucketPartitioned, occupancyWarnMean)._1
+      probeBits, occupancyWarnMean)._1
+
+  /** A quantized probe row: its id, vector and norm. */
+  private final case class AnnProbe(id: Any, v: Array[java.lang.Long], nv: java.lang.Long)
+
+  /** A probe id's candidate count and best candidate's id and score. */
+  private final case class AnnBest(nCand: Long, bId: java.lang.Long, w: java.lang.Long)
+
+  /** The ANN door's prepared scan columns; an int partition bucket reads as a long. */
+  private val AnnCols = Seq(col("vec_id").cast("long"), col("v"), col("nv"),
+    col("bucket").cast("long"))
 
   /** [[annIngestEpoch]] plus the epoch's verdict count per status and
-    * the index as its delta write left it. The epoch is bounded by the
-    * door's admission control, so its classification is COLLECTED
-    * once: those rows give the status counts, the occupancy mean (from
-    * `n_cand`), the admitted ids and the returned frame — driver-local,
-    * with the classification's schema, so collecting it runs no job.
-    * The distributed work is the quantize checkpoint of the batch, the
-    * probe chain behind the collect, and the collect of `probes` ⋈ the
-    * distinct admitted ids — exactly the epoch's probe rows of admitted
-    * ids (a null-id `new` row admits nothing), bounded by the epoch —
-    * which [[DeltaIndex.write]] writes on the driver, with the snapshot
-    * the probe read. */
+    * the index as its delta write left it. The epoch is bounded by
+    * admission control, so it is classified on the DRIVER with two
+    * Spark jobs: the collect of its [[annMicroRows]] (the distributed
+    * path's quantization), and [[DeltaIndex.probe]] over the index's
+    * prepared (vec_id, v, nv, bucket) scans with [[annProbeScore]]'s
+    * algebra merged on the executors — each index row scored
+    * ([[cosMicro]]) against the broadcast probes of its bucket's
+    * multiprobe neighbourhood, the max kept per (probe_id, b_id), then
+    * per probe id the count of those pairs (`n_cand`, exact when a
+    * vec_id sits in the base and a delta) and the best ([[mergeBest]]):
+    * one collected row per distinct probe id. Those expand to one
+    * verdict per input row with [[annProbeScore]]'s coalesces and
+    * threshold (a null probe_id matches nothing); the driver writes the
+    * admitted rows it holds as the delta. An epoch with no probe reads
+    * no index. */
   private def annEpoch(s: SparkSession, indexPath: String, epochId: Long,
                        data: DataFrame, nPlanes: Int, dim: Int,
                        thresholdMicro: Long, probeBits: Int,
-                       bucketPartitioned: Boolean, occupancyWarnMean: Double)
+                       occupancyWarnMean: Double)
       : (DataFrame, Map[String, Long], DeltaIndex.Snapshot) = {
     import scala.jdk.CollectionConverters._
     IndexLayout.validate(s, indexPath, "nPlanes", nPlanes.toString)
     IndexLayout.validate(s, indexPath, "dim", dim.toString)
-    val (index, read) = DeltaIndex.readSnapshot(s, indexPath, epochId)
-    val (classified, probes) = classifyAnnCore(index, data, nPlanes, dim,
-      thresholdMicro, probeBits, indexKeyPrune = bucketPartitioned)
-    // plan contract per epoch, on the un-executed frame (see
-    // DeltaIndex.requireProbeContract): staged index read + broadcast semi
-    val qe = classified.queryExecution
-    lastEpochPlan.set(qe.sparkPlan)
-    DeltaIndex.requireProbeContract(s, read, s"epoch $epochId", qe.sparkPlan)
-    val rows = classified.collect().toSeq
-    val status = classified.schema.fieldIndex("status")
-    val counts = rows.groupBy(_.getString(status))
-      .map { case (st, rs) => st -> rs.size.toLong }
-    if (occupancyWarnMean > 0 && rows.nonEmpty) {
-      val nCand = classified.schema.fieldIndex("n_cand")
-      val meanCand = rows.map(_.getLong(nCand)).sum.toDouble / rows.size
+    val quantized = annMicroRows(data, "vec_id", hyperplanes(nPlanes, dim))
+    val rows = quantized.collect().toSeq
+    val masks = multiprobeMasks(nPlanes, probeBits)
+    val byBucket = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(3)).flatMap { r =>
+      val p = AnnProbe(r.get(0), if (r.isNullAt(1)) null else r.getSeq[java.lang.Long](1).toArray,
+        if (r.isNullAt(2)) null else r.getLong(2))
+      masks.map(m => (r.getLong(3) ^ m) -> p)
+    }.groupMap(_._1)(_._2).map { case (b, ps) => b -> ps.toArray }
+    val (best, seen) =
+      if (byBucket.isEmpty) (None, None)
+      else {
+        val (merged, read) = DeltaIndex.probe(s, indexPath, epochId, AnnCols, byBucket.keySet,
+            byBucket) { (in, it) =>
+          it.flatMap { r =>
+            val ps = if (r.isNullAt(3)) None else in.get(r.getLong(3))
+            ps.iterator.flatMap { ps =>
+              val bId: java.lang.Long = if (r.isNullAt(0)) null else r.getLong(0)
+              val v = if (r.isNullAt(1)) null else r.getArray(1)
+              val nv: java.lang.Long = if (r.isNullAt(2)) null else r.getLong(2)
+              ps.iterator.map(p => (p.id, bId) -> cosMicro(p.v, p.nv, v, nv))
+            }
+          }
+        } { scored =>
+          val n = math.max(1, math.min(scored.getNumPartitions, s.sparkContext.defaultParallelism))
+          scored.reduceByKey((x, y) => if (x == null || (y != null && y > x)) y else x, n)
+            .map { case ((id, bId), w) => id -> AnnBest(1L, bId, w) }
+            .reduceByKey(mergeBest _, n).collect().toMap
+        }
+        (merged, Some(read))
+      }
+    val verdicts = rows.map { r =>
+      val b = best.flatMap(_.get(r.get(0))) // a null id is never a key
+      val w = b.flatMap(x => Option(x.w)).fold(-2000000L)(_.longValue)
+      Row(r.get(0), b.fold(0L)(_.nCand), b.flatMap(x => Option(x.bId)).fold(-1L)(_.longValue),
+        w, if (w >= thresholdMicro) "matched" else "new")
+    }
+    val counts = verdicts.groupBy(_.getString(4)).map { case (st, rs) => st -> rs.size.toLong }
+    if (occupancyWarnMean > 0 && verdicts.nonEmpty) {
+      val meanCand = verdicts.map(_.getLong(1)).sum.toDouble / verdicts.size
       if (meanCand > occupancyWarnMean) {
         IngestMetrics.recordOccupancyWarn(indexPath)
         Console.err.println(f"[graft] ANN ingest OCCUPANCY WARNING " +
@@ -2131,18 +2142,46 @@ object VectorOps {
           "the recall back.")
       }
     }
-    // distinct: an id arriving k times has k probe rows, and joining
-    // them to k admitted rows would write it k² times
-    val admitted = rows.filter(r => r.getString(status) == "new" && !r.isNullAt(0))
-      .map(r => org.apache.spark.sql.Row(r.get(0))).distinct
-    val delta = probes.join(s.createDataFrame(admitted.asJava,
-        org.apache.spark.sql.types.StructType(Seq(classified.schema("probe_id")))),
-        "probe_id")
-      .select(col("probe_id").as("vec_id"), col("v"), col("nv"),
-        col("bucket0").as("bucket"))
-    val written = DeltaIndex.write(s, indexPath, epochId, delta.schema,
-      if (admitted.isEmpty) Nil else delta.collect().toSeq, Some(read))
-    (s.createDataFrame(rows.asJava, classified.schema), counts, written)
+    // every row of an admitted id; a null-id `new` row admits nothing
+    val admitted = rows.zip(verdicts)
+      .collect { case (r, v) if !r.isNullAt(0) && v.getString(4) == "new" => r }
+    val written = DeltaIndex.write(s, indexPath, epochId, quantized.schema, admitted, seen)
+    val verdictSchema = StructType(data.schema("vec_id").copy(name = "probe_id") +:
+      Seq("n_cand", "best_id", "best_cos_micro").map(StructField(_, LongType, nullable = false)) :+
+      StructField("status", StringType, nullable = false))
+    (s.createDataFrame(verdicts.asJava, verdictSchema), counts, written)
+  }
+
+  /** [[annProbeScore]]'s `cs` on one pair as Spark evaluates it under
+    * its default ANSI mode: −2,000,000 when a norm is 0; else the long
+    * dot product — null on a null array or element (`zip_with` pads the
+    * shorter array with nulls), exact, so it overflows where Spark's
+    * does — over the norms' square roots' product, ×1e6, +0.5, floored. */
+  private def cosMicro(a: Array[java.lang.Long], na: java.lang.Long,
+                       b: org.apache.spark.sql.catalyst.util.ArrayData,
+                       nb: java.lang.Long): java.lang.Long =
+    if ((na != null && na.longValue == 0L) || (nb != null && nb.longValue == 0L)) -2000000L
+    else if (a == null || b == null) null
+    else {
+      var dot = 0L
+      var dotNull = false
+      for (i <- 0 until math.max(a.length, b.numElements))
+        if (i < a.length && a(i) != null && i < b.numElements && !b.isNullAt(i)) {
+          val p = Math.multiplyExact(a(i).longValue, b.getLong(i))
+          if (!dotNull) dot = Math.addExact(dot, p)
+        } else dotNull = true
+      if (dotNull || na == null || nb == null) null
+      else Math.floor(dot.toDouble / (Math.sqrt(na.toDouble) * Math.sqrt(nb.toDouble)) *
+        1000000.0 + 0.5).toLong
+    }
+
+  /** Two partials of a probe id: counts added, the better candidate kept
+    * — score desc nulls last, then b_id asc nulls first. */
+  private def mergeBest(x: AnnBest, y: AnnBest): AnnBest = {
+    def rank(c: AnnBest) = (c.w == null, -Option(c.w).fold(0L)(_.longValue),
+      c.bId != null, Option(c.bId).fold(0L)(_.longValue))
+    val b = if (Ordering[(Boolean, Long, Boolean, Long)].lteq(rank(x), rank(y))) x else y
+    AnnBest(x.nCand + y.nCand, b.bId, b.w)
   }
 
   /** The ANN ingest door ([[IngestDoor]]), the vector mirror of
@@ -2154,13 +2193,12 @@ object VectorOps {
     * non-empty epoch; the classified frame (one row per input vector)
     * is driver-local, so collecting it runs no Spark job.
     *
-    * `bucketPartitioned` = the 100 TB layout END-TO-END from the
-    * streaming door: stage the index with `stageAnnIndex(
-    * bucketPartitioned = true)`, and every epoch's probe pushes its
-    * bounded multiprobe key set as a static partition filter on base
-    * AND deltas ([[DeltaIndex.write]] mirrors the layout, compaction
-    * preserves it), so per-epoch index-read cost tracks the batch's
-    * bucket neighborhood, not the corpus. */
+    * The probe follows the layout the index was staged with: on
+    * `stageAnnIndex(bucketPartitioned = true)` every epoch reads only
+    * the splits of its multiprobe buckets, in base AND deltas
+    * ([[DeltaIndex.write]] mirrors the layout, compaction preserves
+    * it), so per-epoch index-read cost tracks the batch's bucket
+    * neighbourhood, not the corpus. */
   def startAnnIngest(s: SparkSession, storeName: String, topic: String,
                      indexPath: String, maxBatchesPerTrigger: Long,
                      checkpointDir: String,
@@ -2169,12 +2207,11 @@ object VectorOps {
                      thresholdMicro: Long = 950000L,
                      compactEvery: Int = 8,
                      probeBits: Int = 1,
-                     bucketPartitioned: Boolean = false,
                      occupancyWarnMean: Double = 0.0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     IngestDoor.start(s, storeName, topic, indexPath, maxBatchesPerTrigger,
-      checkpointDir, onEpoch, compactEvery)(annDoorEpoch(indexPath, nPlanes,
-      dim, thresholdMicro, probeBits, bucketPartitioned, occupancyWarnMean))
+      checkpointDir, onEpoch, compactEvery, AnnCols)(annDoorEpoch(indexPath, nPlanes,
+      dim, thresholdMicro, probeBits, occupancyWarnMean))
 
   /** The TTL-expiry recovery recipe ([[IngestDoor.resume]]) for the ANN
     * door: after the topic idle-expired and the caller re-appended its
@@ -2189,22 +2226,21 @@ object VectorOps {
                                  thresholdMicro: Long = 950000L,
                                  compactEvery: Int = 8,
                                  probeBits: Int = 1,
-                                 bucketPartitioned: Boolean = false,
                                  occupancyWarnMean: Double = 0.0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     IngestDoor.resume(s, storeName, topic, indexPath, maxBatchesPerTrigger,
-      freshCheckpointDir, onEpoch, compactEvery)(annDoorEpoch(indexPath, nPlanes,
-      dim, thresholdMicro, probeBits, bucketPartitioned, occupancyWarnMean))
+      freshCheckpointDir, onEpoch, compactEvery, AnnCols)(annDoorEpoch(indexPath, nPlanes,
+      dim, thresholdMicro, probeBits, occupancyWarnMean))
 
   /** The door's epoch: [[annEpoch]] over the batch's (vec_id,
-    * embedding), read once into the quantize checkpoint. */
+    * embedding) — it collects the batch in its quantize pass, so the
+    * source is read once. */
   private def annDoorEpoch(indexPath: String, nPlanes: Int, dim: Int,
                            thresholdMicro: Long, probeBits: Int,
-                           bucketPartitioned: Boolean,
                            occupancyWarnMean: Double): IngestDoor.Epoch =
     (sess, epochId, batch) => annEpoch(sess, indexPath, epochId,
       batch.select("vec_id", "embedding"), nPlanes, dim, thresholdMicro,
-      probeBits, bucketPartitioned, occupancyWarnMean)
+      probeBits, occupancyWarnMean)
 
   /** DuckDB oracle for [[qStreamAnnIngest]]: plane constants embedded,
     * probe construction (planted jitter + own-vector halves),

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * size). This tool turns that prose into an artifact: it times the
   * ingest-probe shape — [[graft.engine.VectorOps.stageAnnIndex]] over
   * half the corpus, [[graft.engine.VectorOps.classifyAnnBatch]] over
-  * the other half (the same annProbeScore core the real stream runs) —
+  * the other half (the distributed annProbeScore core the door's
+  * epoch is checked against; both score the same multiprobe
+  * candidates) —
   * at 8 and 16 hyperplanes, on the sf0.1 fixture and the ×10
   * key-shifted ScaleCliff corpus, min over two full passes on every
   * cell (the detector-noise protocol), and writes the four cells plus

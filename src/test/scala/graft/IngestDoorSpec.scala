@@ -183,7 +183,7 @@ class IngestDoorSpec extends SparkSuite {
         maxBatchesPerTrigger = 1, checkpointDir = dir.resolve("ckpt").toString,
         onEpoch = (e, c) => {
           seen.put(e, (verdicts(c).toMap, DeltaIndex.outstanding(spark, idx),
-            DeltaIndex.currentBase(spark, idx), TextOps.lastProbe.get.dirs))
+            DeltaIndex.currentBase(spark, idx), DeltaIndex.lastProbe(idx).get.dirs))
           ()
         }, compactEvery = 2)
       try q.processAllAvailable() finally q.stop()
@@ -208,9 +208,10 @@ class IngestDoorSpec extends SparkSuite {
   /** The ANN door's budget, measured on this fixture: 13 jobs in each
     * plain epoch and 14 in the compacting one while the epoch
     * checkpointed its batch and its classification and counted the
-    * verdicts with a rollup job; 10 and 11 once the classification is
-    * collected once on the driver. */
-  test("ANN door job budget: a 4-epoch stream with one compaction runs at most 10 Spark jobs per plain epoch and 11 in the compaction epoch") {
+    * verdicts with a rollup job; 10 and 11 once the classification was
+    * collected once on the driver; 2 and 3 once the epoch probes the
+    * index's prepared scans. */
+  test("ANN door job budget: a 4-epoch stream with one compaction runs at most 2 Spark jobs per plain epoch and 3 in the compaction epoch") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_door_jobs")
     val idx = dir.resolve("aj_idx").toString
     stageAnn(idx, Seq(0, 1))
@@ -243,14 +244,13 @@ class IngestDoorSpec extends SparkSuite {
       val byEpoch = perBatch(jobs).collect { case ((q, b), n) if q == queryId => b -> n }
       assert(byEpoch.keySet == Set(0L, 1L, 2L, 3L), s"jobs by epoch: $byEpoch")
       info(s"jobs by epoch: ${byEpoch.toSeq.sorted.mkString(", ")}")
-      // the quantize checkpoint, the probe chain's stages and its
-      // collect, and the admitted rows' broadcast join and its collect; the
-      // callback's collect of the driver-local verdicts runs none; the
-      // compaction adds its merge write
-      Seq(0L, 1L, 3L).foreach(e => assert(byEpoch(e) <= 10,
-        s"plain epoch $e ran ${byEpoch(e)} jobs (budget 10): $byEpoch"))
-      assert(byEpoch(2L) <= 11,
-        s"compaction epoch ran ${byEpoch(2L)} jobs (budget 11): $byEpoch")
+      // the quantize collect and the probe job; the callback's collect
+      // of the driver-local verdicts runs none; the compaction adds its
+      // merge write
+      Seq(0L, 1L, 3L).foreach(e => assert(byEpoch(e) <= 2,
+        s"plain epoch $e ran ${byEpoch(e)} jobs (budget 2): $byEpoch"))
+      assert(byEpoch(2L) <= 3,
+        s"compaction epoch ran ${byEpoch(2L)} jobs (budget 3): $byEpoch")
     } finally GraftStoreRegistry.unregister("s_ann_jobs")
   }
 
@@ -266,8 +266,8 @@ class IngestDoorSpec extends SparkSuite {
     val st = new StreamStore(1 << 20, Long.MaxValue / 2)
     batches.foreach(b => st.append("vecs_fold", embSchema, b))
     GraftStoreRegistry.register("s_ann_fold", st)
-    // per epoch: verdicts, outstanding deltas, served base, probe plan
-    val seen = TrieMap.empty[Long, (Map[Long, String], Int, String, String)]
+    // per epoch: verdicts, outstanding deltas, served base, dirs probed
+    val seen = TrieMap.empty[Long, (Map[Long, String], Int, String, Seq[String])]
     val tag = s"ann-callback-${System.nanoTime()}"
     val sc = spark.sparkContext
     try {
@@ -278,7 +278,7 @@ class IngestDoorSpec extends SparkSuite {
             sc.setLocalProperty("graft.spec.tag", tag)
             val v = try annVerdicts(c) finally sc.setLocalProperty("graft.spec.tag", null)
             seen.put(e, (v, DeltaIndex.outstanding(spark, idx),
-              DeltaIndex.currentBase(spark, idx), VectorOps.lastEpochPlan.get))
+              DeltaIndex.currentBase(spark, idx), DeltaIndex.lastProbe(idx).get.dirs))
             ()
           }, nPlanes = 8, dim = 16, compactEvery = 2)
         try q.processAllAvailable() finally q.stop()
@@ -295,14 +295,125 @@ class IngestDoorSpec extends SparkSuite {
         s"the folded admission still classifies: $v3")
       assert(base3 == s"${idx}_v1" && outstanding3 == 1,
         s"epoch 3 runs on the folded base: $outstanding3 deltas, base $base3")
-      assert(plan3.contains("fa_idx_v1"),
-        s"epoch 3's probe must read the folded base:\n${plan3.take(3000)}")
+      assert(plan3.exists(_.endsWith("fa_idx_v1")),
+        s"epoch 3's probe must read the folded base: $plan3")
       assert(IngestMetrics.compactionCounts.toMap.get(idx).contains(1L),
         s"exactly one mid-stream compaction: ${IngestMetrics.compactionCounts}")
       val callbackJobs = jobs.count(p => tag == p.getProperty("graft.spec.tag"))
       assert(callbackJobs == 0,
         s"the callback frame is driver-local, yet collecting it ran $callbackJobs jobs")
     } finally GraftStoreRegistry.unregister("s_ann_fold")
+  }
+
+  test("a stopped door drops its index's prepared scans and probe record, and a restart prepares them again, for the near-dup and the ANN door") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_door_release")
+    val nd = dir.resolve("rl_nd_idx").toString
+    val ann = dir.resolve("rl_ann_idx").toString
+    stage(nd, Seq("e0"))
+    stageAnn(ann, Seq(0))
+    val st = new StreamStore(1 << 20, Long.MaxValue / 2)
+    GraftStoreRegistry.register("s_release", st)
+    /** Whether the index's scans and probe record are gone within 30 s:
+      * the door releases them from a streaming listener, whose events
+      * are delivered asynchronously. */
+    def released(idx: String): Boolean = {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def gone = DeltaIndex.preparedScans(idx).isEmpty && DeltaIndex.lastProbe(idx).isEmpty
+      while (!gone && System.nanoTime() < deadline) Thread.sleep(20)
+      gone
+    }
+    def cycle(idx: String, topic: String, schema: StructType, rows: Seq[Row],
+              start: String => org.apache.spark.sql.streaming.StreamingQuery): Unit =
+      rows.foreach { r =>
+        st.append(topic, schema, Seq(r))
+        // the same checkpoint: the second run resumes after the first
+        val q = start(dir.resolve(s"${topic}_ckpt").toString)
+        try {
+          q.processAllAvailable()
+          assert(DeltaIndex.preparedScans(idx).nonEmpty && DeltaIndex.lastProbe(idx).nonEmpty,
+            s"a running door on $idx holds its scans and probe record")
+        } finally q.stop()
+        assert(q.exception.isEmpty, s"door failed: ${q.exception}")
+        assert(released(idx), s"a stopped door on $idx still holds " +
+          s"${DeltaIndex.preparedScans(idx).map(_.dir)} and ${DeltaIndex.lastProbe(idx)}")
+      }
+    try {
+      cycle(nd, "docs_rl", docSchema, Seq(Row(100L, text("f0")), Row(110L, text("f1"))),
+        ck => TextOps.startNeardupIngest(spark, "s_release", "docs_rl", nd,
+          maxBatchesPerTrigger = 1, checkpointDir = ck, onEpoch = (_, _) => ()))
+      cycle(ann, "vecs_rl", embSchema, Seq(Row(100L, oneHot(3)), Row(110L, oneHot(4))),
+        ck => VectorOps.startAnnIngest(spark, "s_release", "vecs_rl", ann,
+          maxBatchesPerTrigger = 1, checkpointDir = ck, onEpoch = (_, _) => (),
+          nPlanes = 8, dim = 16))
+    } finally GraftStoreRegistry.unregister("s_release")
+  }
+
+  test("ANN door epochs equal classifyAnnBatch row for row over three seeded epochs, flat and bucket-partitioned, with null, repeated and shared ids, null, null-element and zero vectors, exact ties and an evicted epoch") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_diff")
+    val rnd = new scala.util.Random(17)
+    def fresh(): Seq[Any] = Seq.fill(16)((rnd.nextInt(7) - 3).toFloat)
+    val fams = IndexedSeq.fill(6)(fresh())
+    val zero: Seq[Any] = Seq.fill(16)(0.0f)
+    // ids 6 and 7 copy families 0 and 1 and the null id copies family 2,
+    // so their probes tie exactly (the smaller id wins, a null id first)
+    val base = fams.indices.map(i => Row(i.toLong, fams(i))) ++ Seq(Row(6L, fams(0)),
+      Row(7L, fams(1)), Row(null, fams(2)), Row(8L, fams(3).updated(4, null)),
+      Row(9L, null), Row(10L, zero))
+    def vecs(rows: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.toList), embSchema)
+    val flat = dir.resolve("ad_flat_idx").toString
+    val part = dir.resolve("ad_part_idx").toString
+    VectorOps.stageAnnIndex(vecs(base), flat, nPlanes = 8, dim = 16)
+    VectorOps.stageAnnIndex(vecs(base), part, nPlanes = 8, dim = 16, bucketPartitioned = true)
+    // only an exact direction matches, so a near copy is admitted: a
+    // near copy under a base id puts that id in the base and a delta
+    val threshold = 1000000L
+    def near(v: Seq[Any]): Seq[Any] = v.updated(rnd.nextInt(16), (rnd.nextInt(7) - 3).toFloat)
+    val batches = (0 until 3).map { e =>
+      val id = 100L * (e + 1)
+      val f = fresh()
+      Seq(Row(id, fams(rnd.nextInt(6))),
+        Row(id + 1, fams(rnd.nextInt(6)).map(_.asInstanceOf[Float] * 2)),
+        Row(id + 2, f), Row(null, fams(rnd.nextInt(6))), Row(null, f),
+        Row(id + 3, fams(0)), Row(id + 3, fresh()), // one id, two rows
+        Row(id + 4, null), Row(id + 5, fams(1).updated(2, null)), Row(id + 6, zero),
+        Row(e.toLong, near(fams(e))), Row(e.toLong + 3, near(fams(e + 3))))
+    }
+    def sorted(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    def run(idx: String, partitioned: Boolean): Seq[Seq[String]] = {
+      val out = batches.zipWithIndex.map { case (b, e) =>
+        // the reference first: it reads what the epoch reads, the base
+        // and every earlier epoch's delta
+        val reference = VectorOps.classifyAnnBatch(spark, idx, vecs(b), nPlanes = 8, dim = 16,
+          thresholdMicro = threshold, bucketPartitioned = partitioned)
+        val epoch = VectorOps.annIngestEpoch(spark, idx, e.toLong, vecs(b), nPlanes = 8,
+          dim = 16, thresholdMicro = threshold)
+        assert(epoch.schema == reference.schema, s"epoch $e on $idx")
+        val rows = sorted(epoch)
+        assert(rows == sorted(reference), s"epoch $e on $idx")
+        val probe = DeltaIndex.lastProbe(idx).get
+        if (partitioned)
+          assert(probe.kept < probe.total && probe.buckets.size == probe.kept &&
+            probe.buckets.forall(probe.probed),
+            s"epoch $e keeps only splits of probed buckets: $probe")
+        else assert(probe.kept == probe.total && probe.buckets.isEmpty, s"epoch $e: $probe")
+        rows
+      }
+      // the evicted replay of epoch 2 classifies nothing and clears its delta
+      assert(DeltaIndex.outstanding(spark, idx) == 3)
+      assert(VectorOps.annIngestEpoch(spark, idx, 2L, vecs(Nil), nPlanes = 8, dim = 16)
+        .collect().isEmpty)
+      assert(DeltaIndex.outstanding(spark, idx) == 2)
+      out
+    }
+    val flatRows = run(flat, partitioned = false)
+    assert(run(part, partitioned = true) == flatRows, "verdicts must not depend on the layout")
+    val all = flatRows.flatten
+    Seq("matched", "new").foreach(st => assert(all.exists(_.endsWith(s"|$st")), st))
+    val shared = DeltaIndex.readAll(spark, flat).filter("vec_id IN (0, 1, 3, 4)")
+      .groupBy("vec_id").count().filter("count > 1").count()
+    assert(shared > 0, "a base id also sits in a live delta")
   }
 
   test("an epoch of only sub-3-token docs reads no index, admits them and clears a stale delta") {
@@ -463,6 +574,21 @@ class IngestDoorSpec extends SparkSuite {
       assert(q.exception.isEmpty, s"door failed: ${q.exception}")
       assert(seen.toMap == Map(0L -> Map(100L -> "dup_of_existing", 101L -> "unique")))
     } finally GraftStoreRegistry.unregister("s_long")
+    // the ANN door on a long path: its probe's contract is each prepared
+    // scan's root-path match
+    val annIdx = deep.resolve("long_ann_idx").toString
+    stageAnn(annIdx, Seq(0))
+    st.append("vecs_long", embSchema, Seq(Row(200L, oneHot(0)), Row(201L, oneHot(1))))
+    GraftStoreRegistry.register("s_long_ann", st)
+    val annSeen = TrieMap.empty[Long, Map[Long, String]]
+    try {
+      val q = VectorOps.startAnnIngest(spark, "s_long_ann", "vecs_long", annIdx,
+        maxBatchesPerTrigger = 1, checkpointDir = dir.resolve("ann_ckpt").toString,
+        onEpoch = (e, c) => { annSeen.put(e, annVerdicts(c)); () }, nPlanes = 8, dim = 16)
+      try q.processAllAvailable() finally q.stop()
+      assert(q.exception.isEmpty, s"ANN door failed: ${q.exception}")
+      assert(annSeen.toMap == Map(0L -> Map(200L -> "matched", 201L -> "new")))
+    } finally GraftStoreRegistry.unregister("s_long_ann")
   }
 
   test("ANN epoch: a `new` verdict on a null vec_id admits nothing and writes no delta part") {
@@ -587,7 +713,7 @@ class IngestDoorSpec extends SparkSuite {
     val annOut = annVerdicts(VectorOps.annIngestEpoch(spark, ann, 0L,
       spark.createDataFrame(spark.sparkContext.parallelize((1 until 6).map(i =>
         Row(100L + i, oneHot(i))).toList), embSchema),
-      nPlanes = 8, dim = 16, bucketPartitioned = true))
+      nPlanes = 8, dim = 16))
     assert(annOut.values.toSet == Set("new"), s"verdicts: $annOut")
     val annFiles = filesPerPartDir(new java.io.File(s"${ann}_delta/e0"), "bucket")
     assert(annFiles.nonEmpty && annFiles.values.forall(_ == 1), s"files per bucket dir: $annFiles")
@@ -644,7 +770,7 @@ class IngestDoorSpec extends SparkSuite {
     assert(preparedDirs(idx).contains(e0), s"e0 is prepared: ${preparedDirs(idx)}")
     // a replay of epoch 0 probes base + e1, never its own first attempt
     assert(verdicts(TextOps.neardupIngestEpoch(spark, idx, 0L, batch)) == Seq(100L -> "unique"))
-    val probe = TextOps.lastProbe.get
+    val probe = DeltaIndex.lastProbe(idx).get
     assert(!probe.dirs.contains(e0) &&
       probe.dirs == Seq(DeltaIndex.dirKey(idx), DeltaIndex.dirKey(DeltaIndex.dir(idx, 1L))),
       s"the replay's probe: $probe")
@@ -668,7 +794,7 @@ class IngestDoorSpec extends SparkSuite {
       df(Seq(Row(210L, text("g0")), Row(211L, text("f0")), Row(212L, text("h1"))))))
     assert(out.toMap == Map(210L -> "dup_of_existing", 211L -> "dup_of_existing",
       212L -> "unique"), s"the reused e0 is read as rewritten: $out")
-    assert(TextOps.lastProbe.get.dirs.contains(e0))
+    assert(DeltaIndex.lastProbe(idx).get.dirs.contains(e0))
   }
 
   test("prepared scans: a restage drops every prepared scan of the index") {
@@ -697,17 +823,20 @@ class IngestDoorSpec extends SparkSuite {
     (0 until 8).foreach(i => st.append("docs_pb", docSchema, Seq(Row(100L + i, text(s"f$i")))))
     GraftStoreRegistry.register("s_pb", st)
     val held = TrieMap.empty[Long, Int]
+    var scans = Seq.empty[DeltaIndex.PreparedScan]
     try {
       val q = TextOps.startNeardupIngest(spark, "s_pb", "docs_pb", idx,
         maxBatchesPerTrigger = 1, checkpointDir = dir.resolve("ckpt").toString,
         onEpoch = (e, _) => { held.put(e, DeltaIndex.preparedScans(idx).size); () },
         compactEvery = 2)
-      try q.processAllAvailable() finally q.stop()
+      // the last epoch's fold has prepared the next epoch's scans once
+      // the stream is drained; a stopped door drops them
+      try { q.processAllAvailable(); scans = DeltaIndex.preparedScans(idx) }
+      finally q.stop()
       assert(q.exception.isEmpty, s"door failed: ${q.exception}")
     } finally GraftStoreRegistry.unregister("s_pb")
     assert(held.keySet == (0L to 7L).toSet)
     assert(IngestMetrics.compactionCounts.toMap.get(idx).contains(3L))
-    val scans = DeltaIndex.preparedScans(idx)
     assert(held.values.forall(_ <= 3) && scans.size <= 3,
       s"prepared scans per epoch: ${held.toSeq.sorted}, at the end ${scans.size}")
     assert(scans.map(_.dir).toSet == (DeltaIndex.currentBase(spark, idx) +:
@@ -737,7 +866,7 @@ class IngestDoorSpec extends SparkSuite {
       val epoch = verdicts(TextOps.neardupIngestEpoch(spark, idx, e.toLong, batch,
         bandBuckets = 64)).sorted
       assert(epoch == reference, s"epoch $e")
-      val probe = TextOps.lastProbe.get
+      val probe = DeltaIndex.lastProbe(idx).get
       assert(probe.buckets.size == probe.kept && probe.buckets.forall(probe.probed),
         s"epoch $e: every kept split holds a probed bucket: $probe")
       assert(probe.kept < probe.total, s"epoch $e skips a split: $probe")

@@ -178,8 +178,8 @@ class Round20OpsSpec extends SparkSuite {
       checkpointDir = dir.resolve("ckpt").toString,
       onEpoch = (epochId, classified) => {
         val out = classified.collect() // ≤ 4 rows: admission-bounded
-        // plan contract asserted product-side per epoch (annIngestEpoch
-        // requires staged-read + broadcast semi on the un-executed frame)
+        // each prepared scan's contract (a file scan of its dir, no
+        // exchange) is checked once, when the door prepares it
         perEpoch.put(epochId, out.map(r =>
           r.getLong(0) -> (r.getString(4), r.getLong(2))).toMap)
         ()

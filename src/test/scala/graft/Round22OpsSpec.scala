@@ -60,31 +60,28 @@ class Round22OpsSpec extends SparkSuite {
       Seq(Row(101L, oneHot(0)), Row(102L, oneHot(5))),
       Seq(Row(111L, oneHot(5)), Row(112L, oneHot(6))),
       Seq(Row(121L, oneHot(6)), Row(122L, oneHot(7))))
-    def run(idx: String, store: String, ckpt: String,
-            partitioned: Boolean): (Map[Long, (String, Long)], Map[Long, String]) = {
+    def run(idx: String, store: String, ckpt: String)
+        : (Map[Long, (String, Long)], Map[Long, DeltaIndex.EpochProbe]) = {
       val st = new StreamStore(1 << 20, Long.MaxValue / 2)
       batches.foreach(b => st.append("vecs", embSchema, b))
       GraftStoreRegistry.register(store, st)
       val verdicts = TrieMap.empty[Long, (String, Long)]
-      val plans = TrieMap.empty[Long, String]
+      val probes = TrieMap.empty[Long, DeltaIndex.EpochProbe]
       val q = VectorOps.startAnnIngest(spark, store, "vecs", idx,
         maxBatchesPerTrigger = 1,
         checkpointDir = dir.resolve(ckpt).toString,
         onEpoch = (e, c) => {
-          plans.put(e, VectorOps.lastEpochPlan.get)
+          probes.put(e, DeltaIndex.lastProbe(idx).get)
           c.collect().foreach(r =>
             verdicts.put(r.getLong(0), (r.getString(4), r.getLong(2))))
           ()
-        }, nPlanes = 16, dim = 16, compactEvery = 2,
-        bucketPartitioned = partitioned)
+        }, nPlanes = 16, dim = 16, compactEvery = 2)
       try q.processAllAvailable() finally q.stop()
       GraftStoreRegistry.unregister(store)
-      (verdicts.toMap, plans.toMap)
+      (verdicts.toMap, probes.toMap)
     }
-    val (partVerdicts, partPlans) = run(partIdx, "s_pd_p", "pd_ck_p",
-      partitioned = true)
-    val (flatVerdicts, _) = run(flatIdx, "s_pd_f", "pd_ck_f",
-      partitioned = false)
+    val (partVerdicts, partProbes) = run(partIdx, "s_pd_p", "pd_ck_p")
+    val (flatVerdicts, _) = run(flatIdx, "s_pd_f", "pd_ck_f")
     // verdicts are LAYOUT-INDEPENDENT across deltas AND the mid-stream
     // compact (the partition push is an optimization under the exact
     // semi-join, never a semantics change)
@@ -95,13 +92,13 @@ class Round22OpsSpec extends SparkSuite {
       111L -> ("matched", 102L), 112L -> ("new", -1L),
       121L -> ("matched", 112L), 122L -> ("new", -1L)),
       s"classification drifted: $partVerdicts")
-    // the 100 TB claim from the STREAMING door, per epoch, as a plan
-    // property: every epoch's UN-EXECUTED probe plan carries the
-    // bounded multiprobe key set as a static partition filter
-    assert(partPlans.keySet == Set(0L, 1L, 2L), s"epochs: ${partPlans.keySet}")
-    partPlans.foreach { case (e, p) =>
-      assert(hasKeyFilter(p, "pd_part_idx", "bucket"),
-        s"epoch $e probe must be partition-pruned:\n${p.take(3000)}")
+    // the 100 TB claim from the STREAMING door, per epoch, as a probe
+    // property: every epoch's probe keeps only the splits of its
+    // bounded multiprobe bucket set
+    assert(partProbes.keySet == Set(0L, 1L, 2L), s"epochs: ${partProbes.keySet}")
+    partProbes.foreach { case (e, p) =>
+      assert(p.buckets.size == p.kept && p.buckets.forall(p.probed) && p.kept < p.total,
+        s"epoch $e probe must be partition-pruned: $p")
     }
     // deltas mirror the base layout: the live post-compact delta (e2)
     // is bucket-partitioned, so the per-epoch union prunes EVERY scan
@@ -197,7 +194,7 @@ class Round22OpsSpec extends SparkSuite {
         bandBuckets = B)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(epochOut == expected)
-    val probe = TextOps.lastProbe.get
+    val probe = DeltaIndex.lastProbe(partIdx).get
     assert(probe.buckets.nonEmpty && probe.buckets.forall(probe.probed) &&
         probe.kept < probe.total,
       s"epoch probe must be partition-pruned: $probe")
@@ -389,23 +386,20 @@ class Round22OpsSpec extends SparkSuite {
     }
   }
 
-  test("empty replay epoch on the PARTITIONED door: the per-epoch plan contract survives a known-empty batch (no empty-LocalRelation collapse) and the stale delta clears") {
+  test("empty replay epoch on the PARTITIONED door: an epoch with no probe reads no index and still clears the stale delta") {
     val dir = java.nio.file.Files.createTempDirectory("graft_empty_part")
     val idx = dir.resolve("ep_idx").toString
     VectorOps.stageAnnIndex(vecs(Seq(Row(0L, oneHot(0)))), idx,
       nPlanes = 16, dim = 16, bucketPartitioned = true)
     // first attempt admits a vector (delta e0 exists)...
     VectorOps.annIngestEpoch(spark, idx, 0L,
-      vecs(Seq(Row(100L, oneHot(5)))), nPlanes = 16, dim = 16,
-      bucketPartitioned = true).collect()
+      vecs(Seq(Row(100L, oneHot(5)))), nPlanes = 16, dim = 16).collect()
     assert(DeltaIndex.outstanding(spark, idx) == 1)
     // ...then the batch is evicted and the epoch REPLAYS EMPTY — the
-    // stale-delta clear. An empty key set must not become a known-empty
-    // broadcast build (Catalyst would collapse the index scan and the
-    // semi-join, and the epoch's plan-contract requires would kill the
-    // stream on exactly this deliberate empty run).
+    // stale-delta clear: an epoch with no probe reads no index, and
+    // still clears its delta.
     val out = VectorOps.annIngestEpoch(spark, idx, 0L, vecs(Seq.empty),
-      nPlanes = 16, dim = 16, bucketPartitioned = true).collect()
+      nPlanes = 16, dim = 16).collect()
     assert(out.isEmpty)
     assert(DeltaIndex.outstanding(spark, idx) == 0,
       "the empty replay must clear the ghost admission")
